@@ -977,9 +977,11 @@ def main() -> int:
     # the nightly number is the flag step against the PERSISTED index —
     # history is never re-hashed, which is the operator's entire point
     ni_dir = tempfile.mkdtemp(prefix="bench_near_index_")
-    # 256 sig buckets x 8 bands = 2048 partition directories: fine-grained
+    # 256 sig buckets x 8 bands = 2048 bands-table cells: fine-grained
     # enough that a small nightly batch provably skips most of the index
-    # at THIS index size; the knob grows with the corpus at 100 TB.
+    # at THIS index size; the knob grows with the corpus at 100 TB. The
+    # sigs table's id_buckets is derived by the writer from the doc
+    # count (next-pow2 of docs/256) and recorded in the index sidecar.
     NI_SIG_BUCKETS = 256
     try:
         timed(
@@ -990,17 +992,16 @@ def main() -> int:
                 sig_buckets=NI_SIG_BUCKETS,
             ),
         )
-        # the nightly flag step runs the OPERATIONAL stored-index path
-        # (round 14): partitioned selective read + shared one-pass batch
+        with open(f"{ni_dir}/idx/_index_meta.json") as mf:
+            meta["near_index_id_buckets"] = int(json.load(mf)["id_buckets"])
+        # the nightly flag step runs the OPERATIONAL stored-index path:
+        # pruned bands read, late signature attach, shared one-pass batch
         # hashing. The full 250k-doc batch touches essentially every
-        # bucket, so this entry measures throughput, not pruning.
+        # cell, so this entry measures throughput, not pruning.
         ni_flagged = timed(
             "near_index_e2e",
             lambda: DD.near_dedup_against_stored_index(
-                ni_new,
-                f"{ni_dir}/idx",
-                threshold=0.7,
-                sig_buckets=NI_SIG_BUCKETS,
+                ni_new, f"{ni_dir}/idx", threshold=0.7,
             )
             .agg(
                 F.count(F.lit(1)).alias("n"),
@@ -1015,19 +1016,26 @@ def main() -> int:
         meta["near_index_flagged"] = int(ni_flagged["flagged"] or 0)
         assert int(ni_flagged["n"]) == n_ni, "near_index row-count drift"
 
-        # pruning proof (VERDICT r13 item 1): a SMALL nightly batch must
-        # read only the partitions its band keys touch — files-read vs
-        # files-total recorded from the actual pruned scan (file metrics
-        # computed untimed, outside the entry)
+        def _dir_bytes(p):
+            total = 0
+            for root, _, names in os.walk(p):
+                for nm in names:
+                    total += os.path.getsize(os.path.join(root, nm))
+            return total
+
+        meta["near_index_bytes"] = int(_dir_bytes(f"{ni_dir}/idx"))
+
+        # pruning proof: a SMALL nightly batch must read a strict subset
+        # of BOTH tables — the bands table via its (band_id, sig_bucket)
+        # cells, the sigs table via the id-buckets of the batch's
+        # candidate ids. File/byte accounting runs untimed on the
+        # operator's own pruned frames (read_minhash_split_frames).
         ni_small = ni_new.where(F.col("doc_id") % 20000 == 1)
         n_ni_small = ni_small.count()
         ni_sel = timed(
             "near_index_selective",
             lambda: DD.near_dedup_against_stored_index(
-                ni_small,
-                f"{ni_dir}/idx",
-                threshold=0.7,
-                sig_buckets=NI_SIG_BUCKETS,
+                ni_small, f"{ni_dir}/idx", threshold=0.7,
             )
             .agg(
                 F.count(F.lit(1)).alias("n"),
@@ -1036,144 +1044,11 @@ def main() -> int:
             .collect()[0],
         )
         assert int(ni_sel["n"]) == n_ni_small, "near_index_selective drift"
-        pruned_scan, _ = DD.read_minhash_index_for_batch(
-            ni_small, f"{ni_dir}/idx", sig_buckets=NI_SIG_BUCKETS
-        )
-        files_total = len(spark.read.parquet(f"{ni_dir}/idx").inputFiles())
-        files_read = (
-            pruned_scan.select(F.input_file_name().alias("f"))
-            .distinct()
-            .count()
-        )
         meta["near_index_selective_docs"] = int(n_ni_small)
         meta["near_index_selective_flagged"] = int(ni_sel["flagged"] or 0)
-        meta["near_index_files_read"] = int(files_read)
-        meta["near_index_files_total"] = int(files_total)
-        meta["near_index_files_read_pct"] = round(
-            100.0 * files_read / max(files_total, 1), 1
-        )
-
-        # split-sig layout (round 14): signature stored ONCE per doc
-        # (bands table + sigs table, rejoined at read) — measure the
-        # storage saving against the duplicated layout and the full
-        # flag step through the rejoin read path; the flag count is the
-        # in-bench referee (layout must never change semantics)
-        def _dir_bytes(p):
-            total = 0
-            for root, _, names in os.walk(p):
-                for nm in names:
-                    total += os.path.getsize(os.path.join(root, nm))
-            return total
-
-        # id_buckets is AUTO-DERIVED by the writer since round 16
-        # (VERDICT r15 item 1: next-pow2 of docs/256 → 1024 for this
-        # 250k-doc snapshot, recorded below from the _index_meta.json
-        # sidecar) and loaded back by every reader from the sidecar —
-        # the r15 hand-pinned 2048 is gone, together with its
-        # full-batch listing/small-file tax (measured r15 quiet, n=6:
-        # split_build 29.4->36.2 min, split_e2e 29.0->41.7 min vs the
-        # r14 flat layout) and the silent writer/reader mismatch
-        # footgun. The selective-regime pruning proof below now runs
-        # at the derived bucket count.
-        timed(
-            "near_index_split_build",
-            lambda: DD.write_minhash_index(
-                DD.minhash_index_frame(ni_snap, "text"),
-                f"{ni_dir}/idx_split",
-                sig_buckets=NI_SIG_BUCKETS,
-                split_sig=True,
-            ),
-        )
-        with open(f"{ni_dir}/idx_split/_index_meta.json") as mf:
-            meta["near_index_split_id_buckets"] = int(
-                json.load(mf)["id_buckets"]
-            )
-        ni_split = timed(
-            "near_index_split_e2e",
-            lambda: DD.near_dedup_against_stored_index(
-                ni_new,
-                f"{ni_dir}/idx_split",
-                threshold=0.7,
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("is_known_near").cast("long")).alias("flagged"),
-            )
-            .collect()[0],
-        )
-        assert int(ni_split["n"]) == n_ni and int(
-            ni_split["flagged"] or 0
-        ) == int(ni_flagged["flagged"] or 0), "split-sig layout drift"
-        meta["near_index_bytes"] = int(_dir_bytes(f"{ni_dir}/idx"))
-        meta["near_index_split_bytes"] = int(_dir_bytes(f"{ni_dir}/idx_split"))
-        meta["near_index_split_bytes_ratio"] = round(
-            meta["near_index_split_bytes"] / max(meta["near_index_bytes"], 1),
-            3,
-        )
-        # the ratio above is duplicate-structure-dependent: THIS fixture
-        # replicates each text ~50x, so the monolithic layout's
-        # duplicated sigs compress as in-file runs and can even beat the
-        # split layout (and the id-bucketed sigs dirs add per-file
-        # footer overhead that inflates the ratio further at small SF —
-        # the prunability/bytes trade of the derived id_buckets). Real
-        # corpora are dominated by UNIQUE docs, where
-        # the split layout wins by construction (sig bytes scale with
-        # docs, not docs x bands) — measured here on the unreplicated
-        # corpus (untimed; small by construction):
-        uq = docs.select("doc_id", "text")
-        DD.write_minhash_index(
-            DD.minhash_index_frame(uq, "text"),
-            f"{ni_dir}/uq_m", sig_buckets=NI_SIG_BUCKETS,
-        )
-        DD.write_minhash_index(
-            DD.minhash_index_frame(uq, "text"),
-            f"{ni_dir}/uq_s", sig_buckets=NI_SIG_BUCKETS, split_sig=True,
-        )
-        uq_m = _dir_bytes(f"{ni_dir}/uq_m")
-        uq_s = _dir_bytes(f"{ni_dir}/uq_s")
-        meta["near_index_unique_bytes"] = int(uq_m)
-        meta["near_index_unique_split_bytes"] = int(uq_s)
-        meta["near_index_unique_split_bytes_ratio"] = round(
-            uq_s / max(uq_m, 1), 3
-        )
-
-        # ---- split-selective arm (round 15, VERDICT r14 item 1): the
-        # small nightly batch against the SPLIT layout must read a
-        # strict subset of BOTH tables — the bands table via its
-        # (band_id, sig_bucket) partition keys, the sigs table via the
-        # id-buckets derived from the pruned bands. Flag counts are
-        # refereed against the monolithic selective arm (layout must
-        # never change semantics); file/byte accounting runs untimed on
-        # the operator's own pruned frames (read_minhash_split_frames
-        # shares the production cond/pruning helpers).
-        ni_sel_split = timed(
-            "near_index_split_selective",
-            lambda: DD.near_dedup_against_stored_index(
-                ni_small,
-                f"{ni_dir}/idx_split",
-                threshold=0.7,
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("is_known_near").cast("long")).alias("flagged"),
-            )
-            .collect()[0],
-        )
-        assert int(ni_sel_split["n"]) == n_ni_small and int(
-            ni_sel_split["flagged"] or 0
-        ) == int(ni_sel["flagged"] or 0), "split-selective layout drift"
         bands_t, sigs_t = DD.read_minhash_split_frames(
-            ni_small, f"{ni_dir}/idx_split",
-            checkpoint=False,
+            ni_small, f"{ni_dir}/idx", checkpoint=False,
         )
-
-        def _scan_files(frame):
-            return [
-                r["f"][len("file:"):] if r["f"].startswith("file:") else r["f"]
-                for r in frame.select(F.input_file_name().alias("f"))
-                .distinct()
-                .collect()
-            ]
 
         def _local(files):
             return [
@@ -1181,41 +1056,35 @@ def main() -> int:
                 for f in files
             ]
 
-        sb_read = _scan_files(bands_t)
-        ss_read = _scan_files(sigs_t)
-        sb_all = _local(
-            spark.read.parquet(f"{ni_dir}/idx_split/bands").inputFiles()
-        )
-        ss_all = _local(
-            spark.read.parquet(f"{ni_dir}/idx_split/sigs").inputFiles()
-        )
-        meta["near_index_split_bands_files_read"] = len(sb_read)
-        meta["near_index_split_bands_files_total"] = len(sb_all)
-        meta["near_index_split_sigs_files_read"] = len(ss_read)
-        meta["near_index_split_sigs_files_total"] = len(ss_all)
-        meta["near_index_split_bands_bytes_read"] = int(
-            sum(os.path.getsize(f) for f in sb_read)
-        )
-        meta["near_index_split_bands_bytes_total"] = int(
-            sum(os.path.getsize(f) for f in sb_all)
-        )
-        meta["near_index_split_sigs_bytes_read"] = int(
-            sum(os.path.getsize(f) for f in ss_read)
-        )
-        meta["near_index_split_sigs_bytes_total"] = int(
-            sum(os.path.getsize(f) for f in ss_all)
-        )
-        meta["near_index_split_sigs_files_read_pct"] = round(
-            100.0 * len(ss_read) / max(len(ss_all), 1), 1
-        )
-        # the pruning denominator: sigs reads track the batch's TRUE
+        for table, frame in (("bands", bands_t), ("sigs", sigs_t)):
+            read = _local(
+                r["f"]
+                for r in frame.select(F.input_file_name().alias("f"))
+                .distinct()
+                .collect()
+            )
+            every = _local(
+                spark.read.parquet(f"{ni_dir}/idx/{table}").inputFiles()
+            )
+            meta[f"near_index_{table}_files_read"] = len(read)
+            meta[f"near_index_{table}_files_total"] = len(every)
+            meta[f"near_index_{table}_files_read_pct"] = round(
+                100.0 * len(read) / max(len(every), 1), 1
+            )
+            meta[f"near_index_{table}_bytes_read"] = int(
+                sum(os.path.getsize(f) for f in read)
+            )
+            meta[f"near_index_{table}_bytes_total"] = int(
+                sum(os.path.getsize(f) for f in every)
+            )
+        # the sigs pruning denominator: sigs reads track the batch's TRUE
         # candidate ids (pruned bands semi-joined on the batch's exact
         # band keys), and on THIS fixture each batch doc has
         # ~PIPELINE_COPIES/2 snapshot near-dups, so candidates =
         # batch x replication, not batch x 1 — record the count so the
         # files-read pct is interpretable at any replication factor
         # (a unique-doc corpus reads ~batch/id_buckets of the files)
-        meta["near_index_split_candidate_ids"] = int(
+        meta["near_index_candidate_ids"] = int(
             bands_t.join(
                 DD._new_banded_frame(ni_small, "text")
                 .select("band_id", "band_sig")
@@ -1228,15 +1097,15 @@ def main() -> int:
             .count()
         )
 
-        # ---- multi-night operational loop (round 15, VERDICT r14 item
-        # 3): flag -> append -> flag over 3 nights against the persisted
-        # monolithic index, each night ~6.7% of the snapshot (disjoint
-        # odd residues mod 30, so the append takes the dedupe_ids=False
-        # zero-shuffle fast path — the nightly contract). Per-night flag
-        # seconds must stay flat (+-noise) while index bytes grow ~
-        # linearly in appended docs; a final capped compaction records
-        # bucket-cap evictions. Runs LAST against {ni_dir}/idx: every
-        # other idx-based metric above is already recorded.
+        # ---- multi-night operational loop: flag -> append -> flag over
+        # 3 nights against the stored index, each night ~6.7% of the
+        # snapshot (disjoint odd residues mod 30, so the append takes the
+        # dedupe_ids=False fast path that never reads the existing
+        # tables — the nightly contract). Per-night flag seconds must
+        # stay flat (+-noise) while index bytes grow ~linearly in
+        # appended docs; a final capped compaction records bucket-cap
+        # evictions. Runs LAST against {ni_dir}/idx: every other
+        # idx-based metric above is already recorded.
         loop_bytes = [int(meta["near_index_bytes"])]
         loop_docs, loop_flagged, loop_append_s = [], [], []
         for k, resid in enumerate((1, 11, 21), start=1):
@@ -1245,10 +1114,7 @@ def main() -> int:
             nb_flag = timed(
                 f"near_index_night{k}",
                 lambda nb=nb: DD.near_dedup_against_stored_index(
-                    nb,
-                    f"{ni_dir}/idx",
-                    threshold=0.7,
-                    sig_buckets=NI_SIG_BUCKETS,
+                    nb, f"{ni_dir}/idx", threshold=0.7,
                 )
                 .agg(
                     F.count(F.lit(1)).alias("n"),
@@ -1263,7 +1129,6 @@ def main() -> int:
             DD.write_minhash_index(
                 DD.minhash_index_frame(nb, "text"),
                 f"{ni_dir}/idx",
-                sig_buckets=NI_SIG_BUCKETS,
                 mode="append",
                 dedupe_ids=False,
             )
@@ -1284,12 +1149,11 @@ def main() -> int:
         # capped compaction closes the loop: merge (empty delta — the
         # production compaction path, _cap_bucket_members via
         # merge_minhash_index) + a full index REWRITE, timed as one
-        # operational step; evictions = rows the 1024-member bucket cap
-        # removes from the accumulated index
-        full_idx = spark.read.parquet(f"{ni_dir}/idx").select(
-            "id", "band_id", "band_sig", "sig"
-        )
-        n_uncapped = full_idx.count()
+        # operational step; evictions = band rows the 1024-member bucket
+        # cap removes from the accumulated index
+        loop_bands, loop_sigs = DD.open_minhash_index(spark, f"{ni_dir}/idx")
+        full_idx = loop_bands.join(loop_sigs, "id")
+        n_uncapped = loop_bands.count()
         timed(
             "near_index_compact",
             lambda: DD.write_minhash_index(
@@ -1303,7 +1167,9 @@ def main() -> int:
                 sig_buckets=NI_SIG_BUCKETS,
             ),
         )
-        n_capped = spark.read.parquet(f"{ni_dir}/idx_compact").count()
+        n_capped = DD.open_minhash_index(
+            spark, f"{ni_dir}/idx_compact"
+        )[0].count()
         meta["near_index_loop_rows"] = int(n_uncapped)
         meta["near_index_loop_evicted"] = int(n_uncapped - n_capped)
         meta["near_index_compacted_bytes"] = int(

@@ -1355,20 +1355,16 @@ def minhash_index_frame(
     """Persistable MinHash-LSH index of a corpus — the NEAR-dup twin of
     ``dedup_against_snapshot``'s hash manifest: one row per (doc, band),
     ``(id, band_id, band_sig, sig)``, text never stored. Persist it with
-    ``write_minhash_index`` (partitionBy(band_id, sig_bucket)) at
-    snapshot time; each nightly batch then reads ONLY the partitions its
-    own band keys touch (``near_dedup_against_stored_index``) without
-    re-reading or re-hashing a byte of historical text — the
-    FineWeb/Dolma keep-the-index-not-the-corpus discipline, and grow it
-    night over night with ``merge_minhash_index``.
+    ``write_minhash_index`` at snapshot time; each nightly batch then
+    reads ONLY the partitions its own band keys touch
+    (``near_dedup_against_stored_index``) without re-reading or
+    re-hashing a byte of historical text — the FineWeb/Dolma
+    keep-the-index-not-the-corpus discipline — and grow it night over
+    night with ``mode="append"`` or ``merge_minhash_index``.
 
-    The per-doc signature rides every banded row (``bands`` copies of
-    ``num_hashes`` ints ≈ 1-2 KB/doc at the defaults) so the verify
-    stage needs NO second lookup table — at index-read time column
-    pruning drops ``sig`` for the candidate join and reads it only for
-    the matched buckets. Corpora where that duplication is material can
-    store ``select(id, sig).distinct()`` separately and join it back;
-    the consumer only needs the four columns, wherever they come from.
+    The per-doc signature rides every banded row here, so the in-memory
+    consumers need no second lookup table; the stored index keeps it
+    once per doc in a separate sigs table instead.
     """
     rows_per_band = num_hashes // bands
     sigs = _minhash_sig_frame(
@@ -1699,28 +1695,25 @@ def _cap_bucket_members(df: DataFrame, id_col: str, cap: int) -> DataFrame:
 
 def _sig_bucket(band_sig: Column, sig_buckets: int) -> Column:
     """Stable hash bucket of a band signature — the second partition key
-    of a stored MinHash index. One definition shared by the writer and
-    every pruned reader (a mismatch would silently read zero rows)."""
+    of the stored index's bands table. One definition shared by the
+    writer and every pruned reader (a mismatch would silently read zero
+    rows)."""
     return F.pmod(F.xxhash64(band_sig), F.lit(sig_buckets)).cast("int")
 
 
 def _id_bucket(id_col: Column, id_buckets: int) -> Column:
-    """Stable hash bucket of a doc id — the partition key of the split
-    layout's ``sigs`` table. Same one-definition discipline as
+    """Stable hash bucket of a doc id — the partition key of the stored
+    index's ``sigs`` table. Same one-definition discipline as
     ``_sig_bucket``: the selective reader re-derives touched buckets
-    from the PRUNED bands table's ids with this exact function. The
-    writer/reader must-match contract is ENFORCED by the ``_meta``
-    sidecar (round 16): the writer records the bucket counts it used
-    and every reader loads them back, so a mismatch cannot happen on
-    a sidecar-bearing index (legacy indexes keep the documented
-    caller contract)."""
+    from the PRUNED bands table's ids with this exact function, using
+    the bucket count recorded in the index's sidecar."""
     return F.pmod(F.xxhash64(id_col), F.lit(id_buckets)).cast("int")
 
 
-# One JSON sidecar per persisted index (underscore prefix: parquet data
-# readers ignore it, exactly like _SUCCESS). Records the layout knobs a
-# reader MUST match — previously a docstring contract whose violation
-# silently read wrong/empty partitions (VERDICT r15 item 2).
+# One JSON sidecar per stored index (underscore prefix: parquet data
+# readers ignore it, exactly like _SUCCESS). It is the ONLY place a
+# reader, appender or delete learns the layout:
+# {"version": 1, "layout": "split", "sig_buckets": S, "id_buckets": I}.
 _INDEX_META_FILE = "_index_meta.json"
 
 
@@ -1741,45 +1734,70 @@ def _write_index_meta(spark, path: str, meta: dict) -> None:
         out.close()
 
 
-def _read_index_meta(spark, path: str) -> dict | None:
-    """Load the layout sidecar; ``None`` for a legacy index written
-    before round 16 (readers then fall back to their caller-passed
-    bucket counts — the old documented contract)."""
+def _stored_index_meta(spark, path: str) -> dict:
+    """Load and check the sidecar of the stored index at ``path`` — the
+    gate every reader, appender and delete passes first. A missing
+    ``path`` raises ``AnalysisException`` (a mistyped path must fail,
+    never read as an empty index). ``ValueError`` naming the path is
+    raised when the sidecar is absent (the writer deletes an old
+    sidecar before a rebuild and writes the new one last, so a missing
+    sidecar means no complete index), when it names any layout but
+    ``split``, or when one of the two tables is missing."""
     import json as _json
 
+    from pyspark.errors import AnalysisException
+
+    if not _hadoop_dir_exists(spark, path):
+        raise AnalysisException(
+            message=f"[PATH_NOT_FOUND] Path does not exist: {path}."
+        )
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{_INDEX_META_FILE}")
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(jpath):
-        return None
+        raise ValueError(
+            f"no {_INDEX_META_FILE} at {path!r}: not a complete "
+            "write_minhash_index output — rebuild the index"
+        )
     stream = fs.open(jpath)
     try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream, "UTF-8")
-        )
-        lines = []
-        line = reader.readLine()
-        while line is not None:
-            lines.append(line)
-            line = reader.readLine()
+        meta = _json.loads(jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        ))
     finally:
         stream.close()
-    return _json.loads("\n".join(lines))
+    if meta.get("layout") != "split":
+        raise ValueError(
+            f"index at {path!r} has layout {meta.get('layout')!r}, not "
+            "'split' — rebuild it with write_minhash_index"
+        )
+    present = {
+        t: _hadoop_dir_exists(spark, f"{path}/{t}") for t in ("bands", "sigs")
+    }
+    if not all(present.values()):
+        raise ValueError(
+            f"half-written index at {path!r}: "
+            + ", ".join(
+                f"{t} {'present' if ok else 'MISSING'}"
+                for t, ok in present.items()
+            )
+            + " — restore or rebuild the missing table"
+        )
+    return meta
 
 
 def _auto_id_buckets(n_docs: int) -> int:
-    """Derive the split layout's sigs bucket count from the index's doc
-    count (round 16, VERDICT r15 item 1 — previously a hand-pinned
-    per-corpus knob): the next power of two of ``n_docs / 256``,
-    clamped to [8, 65536]. Rationale: a selective night's candidate
-    set is a small multiple of its batch size, and pruning only bites
-    while candidates ≪ buckets, so buckets must TRACK the index (the
-    batch:index ratio is what makes a night selective in the first
-    place); dividing by 256 keeps a small index at a handful of
-    directories (500 oracle docs → 8, no 2048-dir listing tax) while
-    250k bench docs land at 1024; the 65536 cap bounds the directory
-    count at 100 TB, where each bucket holds ~1.5M sigs (~0.5 GB —
-    executor-sized, the same growth rule as ``sig_buckets``)."""
+    """Derive the sigs table's bucket count from the index's doc count:
+    the next power of two of ``n_docs / 256``, clamped to [8, 65536].
+    Rationale: a selective night's candidate set is a small multiple of
+    its batch size, and pruning only bites while candidates ≪ buckets,
+    so buckets must TRACK the index (the batch:index ratio is what
+    makes a night selective in the first place); dividing by 256 keeps
+    a small index at a handful of directories (500 oracle docs → 8, no
+    2048-dir listing tax) while 250k bench docs land at 1024; the 65536
+    cap bounds the directory count at 100 TB, where each bucket holds
+    ~1.5M sigs (~0.5 GB — executor-sized, the same growth rule as
+    ``sig_buckets``)."""
     import math
 
     target = max(8, min(65536, max(1, n_docs) // 256))
@@ -1822,132 +1840,94 @@ def _read_index_or_empty(spark, path: str):
 def write_minhash_index(
     index: DataFrame,
     path: str,
-    sig_buckets: int = 64,
+    sig_buckets: int | None = None,
     mode: str = "overwrite",
-    split_sig: bool | None = None,
-    id_buckets: int | None = None,
     dedupe_ids: bool = True,
 ) -> None:
-    """Materialise a ``minhash_index_frame`` partitioned for selective
-    reads: ``partitionBy(band_id, sig_bucket)`` where ``sig_bucket`` is a
-    stable hash of ``band_sig`` — the near-dedup twin of
-    ``write_ivf_index``'s partition-pruned cell layout. A nightly batch
-    touching a subset of band keys then reads ONLY the touched
-    ``(band_id, sig_bucket)`` directories (PartitionFilters at the file
-    listing, never a full-index scan) via
-    ``read_minhash_index_for_batch`` — the s17 anti-join→selective-read
-    discipline applied to the near family (VERDICT r13 item 1).
+    """Persist a ``minhash_index_frame`` as the stored MinHash-LSH index
+    that ``read_minhash_index_for_batch``,
+    ``near_dedup_against_stored_index`` and ``delete_from_minhash_index``
+    read. There is one layout, in three parts under ``path``:
 
-    ``sig_buckets`` trades pruning granularity against file count:
-    ``bands × sig_buckets`` partition directories total (512 at the
-    defaults), each written as one file by the repartition below (rows
-    of one partition land in one task). At 100 TB the knob grows with
-    the index so a partition stays executor-sized; the reader must pass
-    the SAME value (it re-derives bucket ids with ``_sig_bucket``).
+    - ``bands/``: ``(id, band_id, band_sig)`` partitioned by
+      ``(band_id, sig_bucket)``, ``sig_bucket =
+      pmod(xxhash64(band_sig), sig_buckets)``. A nightly batch reads
+      only the cells its own band keys touch (PartitionFilters at the
+      file listing, never a full-index scan) — the near-dedup twin of
+      ``write_ivf_index``'s partition-pruned cell layout.
+    - ``sigs/``: one ``(id, sig)`` row per doc, partitioned by
+      ``id_bucket = pmod(xxhash64(id), id_buckets)``; a selective night
+      reads only the id-buckets of its candidate ids. Signature bytes
+      scale with docs, not docs × bands.
+    - ``_index_meta.json``: the sidecar ``{version, layout: "split",
+      sig_buckets, id_buckets}``, the only place readers learn the
+      layout.
 
-    ``split_sig=True`` stores the signature ONCE per doc instead of
-    once per (doc, band): a narrow ``{path}/bands`` table
-    ``(id, band_id, band_sig)`` partitioned as above, plus a
-    ``{path}/sigs`` table ``(id, sig)``. Raw signature bytes then scale
-    with docs, not docs×bands; the ON-DISK ratio depends on duplicate
-    structure, because the monolithic layout's duplicated sigs land in
-    the same partition file as their band-mates and compress as runs —
-    measured round 14: **0.28–0.36×** on a unique-doc corpus (the
-    real-web shape; the range is per-file footer overhead across
-    ``sig_buckets`` settings), 1.13× on the bench's 50×-replicated
-    fixture (both in BENCH meta
-    ``near_index[_unique]_split_bytes_ratio``). The reader
-    reconstructs the duplicated view with one narrow equi-join on id,
-    so every against-index consumer is layout-blind; the join is the
-    read-time price of the storage saving — pick per corpus. The
-    reader must pass the same ``split_sig`` (the layouts live in
-    different subdirectories, a mismatch fails fast on the read).
+    ``sig_buckets`` trades pruning granularity against file count
+    (``bands × sig_buckets`` cell directories; a fresh write defaults
+    to 64, and the value grows with the index so a cell stays
+    executor-sized). ``id_buckets`` is always derived from the doc
+    count (``_auto_id_buckets``). A fresh write (anything but an append
+    to an existing index) deletes an old sidecar FIRST and writes the
+    new one LAST, after both tables commit: a crashed rebuild leaves an
+    index every reader refuses, never one an old sidecar misdescribes.
 
-    The sigs table is itself ``partitionBy(id_bucket)`` where
-    ``id_bucket = pmod(xxhash64(id), id_buckets)`` (round 15, VERDICT
-    r14 item 1): a selective night's pruned BANDS rows name the only
-    ids whose signatures the rejoin can ever use, so the reader
-    derives the touched id-buckets from the pruned bands table (a
-    ≤ ``id_buckets``-row collect — the probe-cell discipline applied
-    a second time) and partition-prunes the sigs scan too. Without
-    this, a 25-doc night against a 100 TB split index still scanned
-    O(index) signature bytes through the rejoin.
-
-    ``id_buckets=None`` (default, round 16 — VERDICT r15 item 1)
-    AUTO-DERIVES the bucket count from the index's doc count
-    (``_auto_id_buckets``: next-pow2 of docs/256, clamped [8, 65536]),
-    so a small index is a handful of directories instead of a
-    hand-pinned 2048-dir listing tax, and a 100 TB index grows buckets
-    with the corpus. Every fresh write persists a ``_index_meta.json``
-    SIDECAR recording ``{layout, sig_buckets, id_buckets}``;
-    ``mode="append"`` writers and every reader load the sidecar and
-    use ITS values, so the old silent writer/reader mismatch (wrong
-    ``id_buckets``/``sig_buckets`` reading wrong — possibly empty —
-    partitions) is structurally impossible on a sidecar-bearing
-    index. Legacy indexes without a sidecar keep the documented
-    caller must-match contract (append with ``id_buckets=None`` then
-    falls back to the historical default 64).
-
-    ``mode="append"`` guards re-ingestion (``dedupe_ids=True``,
-    default): each table's delta is anti-joined against THAT table's
-    existing ids (narrow id projections only) before it is written,
-    because an appended night that re-ingests a known id would land a
-    second ``(id, sig)`` row and the read-time equi-join would fan
-    out every matching band row — duplicate verdict pairs, the same
-    one-row-per-pair violation ``merge_minhash_index``'s
-    ``dedupe_ids`` guard exists for, previously unguarded on the
-    on-disk append path (ADVICE r14). Per-table (not a single probe)
-    because the split layout's two writes are two non-atomic commits
-    (review finding r15): if the bands write lands and the sigs write
-    fails, a retried append must re-write ONLY the missing sigs rows —
-    a shared guard keyed on one table would either double-append the
-    bands or leave the sigs hole permanent. With per-table guards any
-    partially-failed append heals on retry without duplicating either
-    table. Generations disjoint by construction pass
-    ``dedupe_ids=False`` to skip the existing-ids scans — the
-    append-only nightly fast path. Appending to a pre-round-15 split
-    layout (sigs written flat, no ``id_bucket`` directories) keeps
-    writing the legacy flat shape — mixing partitioned and flat files
-    in one directory would corrupt the table; the reader detects the
-    layout per-table and skips sigs pruning on legacy indexes.
+    ``mode="append"`` to an existing index adopts the sidecar's bucket
+    counts. An explicit ``sig_buckets`` that differs from the sidecar
+    raises ``ValueError``, as does an index with no sidecar or another
+    layout. ``dedupe_ids=True`` (default) guards re-ingestion: each
+    table's delta is anti-joined against THAT table's existing ids
+    (narrow id projections only), because a re-ingested id would land
+    a second ``(id, sig)`` row and the read-time attach would fan every
+    matching band row out into duplicate verdict pairs. Per-table,
+    because the two table writes are two commits: if the bands write
+    lands and the sigs write fails, a retried append re-writes ONLY
+    the missing sigs rows, without duplicating either table.
+    Generations disjoint by construction pass ``dedupe_ids=False``,
+    which never reads the existing tables — the nightly fast path.
     """
     spark = index.sparkSession
-    # sidecar discipline: an APPEND to a sidecar-bearing index takes its
-    # layout knobs from the sidecar (the caller's values cannot mismatch
-    # the directories already on disk); a FRESH write derives/records
-    # them. Meta absent + append = legacy index: historical defaults.
     appending = mode == "append" and _hadoop_dir_exists(spark, path)
-    stored_meta = _read_index_meta(spark, path) if appending else None
-    if stored_meta is not None:
-        stored_split = stored_meta.get("layout") == "split"
-        if split_sig is not None and split_sig != stored_split:
+    if appending:
+        meta = _stored_index_meta(spark, path)
+        if sig_buckets is not None and sig_buckets != meta["sig_buckets"]:
             raise ValueError(
-                f"layout mismatch at {path!r}: index sidecar says "
-                f"{stored_meta.get('layout')!r}, caller passed "
-                f"split_sig={split_sig} — append with the stored layout"
+                f"sig_buckets={sig_buckets} does not match the index at "
+                f"{path!r}, whose sidecar records {meta['sig_buckets']} — "
+                "append without sig_buckets"
             )
-        split_sig = stored_split
-        sig_buckets = int(stored_meta["sig_buckets"])
-        if stored_meta.get("id_buckets") is not None:
-            id_buckets = int(stored_meta["id_buckets"])
+        sig_buckets, id_buckets = meta["sig_buckets"], meta["id_buckets"]
     else:
-        if split_sig is None:
-            # no sidecar to adopt: historical default (monolithic)
-            split_sig = False
-        if appending and split_sig and id_buckets is None:
-            id_buckets = 64  # legacy (pre-sidecar) split default
+        _fs_delete_dirs(spark, [f"{path}/{_INDEX_META_FILE}"])
+        if sig_buckets is None:
+            sig_buckets = 64
+    # the two table writes are two ACTIONS over the same upstream —
+    # un-checkpointed, a fresh minhash_index_frame lineage would run
+    # its whole signature pass once per table. The lazy
+    # localCheckpoint materialises the index rows once and the second
+    # write reuses them.
+    index = index.localCheckpoint(eager=False)
+    if not appending:
+        # ONE tiny agg over the checkpointed rows (docs = rows / bands —
+        # every shingled doc emits all bands); it also materialises the
+        # checkpoint, so the derive costs one extra narrow scan
+        shape = index.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct("band_id").alias("b"),
+        ).collect()[0]
+        id_buckets = _auto_id_buckets(
+            int(shape["n"]) // max(int(shape["b"] or 0), 1)
+        )
 
-    def _prior(sub_path: str):
-        """Existing table at ``sub_path`` (None before the first
-        append). The file listing snapshots when the read relation
-        resolves — before the append job commits files — so reading
-        the path being appended to is race-free within this call."""
-        if mode != "append" or not _hadoop_dir_exists(spark, sub_path):
-            return None
-        return _read_index_or_empty(spark, sub_path)
-
-    def _without_known(delta: DataFrame, prior: DataFrame | None):
-        if not dedupe_ids or prior is None:
+    def _new_ids(delta: DataFrame, table: str) -> DataFrame:
+        """``delta`` without the ids already in ``path/table``. The
+        table is read only under the guard; its file listing snapshots
+        when the read relation resolves — before this table's write
+        commits — so reading the table being appended to is race-free."""
+        if not (appending and dedupe_ids):
+            return delta
+        prior = _read_index_or_empty(spark, f"{path}/{table}")
+        if prior is None:
             return delta
         return delta.join(prior.select("id").distinct(), "id", "left_anti")
 
@@ -1957,87 +1937,52 @@ def write_minhash_index(
     # min/max column stats both bite; the sigs table sorts by the
     # signature itself for the same locality (identical sigs from
     # duplicate docs become runs). Write-side cost is a per-task sort.
-    if split_sig:
-        # the two table writes are two ACTIONS over the same upstream —
-        # un-checkpointed, a fresh minhash_index_frame lineage would run
-        # its whole signature pass once per table (measured round 15:
-        # the second pass was ~1/3 of the split-build bench entry). The
-        # lazy localCheckpoint materialises the narrow index rows at the
-        # bands write and the sigs write reuses them.
-        index = index.localCheckpoint(eager=False)
-        if id_buckets is None:
-            # fresh write with the auto rule: ONE tiny agg over the
-            # checkpointed narrow rows (docs = rows / bands — every
-            # shingled doc emits all bands). This is also what
-            # materialises the checkpoint, a job the bands write paid
-            # before, so the derive costs one extra narrow scan.
-            shape = index.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct("band_id").alias("b"),
-            ).collect()[0]
-            id_buckets = _auto_id_buckets(
-                int(shape["n"]) // max(int(shape["b"] or 0), 1)
-            )
-        prior_sigs = _prior(f"{path}/sigs")  # one read: guard + layout
-        bands = _without_known(
-            index.select("id", "band_id", "band_sig"),
-            _prior(f"{path}/bands"),
-        ).withColumn(
-            "sig_bucket", _sig_bucket(F.col("band_sig"), sig_buckets)
-        )
-        (
-            bands.repartition("band_id", "sig_bucket")
-            .sortWithinPartitions("band_sig", "id")
-            .write.mode(mode)
-            .partitionBy("band_id", "sig_bucket")
-            .parquet(f"{path}/bands")
-        )
-        # one row per doc; duplicate (id, band) inputs collapse (one doc
-        # has one signature, so any surviving row carries the same sig)
-        sigs = _without_known(
-            index.select("id", "sig").dropDuplicates(["id"]), prior_sigs
-        )
-        legacy_flat = (
-            prior_sigs is not None and "id_bucket" not in prior_sigs.columns
-        )
-        if legacy_flat:
-            (
-                sigs.sortWithinPartitions("sig")
-                .write.mode(mode)
-                .parquet(f"{path}/sigs")
-            )
-        else:
-            (
-                sigs.withColumn(
-                    "id_bucket", _id_bucket(F.col("id"), id_buckets)
-                )
-                .repartition("id_bucket")
-                .sortWithinPartitions("sig", "id")
-                .write.mode(mode)
-                .partitionBy("id_bucket")
-                .parquet(f"{path}/sigs")
-            )
-        if not appending:
-            _write_index_meta(spark, path, {
-                "version": 1, "layout": "split",
-                "sig_buckets": int(sig_buckets),
-                "id_buckets": int(id_buckets),
-            })
-        return
     (
-        _without_known(index, _prior(path))
+        _new_ids(index.select("id", "band_id", "band_sig"), "bands")
         .withColumn("sig_bucket", _sig_bucket(F.col("band_sig"), sig_buckets))
         .repartition("band_id", "sig_bucket")
         .sortWithinPartitions("band_sig", "id")
         .write.mode(mode)
         .partitionBy("band_id", "sig_bucket")
-        .parquet(path)
+        .parquet(f"{path}/bands")
+    )
+    # one row per doc; duplicate (id, band) inputs collapse (one doc
+    # has one signature, so any surviving row carries the same sig)
+    (
+        _new_ids(index.select("id", "sig").dropDuplicates(["id"]), "sigs")
+        .withColumn("id_bucket", _id_bucket(F.col("id"), id_buckets))
+        .repartition("id_bucket")
+        .sortWithinPartitions("sig", "id")
+        .write.mode(mode)
+        .partitionBy("id_bucket")
+        .parquet(f"{path}/sigs")
     )
     if not appending:
         _write_index_meta(spark, path, {
-            "version": 1, "layout": "monolithic",
+            "version": 1, "layout": "split",
             "sig_buckets": int(sig_buckets),
+            "id_buckets": int(id_buckets),
         })
+
+
+def open_minhash_index(spark, index_path: str) -> tuple[DataFrame, DataFrame]:
+    """The stored index at ``index_path``, unpruned: ``(bands, sigs)``
+    with ``bands = (id, band_id, band_sig)`` and ``sigs = (id, sig)``.
+    Pass them to ``near_dup_verdicts_against_index`` /
+    ``near_dedup_against_index`` as ``index`` and ``index_sigs=`` — e.g.
+    as the static side of a stream-static join, where a per-batch
+    pruned read does not apply — or join them on ``id`` for the
+    ``minhash_index_frame`` view. The sidecar is checked first (see
+    ``_stored_index_meta``). An index written empty holds no data
+    files to infer a schema from, so opening it raises Spark's
+    ``AnalysisException``."""
+    _stored_index_meta(spark, index_path)
+    return (
+        spark.read.parquet(f"{index_path}/bands").select(
+            "id", "band_id", "band_sig"
+        ),
+        spark.read.parquet(f"{index_path}/sigs").select("id", "sig"),
+    )
 
 
 def read_minhash_index_for_batch(
@@ -2049,60 +1994,39 @@ def read_minhash_index_for_batch(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    sig_buckets: int = 64,
     checkpoint: bool = True,
-    split_sig: bool = False,
-    id_buckets: int = 64,
 ) -> tuple[DataFrame, DataFrame]:
-    """Selective read of a ``write_minhash_index`` table for one new
-    batch: returns ``(pruned_index, new_banded)`` where ``pruned_index``
-    scans ONLY the ``(band_id, sig_bucket)`` partitions the batch's own
-    band keys touch, and ``new_banded`` is the batch's banded signature
-    frame (pass it to the against-index operators via ``new_banded=`` so
-    the batch is hashed once, not twice). ``split_sig=True`` reads the
-    split layout: the bands table is partition-pruned exactly like the
-    monolithic one, then the touched ID-BUCKETS are derived from the
-    pruned bands rows (``pmod(xxhash64(id), id_buckets)`` — a second
-    bounded collect, ≤ ``id_buckets`` rows) and applied as partition
-    filters on the sigs scan, so BOTH tables' bytes read track the
-    batch, not the index (VERDICT r14 item 1 — previously the sigs
-    side was scanned in full). A legacy sigs table written before
-    round 15 (flat, no ``id_bucket`` directories) is detected by
-    schema and read unpruned; ``id_buckets`` must equal the writer's
-    (same must-match contract as ``sig_buckets``).
+    """Selective read of a ``write_minhash_index`` index for one new
+    batch: returns ``(pruned_index, new_banded)``. ``pruned_index`` is
+    the ``(id, band_id, band_sig, sig)`` view of only the bands cells
+    the batch's own band keys touch, each row's signature attached from
+    the (itself pruned) sigs table; ``new_banded`` is the batch's banded
+    signature frame (pass it to the against-index operators via
+    ``new_banded=`` so the batch is hashed once, not twice). The
+    pruning mechanics are described on ``_read_for_batch_frames``.
 
-    The touched-key collect is bounded by ``bands × sig_buckets`` rows
-    (512 at the defaults) regardless of batch or index size — the
-    ``ivf_topk_indexed`` probe-cell discipline: tiny driver-side
-    literals buy partition pruning at the file listing
-    (``PartitionFilters`` in the scan, plan-pinned in pytest; bench
-    records files-read vs files-total). ``checkpoint=True`` (default —
-    this function's contract is one hash pass) lazily localCheckpoints
-    ``new_banded`` so the collect and the downstream join share one
-    computation; opting out re-derives it per consumer but keeps full
-    lineage fault tolerance.
+    ``checkpoint=True`` (default — this function's contract is one hash
+    pass) lazily localCheckpoints the batch's signatures so the
+    touched-cell collect and the downstream join share one computation;
+    opting out re-derives them per consumer but keeps full lineage
+    fault tolerance.
 
     MinHash parameters must equal the ones the index was built with.
-    The layout knobs (``sig_buckets``/``id_buckets``/``split_sig``) are
-    loaded from the index's ``_index_meta.json`` sidecar when present
-    (round 16 — a sidecar-bearing index is self-describing, the caller
-    CANNOT mismatch it); the parameters are the fallback contract for
-    legacy indexes written before the sidecar existed.
+    Bucket counts come from the index's sidecar, never from the caller:
+    a path without a ``split`` sidecar raises ``ValueError``, a missing
+    path ``AnalysisException``.
     """
-    pruned, sigs, new_sigs, new_banded = _read_for_batch_frames(
+    pruned, sigs, new_sigs, _ = _read_for_batch_frames(
         df, index_path, text_col=text_col, id_col=id_col,
         shingle_size=shingle_size, num_hashes=num_hashes, bands=bands,
-        seed=seed, sig_buckets=sig_buckets, checkpoint=checkpoint,
-        split_sig=split_sig, id_buckets=id_buckets,
+        seed=seed, checkpoint=checkpoint,
     )
-    if sigs is not None:
-        pruned = pruned.join(sigs, "id")
     # public contract: new_banded carries _new_sig (callers pass it to
     # the against-index operators without a separate sigs frame)
     wide_banded = _banded_from_sigs(
         new_sigs, bands, num_hashes // bands, carry_sig=True
     )
-    return pruned, wide_banded
+    return pruned.join(sigs, "id"), wide_banded
 
 
 def _read_for_batch_frames(
@@ -2114,31 +2038,37 @@ def _read_for_batch_frames(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    sig_buckets: int = 64,
     checkpoint: bool = True,
-    split_sig: bool = False,
-    id_buckets: int = 64,
-) -> tuple[DataFrame, DataFrame | None, DataFrame, DataFrame]:
-    """``read_minhash_index_for_batch`` PRE-join: ``(index_frame,
-    index_sigs_or_None, new_sigs, new_banded_narrow)``. For the split
-    layout the pruned bands table stays NARROW (``id, band_id,
-    band_sig``) and the pruned sigs table comes back separately so the
-    against-index verdict path can attach signatures LATE
-    (``index_sigs=`` — round 16, guide §8); monolithic and
-    bootstrap-empty reads return ``index_sigs=None`` with the signature
-    column riding the index frame as before. The BATCH side follows the
-    same rule: ``new_sigs`` is the (lazily checkpointed) one-row-per-doc
-    sig frame — the checkpoint is ~``bands``x smaller than the old
-    banded checkpoint — and ``new_banded_narrow`` is the sig-free band
-    explosion derived from it (a cheap codegen projection), shared by
-    the touched-cell collect and the verdict join."""
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The stored index's two PRUNED scans for one batch, pre-join:
+    ``(bands, sigs, new_sigs, new_banded)``.
+
+    - ``bands`` ``(id, band_id, band_sig)``: only the ``(band_id,
+      sig_bucket)`` cells the batch's band keys touch. The touched-cell
+      collect is bounded by ``bands × sig_buckets`` rows regardless of
+      batch or index size (the ``ivf_topk_indexed`` probe-cell
+      discipline), and its literals become PartitionFilters at the
+      file listing.
+    - ``sigs`` ``(id, sig)``: on a selective night — at most a quarter
+      of the cells touched — only the id-buckets of the batch's
+      candidate ids: the pruned bands rows SEMI-JOINED against the
+      batch's exact ``(band_id, band_sig)`` keys, not every cellmate
+      sharing a hash bucket (which saturates the id-buckets even for a
+      tiny batch). The verdict join matches on exactly those keys, so
+      the semi-join drops no candidate. Past a quarter of the cells
+      nearly every id-bucket is touched anyway, so the derive job is
+      skipped and sigs are read whole.
+    - ``new_sigs``: the batch's one-row-per-doc signature frame, lazily
+      checkpointed when ``checkpoint``; ``new_banded``: its sig-free
+      band explosion, shared by the touched-cell collect and the
+      verdict join.
+
+    The index side stays narrow so the verdict path attaches signatures
+    late (``index_sigs=``). An empty (bootstrap) index comes back as
+    two empty frames typed from the batch, so every doc is flagged
+    novel — the in-memory index contract."""
     spark = df.sparkSession
-    meta = _read_index_meta(spark, index_path)
-    if meta is not None:
-        sig_buckets = int(meta["sig_buckets"])
-        split_sig = meta.get("layout") == "split"
-        if meta.get("id_buckets") is not None:
-            id_buckets = int(meta["id_buckets"])
+    meta = _stored_index_meta(spark, index_path)
     new_sigs = _minhash_sig_frame(
         df, text_col, id_col=id_col, shingle_size=shingle_size,
         num_hashes=num_hashes, seed=seed,
@@ -2148,47 +2078,54 @@ def _read_for_batch_frames(
     new_banded = _banded_from_sigs(
         new_sigs, bands, num_hashes // bands, carry_sig=False
     )
-    cond, n_cells = _touched_partition_cond(new_banded, sig_buckets)
-
-    def _empty_pruned():
-        # bootstrap night: an EMPTY index write leaves only _SUCCESS, so
-        # the read cannot infer a schema. The in-memory path flags every
-        # doc is_known_near=false for an empty index — the stored path
-        # must not narrow that contract (review finding r14). id/sig
-        # types are taken from the batch (known_of is all-null anyway).
-        # Failure routing is TYPED (ADVICE r14 — the old blanket
-        # except silently turned mistyped paths and storage errors into
-        # "no duplicates"): only the empty-write case lands here;
-        # missing paths re-raise AnalysisException inside
-        # _read_index_or_empty, everything else was never caught.
+    bands_t = _read_index_or_empty(spark, f"{index_path}/bands")
+    sigs_t = _read_index_or_empty(spark, f"{index_path}/sigs")
+    if bands_t is None or sigs_t is None:
         from pyspark.sql import types as T
 
         nb = new_banded.schema
-        return spark.createDataFrame(
-            [],
-            T.StructType([
-                T.StructField("id", nb["_new_id"].dataType, True),
-                T.StructField("band_id", nb["band_id"].dataType, True),
-                T.StructField("band_sig", nb["band_sig"].dataType, True),
-                T.StructField(
-                    "sig", new_sigs.schema["sig"].dataType, True
-                ),
-            ]),
+        id_f = T.StructField("id", nb["_new_id"].dataType, True)
+        return (
+            spark.createDataFrame([], T.StructType(
+                [id_f, nb["band_id"], nb["band_sig"]]
+            )),
+            spark.createDataFrame([], T.StructType(
+                [id_f, new_sigs.schema["sig"]]
+            )),
+            new_sigs, new_banded,
         )
+    cells = _touched_cells(new_banded, meta["sig_buckets"])
+    bands_t = bands_t.where(_cells_cond(cells)).select(
+        "id", "band_id", "band_sig"
+    )
+    if len(cells) * 4 <= bands * meta["sig_buckets"]:
+        # the lazy localCheckpoint shares the pruned bands scan between
+        # this collect and the caller's join
+        if checkpoint:
+            bands_t = bands_t.localCheckpoint(eager=False)
+        keys = new_banded.select("band_id", "band_sig").distinct()
+        touched = sorted(
+            r["b"]
+            for r in bands_t.join(keys, ["band_id", "band_sig"], "left_semi")
+            .select(_id_bucket(F.col("id"), meta["id_buckets"]).alias("b"))
+            .distinct()
+            .collect()
+        )
+        sigs_t = sigs_t.where(
+            F.col("id_bucket").isin(touched) if touched else F.lit(False)
+        )
+    return bands_t, sigs_t.select("id", "sig"), new_sigs, new_banded
 
-    if split_sig:
-        frames = _pruned_split_frames(
-            spark, index_path, cond, new_banded=new_banded,
-            selective=_sigs_prune_selective(n_cells, bands, sig_buckets),
-            checkpoint=checkpoint, id_buckets=id_buckets,
-        )
-        if frames is None:
-            return _empty_pruned(), None, new_sigs, new_banded
-        bands_t, sigs_t = frames
-        return bands_t, sigs_t, new_sigs, new_banded
-    full_t = _read_index_or_empty(spark, index_path)
-    pruned = _empty_pruned() if full_t is None else full_t.where(cond)
-    return pruned, None, new_sigs, new_banded
+
+def read_minhash_split_frames(
+    df: DataFrame, index_path: str, **kwargs
+) -> tuple[DataFrame, DataFrame]:
+    """The two pruned scans ``read_minhash_index_for_batch`` joins,
+    pre-join: ``(bands, sigs)``, taking the same parameters. For
+    counting files and bytes read per table — ``input_file_name`` on
+    the joined frame only surfaces the streamed side."""
+    bands_t, sigs_t, _, _ = _read_for_batch_frames(df, index_path, **kwargs)
+    return bands_t, sigs_t
 
 
 def _touched_cells(
@@ -2197,7 +2134,7 @@ def _touched_cells(
     """The distinct (band_id, sig_bucket) cells one batch's banded
     frame touches — the bounded collect (≤ bands × sig_buckets rows
     regardless of batch or index size) behind every selective
-    stored-index operation (read, and round 15's targeted delete)."""
+    stored-index operation (read and targeted delete)."""
     return sorted(
         (r["band_id"], r["sig_bucket"])
         for r in new_banded.select(
@@ -2226,149 +2163,6 @@ def _cells_cond(cells: list[tuple[int, int]]) -> Column:
     return cond
 
 
-def _touched_partition_cond(
-    new_banded: DataFrame, sig_buckets: int
-) -> tuple[Column, int]:
-    """Partition-filter predicate for the (band_id, sig_bucket) keys
-    one batch's banded frame touches, plus the touched-cell count —
-    the cell count drives the split layout's sigs-pruning regime
-    decision downstream."""
-    cells = _touched_cells(new_banded, sig_buckets)
-    return _cells_cond(cells), len(cells)
-
-
-def _sigs_prune_selective(n_cells: int, bands: int, sig_buckets: int) -> bool:
-    """ONE definition of the split layout's sigs-pruning regime
-    decision, shared by the operator read path and its measurement
-    twin (a threshold tuned in one but not the other would make the
-    bench measure a different regime than production runs — review
-    finding r15): prune only when the batch touches at most a quarter
-    of the ``bands × sig_buckets`` cells; past that, nearly every
-    id-bucket would be touched anyway and the derive job is wasted."""
-    return n_cells * 4 <= bands * sig_buckets
-
-
-def read_minhash_split_frames(
-    df: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_size: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
-    sig_buckets: int = 64,
-    checkpoint: bool = True,
-    id_buckets: int = 64,
-) -> tuple[DataFrame | None, DataFrame | None]:
-    """The split layout's two PRUNED scans for one batch, PRE-join —
-    the measurement twin of ``read_minhash_index_for_batch(split_sig=
-    True)``, sharing its cond derivation and pruning helpers, so the
-    bench / tests can count files and bytes per table on exactly the
-    frames the operator joins (``input_file_name`` on the joined frame
-    only surfaces the streamed side — the broadcast sigs build side is
-    invisible there). ``(None, None)`` for a bootstrap-night empty
-    write. Layout knobs load from the ``_index_meta.json`` sidecar
-    when present (parameters are the legacy-index fallback)."""
-    meta = _read_index_meta(df.sparkSession, index_path)
-    if meta is not None:
-        sig_buckets = int(meta["sig_buckets"])
-        if meta.get("id_buckets") is not None:
-            id_buckets = int(meta["id_buckets"])
-    new_banded = _new_banded_frame(
-        df, text_col, id_col=id_col, shingle_size=shingle_size,
-        num_hashes=num_hashes, bands=bands, seed=seed,
-    )
-    if checkpoint:
-        new_banded = new_banded.localCheckpoint(eager=False)
-    cond, n_cells = _touched_partition_cond(new_banded, sig_buckets)
-    frames = _pruned_split_frames(
-        df.sparkSession, index_path, cond, new_banded=new_banded,
-        selective=_sigs_prune_selective(n_cells, bands, sig_buckets),
-        checkpoint=checkpoint, id_buckets=id_buckets,
-    )
-    return (None, None) if frames is None else frames
-
-
-def _pruned_split_frames(
-    spark,
-    index_path: str,
-    cond: Column,
-    new_banded: DataFrame | None = None,
-    selective: bool = False,
-    checkpoint: bool = True,
-    id_buckets: int = 64,
-) -> tuple[DataFrame, DataFrame] | None:
-    """The split layout's two PRUNED scans, pre-join: the bands table
-    filtered to the batch's touched ``(band_id, sig_bucket)`` keys
-    (``cond``), and — on selective nights — the sigs table filtered to
-    the id-buckets of the batch's true CANDIDATE ids. Returned
-    separately so the bench and tests can measure each table's
-    files/bytes read on exactly the frames the operator joins
-    (``input_file_name`` on the joined frame only surfaces the
-    streamed side — the broadcast sigs build side would be invisible).
-    ``None`` means a bootstrap-night empty write (both table dirs
-    present, no data files).
-
-    Sigs pruning derives the touched id-buckets from the pruned bands
-    SEMI-JOINED against the batch's exact distinct ``(band_id,
-    band_sig)`` keys — not from every row in the touched partitions.
-    The downstream verdict join matches on exactly those keys, so the
-    semi-join is semantically a no-op, but it shrinks the id set from
-    'every cellmate sharing a hash bucket' (which saturates all
-    id-buckets even for a tiny batch) to the candidate ids alone —
-    without it the second pruning pass never bites (measured round
-    15: a 3-doc night read 64/64 sigs files before, a strict subset
-    after). AQE picks broadcast for the key side at runtime when the
-    batch is small. ``selective`` gates the derive job: when the batch
-    already touches more than a quarter of the ``bands × sig_buckets``
-    cells, nearly every id-bucket would be touched anyway, so the
-    full-batch path (e.g. the nightly e2e flag over the whole crawl)
-    skips the extra job and reads sigs whole — pruning is for the
-    selective regime it can actually help."""
-    # a half-written split layout (one table present, the other
-    # missing) must fail loudly, not flag every doc as novel
-    bands_dir = _hadoop_dir_exists(spark, f"{index_path}/bands")
-    sigs_dir = _hadoop_dir_exists(spark, f"{index_path}/sigs")
-    if bands_dir != sigs_dir:
-        raise ValueError(
-            f"half-written split index at {index_path!r}: bands "
-            f"{'present' if bands_dir else 'MISSING'}, sigs "
-            f"{'present' if sigs_dir else 'MISSING'} — restore or "
-            "rebuild the missing table before flagging against it"
-        )
-    # both-missing raises PATH_NOT_FOUND here (mistyped index_path)
-    bands_t = _read_index_or_empty(spark, f"{index_path}/bands")
-    sigs_t = _read_index_or_empty(spark, f"{index_path}/sigs")
-    if bands_t is None or sigs_t is None:
-        return None
-    bands_t = bands_t.where(cond)
-    if "id_bucket" in sigs_t.columns and selective and new_banded is not None:
-        # second probe-cell pass (VERDICT r14 item 1): candidate ids =
-        # pruned bands rows whose (band_id, band_sig) the batch really
-        # carries; their ≤ id_buckets distinct buckets become partition
-        # filters on the sigs scan. The lazy localCheckpoint shares the
-        # pruned bands scan between this collect and the caller's join.
-        if checkpoint:
-            bands_t = bands_t.localCheckpoint(eager=False)
-        keys = new_banded.select("band_id", "band_sig").distinct()
-        tb = sorted(
-            r["b"]
-            for r in bands_t.join(keys, ["band_id", "band_sig"], "left_semi")
-            .select(_id_bucket(F.col("id"), id_buckets).alias("b"))
-            .distinct()
-            .collect()
-        )
-        sigs_t = sigs_t.where(
-            F.col("id_bucket").isin(tb) if tb else F.lit(False)
-        ).drop("id_bucket")
-    elif "id_bucket" in sigs_t.columns:
-        sigs_t = sigs_t.drop("id_bucket")
-    # legacy flat sigs table (pre-round-15): no partition column to
-    # prune on — read unpruned, semantics unchanged
-    return bands_t, sigs_t
-
-
 def near_dedup_against_stored_index(
     df: DataFrame,
     index_path: str,
@@ -2380,32 +2174,25 @@ def near_dedup_against_stored_index(
     seed: int = 42,
     threshold: float = 0.7,
     max_bucket_size: int | None = 1024,
-    sig_buckets: int = 64,
     checkpoint: bool = True,
-    split_sig: bool = False,
-    id_buckets: int = 64,
 ) -> DataFrame:
-    """``near_dedup_against_index`` against a PERSISTED
-    ``write_minhash_index`` table, reading only the partitions the new
-    batch's band keys touch — the operational nightly entry point: a
-    batch touching 1% of band keys reads ~1% of the index instead of
-    shuffling all of it (VERDICT r13 item 1). Same output contract as
-    ``near_dedup_against_index``; see ``read_minhash_index_for_batch``
-    for the pruning mechanics and parameter-matching requirements
-    (``split_sig`` and ``id_buckets`` must match the writer's layout).
+    """``near_dedup_against_index`` against a ``write_minhash_index``
+    index, reading only the cells the new batch's band keys touch — the
+    operational nightly entry point: a batch touching 1% of band keys
+    reads ~1% of the index instead of shuffling all of it. Same output
+    contract as ``near_dedup_against_index``; the read, its pruning and
+    its sidecar checks are ``read_minhash_index_for_batch``'s.
     """
     pruned, sigs, new_sigs, _ = _read_for_batch_frames(
         df, index_path, text_col=text_col, id_col=id_col,
         shingle_size=shingle_size, num_hashes=num_hashes, bands=bands,
-        seed=seed, sig_buckets=sig_buckets, checkpoint=checkpoint,
-        split_sig=split_sig, id_buckets=id_buckets,
+        seed=seed, checkpoint=checkpoint,
     )
     # the INDEX side stays narrow through the cap window and the band
-    # join (round 16, guide §8): the split layout's pruned sigs table
-    # attaches late inside the verdict path (index_sigs=). The BATCH
-    # side deliberately keeps _new_sig riding its banded rows: a
-    # late-attach of the batch sigs was measured 1.8-2.1x WORSE on the
-    # full-batch monolithic arm (e2e min 28.0 -> 51.2 s, every run
+    # join (guide §8): the pruned sigs table attaches late inside the
+    # verdict path (index_sigs=). The BATCH side deliberately keeps
+    # _new_sig riding its banded rows: a late-attach of the batch sigs
+    # was measured 1.8-2.1x WORSE (e2e min 28.0 -> 51.2 s, every run
     # worse) — the attach join re-shuffles the already-wide candidate
     # pair stream by _new_id instead of broadcasting, exactly the
     # guide-§8 re-attach trap. The wide banded view is derived from
@@ -2534,24 +2321,19 @@ def delete_from_minhash_index(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    sig_buckets: int = 64,
-    split_sig: bool = False,
-    id_buckets: int = 64,
 ) -> None:
-    """TARGETED delete from a persisted ``write_minhash_index`` table —
-    the missing maintenance verb beside append/merge/compact (round
-    15): remove the given docs' rows by REWRITING ONLY THE PARTITIONS
-    THEY TOUCH, never the whole index. The probe-cell discipline a
-    third time: the doomed docs' band keys are recomputed from their
-    text (same MinHash/bucketing params as the build — the must-match
-    contract), the ≤ ``bands × sig_buckets`` touched cells become both
-    the read's partition filters and the write's dynamic-overwrite
-    scope, and cells left without survivors are removed through the FS
-    API (a bounded list). For the split layout the sigs table is
-    handled the same way on the ≤ ``id_buckets`` id-buckets derived
-    directly from the doomed ids; a legacy flat sigs table (no
-    ``id_bucket`` directories) falls back to a full single-table
-    rewrite.
+    """TARGETED delete from a ``write_minhash_index`` index — the
+    maintenance verb beside append/merge/compact: remove the given
+    docs' rows by REWRITING ONLY THE PARTITIONS THEY TOUCH, never the
+    whole index. The doomed docs' band keys are recomputed from their
+    text (same MinHash parameters as the build), the ≤ ``bands ×
+    sig_buckets`` touched cells become both the bands read's partition
+    filters and the write's dynamic-overwrite scope, and cells left
+    without survivors are removed through the FS API (a bounded list).
+    The sigs table is handled the same way on the ≤ ``id_buckets``
+    id-buckets derived directly from the doomed ids. Both bucket counts
+    come from the index's sidecar; a path without a ``split`` sidecar
+    raises ``ValueError``.
 
     Requirements and caveats, stated plainly:
 
@@ -2566,91 +2348,37 @@ def delete_from_minhash_index(
       appends/deletes/compactions on one index path.
     - A re-append of a deleted id afterwards works: the append guard
       anti-joins against CURRENT stored ids.
-
-    Layout knobs (``sig_buckets``/``id_buckets``/``split_sig``) load
-    from the index's ``_index_meta.json`` sidecar when present; the
-    parameters are the legacy-index fallback.
     """
     spark = df.sparkSession
-    meta = _read_index_meta(spark, index_path)
-    if meta is not None:
-        sig_buckets = int(meta["sig_buckets"])
-        split_sig = meta.get("layout") == "split"
-        if meta.get("id_buckets") is not None:
-            id_buckets = int(meta["id_buckets"])
+    meta = _stored_index_meta(spark, index_path)
     banded = _new_banded_frame(
         df, text_col, id_col=id_col, shingle_size=shingle_size,
         num_hashes=num_hashes, bands=bands, seed=seed,
     ).localCheckpoint(eager=False)
-    cells = _touched_cells(banded, sig_buckets)
-    doomed = banded.select(F.col("_new_id").alias("id")).distinct()
-    if split_sig:
-        bands_dir = _hadoop_dir_exists(spark, f"{index_path}/bands")
-        sigs_dir = _hadoop_dir_exists(spark, f"{index_path}/sigs")
-        if bands_dir != sigs_dir:
-            raise ValueError(
-                f"half-written split index at {index_path!r}: bands "
-                f"{'present' if bands_dir else 'MISSING'}, sigs "
-                f"{'present' if sigs_dir else 'MISSING'} — restore or "
-                "rebuild the missing table before deleting from it"
-            )
-        if cells:
-            _delete_rows_in_partitions(
-                spark, f"{index_path}/bands", _cells_cond(cells),
-                [
-                    (
-                        (b, sb),
-                        f"{index_path}/bands/band_id={b}/sig_bucket={sb}",
-                    )
-                    for b, sb in cells
-                ],
-                doomed, ["band_id", "sig_bucket"], ["band_sig", "id"],
-            )
-        sigs_t = _read_index_or_empty(spark, f"{index_path}/sigs")
-        if sigs_t is None:
-            return
-        if "id_bucket" in sigs_t.columns:
-            buckets = sorted(
-                r["b"]
-                for r in doomed.select(
-                    _id_bucket(F.col("id"), id_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-            if buckets:
-                _delete_rows_in_partitions(
-                    spark, f"{index_path}/sigs",
-                    F.col("id_bucket").isin(buckets),
-                    [
-                        ((bk,), f"{index_path}/sigs/id_bucket={bk}")
-                        for bk in buckets
-                    ],
-                    doomed, ["id_bucket"], ["sig", "id"],
-                )
-        else:
-            # legacy flat sigs: no partition column to target — full
-            # single-table rewrite (eager checkpoint cuts lineage to
-            # the files being overwritten)
-            survivors = (
-                sigs_t.join(doomed, "id", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            (
-                survivors.sortWithinPartitions("sig")
-                .write.mode("overwrite")
-                .parquet(f"{index_path}/sigs")
-            )
-        return
+    cells = _touched_cells(banded, meta["sig_buckets"])
     if not cells:
-        return
+        return  # no shingled doc: nothing was ever indexed
+    doomed = banded.select(F.col("_new_id").alias("id")).distinct()
     _delete_rows_in_partitions(
-        spark, index_path, _cells_cond(cells),
+        spark, f"{index_path}/bands", _cells_cond(cells),
         [
-            ((b, sb), f"{index_path}/band_id={b}/sig_bucket={sb}")
+            ((b, sb), f"{index_path}/bands/band_id={b}/sig_bucket={sb}")
             for b, sb in cells
         ],
         doomed, ["band_id", "sig_bucket"], ["band_sig", "id"],
+    )
+    buckets = sorted(
+        r["b"]
+        for r in doomed.select(
+            _id_bucket(F.col("id"), meta["id_buckets"]).alias("b")
+        )
+        .distinct()
+        .collect()
+    )
+    _delete_rows_in_partitions(
+        spark, f"{index_path}/sigs", F.col("id_bucket").isin(buckets),
+        [((bk,), f"{index_path}/sigs/id_bucket={bk}") for bk in buckets],
+        doomed, ["id_bucket"], ["sig", "id"],
     )
 
 

@@ -4850,11 +4850,13 @@ def p41b_main_content_smooth(spark, sf_dir):
            CAST(length(text_decoded) AS bigint) AS n_chars
     FROM e
     """,
-    doc="HTML character-reference decoding (functions/structural.py::"
-        "decode_html_entities; VERDICT r10 missing-item 1 — the "
-        "reference's strip_html at deep_clean_and_pii.py:92-116 deletes "
-        "tags but leaves '&amp;'/'&#233;' literals that poison every "
-        "downstream metric): named + decimal + hex references decoded in "
+    doc="HTML character-reference decoding (functions/structural_vec.py"
+        "::decode_entities_str, the Arrow-batched mirror of "
+        "functions/structural.py::decode_html_entities; VERDICT r10 "
+        "missing-item 1 — the reference's strip_html at "
+        "deep_clean_and_pii.py:92-116 deletes tags but leaves "
+        "'&amp;'/'&#233;' literals that poison every downstream "
+        "metric): named + decimal + hex references decoded in "
         "ONE forward pass with HTML5 tokenizer semantics — decoded "
         "output never rescanned, so double-escaped text un-escapes "
         "exactly one level ('&amp;amp;' → '&amp;', '&amp;#65;' → "
@@ -4866,7 +4868,8 @@ def p41b_main_content_smooth(spark, sf_dir):
         "classes, a query-string '&q=1' that must survive beside a "
         "decoding '&#38;', a no-entity arm (changed=false), and astral "
         "emoji. Referee recomputes expected text closed-form via "
-        "chr(). Pure Catalyst split/HOF, zero shuffle, inline() barrier",
+        "chr(). One Arrow pandas UDF (a C-engine re.sub per row), zero "
+        "shuffle, inline() barrier",
 )
 def p42_html_entities(spark, sf_dir):
     from llm_pretraining_data_pipeline_spark.functions.structural_vec import (
@@ -7829,16 +7832,17 @@ def ev_stream_near_index(spark, sf_dir):
     doc="STREAMING incremental NEAR dedup against the PERSISTED "
         "partitioned LSH index (19th streaming query, round 14): the "
         "operational capture-time composition — last night's on-disk "
-        "write_minhash_index table (partitionBy(band_id, sig_bucket)) "
-        "is the stream-static side, read straight from parquet, so "
-        "documents are flagged as near-duplicates of the historical "
-        "corpus the moment they arrive, with NO in-memory index "
-        "rebuild. Shares ev_stream_near_index's fixture and referee "
-        "(the identical distinct thresholded pair set proves the "
-        "persisted layout — extra sig_bucket partition column and all "
-        "— feeds the same stateless witness join); "
-        "operators/dedup.py::near_dup_verdicts_against_index is still "
-        "the single implementation, append mode, stateOperators == []",
+        "write_minhash_index index is the stream-static side, opened "
+        "through operators/dedup.py::open_minhash_index (sidecar "
+        "checked; bands table as the index, sigs table attached late "
+        "via index_sigs=), so documents are flagged as near-duplicates "
+        "of the historical corpus the moment they arrive, with NO "
+        "in-memory index rebuild. Shares ev_stream_near_index's "
+        "fixture and referee (the identical distinct thresholded pair "
+        "set proves the stored layout feeds the same stateless witness "
+        "join); operators/dedup.py::near_dup_verdicts_against_index is "
+        "still the single implementation, append mode, "
+        "stateOperators == []",
 )
 def ev_stream_near_stored(spark, sf_dir):
     from llm_pretraining_data_pipeline_spark.streaming.events import (
@@ -7846,11 +7850,11 @@ def ev_stream_near_stored(spark, sf_dir):
     )
 
     path, newb = _stage_near_index(spark, sf_dir)
+    bands_t, sigs_t = dedup_ops.open_minhash_index(spark, path)
     drained = run_near_index_stream_once(
-        spark, newb, spark.read.parquet(path),
-        stage_key=f"near_stored:{sf_dir}",
+        spark, newb, bands_t, stage_key=f"near_stored:{sf_dir}",
         text_col="text", id_col="doc_id", shingle_size=3, num_hashes=32,
-        bands=8, seed=42, threshold=0.5,
+        bands=8, seed=42, threshold=0.5, index_sigs=sigs_t,
     )
     return drained.select("new_id", "known_of", "known_est")
 
@@ -7863,10 +7867,10 @@ def _mhidx_staging_path(sf_dir: str) -> str:
 
 
 def _stage_near_index(spark, sf_dir):
-    """Build d23's snapshot LSH index and persist it partitioned —
-    shared by d24_pruned_index (batch pruned read) and
-    ev_stream_near_stored (stream-static side); same params, same
-    staging path, overwrite mode, so repeated invocations in one
+    """Build d23's snapshot LSH index and store it with
+    ``write_minhash_index`` — shared by d24_pruned_index (batch pruned
+    read) and ev_stream_near_stored (stream-static side); same params,
+    same staging path, overwrite mode, so repeated invocations in one
     process reuse the artifact."""
     snap, newb = _near_index_frames(spark, sf_dir)
     idx = dedup_ops.minhash_index_frame(
@@ -7878,11 +7882,11 @@ def _stage_near_index(spark, sf_dir):
     return path, newb
 
 
-# shared referee for the stored-index family: the monolithic pruned
-# read (d24), the split-sig layout (d26) and the split SELECTIVE
-# regime (d27) are layout/regime choices over the SAME verdict
-# semantics — every one must hash-match the full-index computation,
-# parameterized only by how the nightly batch is thinned.
+# shared referee for the stored-index family: the pruned read (d24),
+# the SELECTIVE sigs-pruning regime (d27) and the read after a
+# targeted delete (d28) are regimes over the SAME verdict semantics —
+# every one must hash-match the full-index computation, parameterized
+# only by how the nightly batch and the snapshot are thinned.
 def _d24_sql(
     batch_mod: int,
     batch_limit: int | None = None,
@@ -7967,22 +7971,24 @@ _D24_SQL = _d24_sql(8)
 @register(
     "d24_pruned_index",
     _D24_SQL,
-    doc="incremental NEAR dedup against a PERSISTED PARTITIONED LSH "
-        "index with a provably pruned read (operators/dedup.py::"
-        "write_minhash_index + near_dedup_against_stored_index, round "
-        "14): the snapshot index is WRITTEN partitionBy(band_id, "
-        "sig_bucket) and the nightly flag step reads ONLY the "
-        "partitions its own band keys touch — a bounded "
-        "(bands*sig_buckets <= 128 here) touched-key collect buys "
-        "PartitionFilters at the file listing, the s17 anti-join -> "
-        "selective-read discipline applied to the near family "
-        "(VERDICT r13 item 1). The oracle computes the FULL-index "
-        "verdicts, so hash equality IS the pruned-read == full-read "
-        "referee; the strict-file-subset property is plan-pinned in "
-        "pytest and measured (files-read vs files-total) in the bench "
-        "meta. Fixture: d23's snapshot (even ids) with the nightly "
-        "batch thinned to doc_id%8==1 (arms %10==1 copy / %10==3 "
-        "append / rest own text); threshold 0.5, uncapped",
+    doc="incremental NEAR dedup against a STORED LSH index with a "
+        "provably pruned read (operators/dedup.py::write_minhash_index "
+        "+ near_dedup_against_stored_index): the snapshot index is "
+        "written as its one layout — a bands table partitionBy(band_id, "
+        "sig_bucket) plus a sigs table partitionBy(id_bucket), described "
+        "by the mandatory _index_meta.json sidecar — and the nightly "
+        "flag step reads ONLY the bands cells its own band keys touch: "
+        "a bounded (bands*sig_buckets <= 128 here) touched-key collect "
+        "buys PartitionFilters at the file listing, the s17 anti-join "
+        "-> selective-read discipline applied to the near family. The "
+        "signatures attach late from the sigs table. The oracle "
+        "computes the FULL-index verdicts, so hash equality IS "
+        "the pruned-read == full-read referee; the strict-file-subset "
+        "property is plan-pinned in pytest and measured (files-read vs "
+        "files-total) in the bench meta. Fixture: d23's snapshot (even "
+        "ids) with the nightly batch thinned to doc_id%8==1 (arms "
+        "%10==1 copy / %10==3 append / rest own text); threshold 0.5, "
+        "uncapped",
 )
 def d24_pruned_index(spark, sf_dir):
     path, newb_all = _stage_near_index(spark, sf_dir)
@@ -7990,45 +7996,7 @@ def d24_pruned_index(spark, sf_dir):
     out = dedup_ops.near_dedup_against_stored_index(
         newb, path, text_col="text", id_col="doc_id", shingle_size=3,
         num_hashes=32, bands=8, seed=42, threshold=0.5,
-        max_bucket_size=None, sig_buckets=16,
-    )
-    return out.select("doc_id", "is_known_near", "known_of", "known_est")
-
-
-@register(
-    "d26_split_index",
-    _D24_SQL,
-    doc="incremental NEAR dedup against the SPLIT-SIG persisted index "
-        "layout (operators/dedup.py::write_minhash_index(split_sig="
-        "True), round 14): the signature is stored ONCE per doc (a "
-        "narrow partitioned bands table + a sigs-per-doc table) — raw "
-        "sig bytes scale with docs, not docs x bands; measured 0.28x "
-        "the duplicated layout on a unique-doc corpus (the real-web "
-        "shape; the bench's replicated fixture compresses mono's "
-        "duplicates as in-file runs, so BOTH ratios are recorded in "
-        "BENCH meta near_index[_unique]_split_bytes_ratio) — and the "
-        "reader reconstructs the duplicated "
-        "view with one narrow equi-join on id, so every against-index "
-        "consumer is layout-blind. SHARES d24_pruned_index's fixture "
-        "and referee: the oracle computes the FULL-index verdicts from "
-        "first principles, so hash equality proves the split layout "
-        "changes STORAGE, never semantics; bands-table partition "
-        "pruning is plan-pinned in pytest alongside the "
-        "duplicated-layout parity",
-)
-def d26_split_index(spark, sf_dir):
-    snap, newb_all = _near_index_frames(spark, sf_dir)
-    newb = newb_all.where(F.col("doc_id") % 8 == 1)
-    idx = dedup_ops.minhash_index_frame(
-        snap, "text", id_col="doc_id", shingle_size=3, num_hashes=32,
-        bands=8, seed=42,
-    )
-    path = _staging_path("mhsplit", sf_dir)
-    dedup_ops.write_minhash_index(idx, path, sig_buckets=16, split_sig=True)
-    out = dedup_ops.near_dedup_against_stored_index(
-        newb, path, text_col="text", id_col="doc_id", shingle_size=3,
-        num_hashes=32, bands=8, seed=42, threshold=0.5,
-        max_bucket_size=None, sig_buckets=16, split_sig=True,
+        max_bucket_size=None,
     )
     return out.select("doc_id", "is_known_near", "known_of", "known_est")
 
@@ -8036,26 +8004,25 @@ def d26_split_index(spark, sf_dir):
 @register(
     "d27_split_selective",
     _d24_sql(40, batch_limit=12),
-    doc="the split layout's SELECTIVE regime, driver-refereed "
-        "(operators/dedup.py::_pruned_split_frames, round 15 — VERDICT "
-        "r14 item 1): a 12-doc nightly batch (doc_id%40==1, smallest "
-        "12 — the LIMIT pins the batch size at EVERY sf, so 12x8=96 "
-        "band keys stay under the 512/4 cell threshold and the "
-        "selective branch provably fires regardless of corpus size; "
-        "review finding r15) against a sig_buckets=64 split index "
-        "takes the candidate-id path — pruned bands SEMI-JOINED on "
-        "the batch's exact (band_id, band_sig) keys derive the "
-        "touched id-buckets, and the sigs scan is partition-filtered "
-        "to those buckets (d26's batch saturates the cells at oracle "
-        "SFs and exercises only the full-sigs regime, so the "
-        "semi-join path needs its own referee row). The oracle "
-        "computes FULL-index verdicts from first principles, so hash "
-        "equality proves the double pruning pass drops no candidate: "
-        "whole (band_id, band_sig) buckets survive or drop together, "
-        "and every surviving row's id-bucket reaches the sigs filter. "
-        "Strict file-subset reads are pinned in pytest and measured "
-        "(files/bytes for BOTH tables) in bench meta "
-        "near_index_split_*",
+    doc="the stored index's SELECTIVE regime, oracle-refereed "
+        "(operators/dedup.py::_read_for_batch_frames): a 12-doc nightly "
+        "batch (doc_id%40==1, smallest 12 — the LIMIT pins the batch "
+        "size at EVERY sf, so 12x8=96 band keys stay under the 512/4 "
+        "cell threshold and the selective branch provably fires "
+        "regardless of corpus size) against a sig_buckets=64 index "
+        "takes the candidate-id path — pruned bands SEMI-JOINED on the "
+        "batch's exact (band_id, band_sig) keys derive the touched "
+        "id-buckets (bucket count read from the index's sidecar), and "
+        "the sigs scan is partition-filtered to those buckets (d24's "
+        "batch saturates the cells at oracle SFs and exercises only "
+        "the full-sigs regime, so the semi-join path needs its own "
+        "referee row). The oracle computes FULL-index verdicts from "
+        "first principles, so hash equality proves the double pruning "
+        "pass drops no candidate: whole (band_id, band_sig) buckets "
+        "survive or drop together, and every surviving row's id-bucket "
+        "reaches the sigs filter. Strict file-subset reads are pinned "
+        "in pytest and measured (files/bytes for BOTH tables) in bench "
+        "meta near_index_bands_* / near_index_sigs_*",
 )
 def d27_split_selective(spark, sf_dir):
     snap, newb_all = _near_index_frames(spark, sf_dir)
@@ -8069,14 +8036,11 @@ def d27_split_selective(spark, sf_dir):
         bands=8, seed=42,
     )
     path = _staging_path("mhsplitsel", sf_dir)
-    dedup_ops.write_minhash_index(
-        idx, path, sig_buckets=64, split_sig=True, id_buckets=32
-    )
+    dedup_ops.write_minhash_index(idx, path, sig_buckets=64)
     out = dedup_ops.near_dedup_against_stored_index(
         newb, path, text_col="text", id_col="doc_id", shingle_size=3,
         num_hashes=32, bands=8, seed=42, threshold=0.5,
-        max_bucket_size=None, sig_buckets=64, split_sig=True,
-        id_buckets=32,
+        max_bucket_size=None,
     )
     return out.select("doc_id", "is_known_near", "known_of", "known_est")
 
@@ -8084,24 +8048,25 @@ def d27_split_selective(spark, sf_dir):
 @register(
     "d28_index_delete",
     _d24_sql(8, snap_where="doc_id % 2 = 0 AND doc_id % 6 <> 0"),
-    doc="TARGETED delete from the persisted LSH index, driver-refereed "
-        "(operators/dedup.py::delete_from_minhash_index, round 15): "
-        "the snapshot index is built over ALL even ids, then the "
-        "doc_id%6==0 slice is deleted — the doomed docs' band keys are "
-        "recomputed from their text and ONLY the touched (band_id, "
-        "sig_bucket) partitions are rewritten (dynamic partition "
-        "overwrite; cells left without survivors removed through the "
-        "FS API — the probe-cell discipline applied a third time, now "
-        "to index maintenance), never a full-index rewrite. The "
-        "nightly batch is then flagged against the mutated index, and "
-        "the oracle computes full verdicts over a snapshot that NEVER "
-        "CONTAINED the deleted docs — hash equality proves the "
-        "targeted rewrite is indistinguishable from never having "
-        "indexed them: no stale row survives in any rewritten or "
-        "skipped partition, and no surviving row was lost. Deletion "
-        "completes the maintenance verb set (write/append/merge/"
-        "compact/delete) a nightly 100 TB loop needs (GDPR-style "
-        "removals without an O(index) rebuild)",
+    doc="TARGETED delete from the stored LSH index, oracle-refereed "
+        "(operators/dedup.py::delete_from_minhash_index): the snapshot "
+        "index is built over ALL even ids, then the doc_id%6==0 slice "
+        "is deleted — the doomed docs' band keys are recomputed from "
+        "their text and ONLY the touched (band_id, sig_bucket) cells "
+        "of the bands table and the doomed ids' id-buckets of the sigs "
+        "table are rewritten (dynamic partition overwrite, bucket "
+        "counts from the index's sidecar; partitions left without "
+        "survivors removed through the FS API — the probe-cell "
+        "discipline applied to index maintenance), never a full-index "
+        "rewrite. The nightly batch is then flagged against the "
+        "mutated index, and the oracle computes full verdicts over a "
+        "snapshot that NEVER CONTAINED the deleted docs — hash "
+        "equality proves the targeted rewrite is indistinguishable "
+        "from never having indexed them: no stale row survives in any "
+        "rewritten or skipped partition, and no surviving row was "
+        "lost. Deletion completes the maintenance verb set "
+        "(write/append/merge/compact/delete) a nightly 100 TB loop "
+        "needs (GDPR-style removals without an O(index) rebuild)",
 )
 def d28_index_delete(spark, sf_dir):
     snap, newb_all = _near_index_frames(spark, sf_dir)
@@ -8115,12 +8080,12 @@ def d28_index_delete(spark, sf_dir):
     doomed = snap.where(F.col("doc_id") % 6 == 0)
     dedup_ops.delete_from_minhash_index(
         doomed, path, text_col="text", id_col="doc_id", shingle_size=3,
-        num_hashes=32, bands=8, seed=42, sig_buckets=16,
+        num_hashes=32, bands=8, seed=42,
     )
     out = dedup_ops.near_dedup_against_stored_index(
         newb, path, text_col="text", id_col="doc_id", shingle_size=3,
         num_hashes=32, bands=8, seed=42, threshold=0.5,
-        max_bucket_size=None, sig_buckets=16,
+        max_bucket_size=None,
     )
     return out.select("doc_id", "is_known_near", "known_of", "known_est")
 

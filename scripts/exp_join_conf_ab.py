@@ -72,7 +72,6 @@ def main() -> int:
                 row = (
                     DD.near_dedup_against_stored_index(
                         ni_new, f"{ni_dir}/idx", threshold=0.7,
-                        sig_buckets=256,
                     )
                     .agg(
                         F.count(F.lit(1)).alias("n"),

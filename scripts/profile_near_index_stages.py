@@ -99,7 +99,6 @@ def main() -> int:
             "e2e",
             lambda: DD.near_dedup_against_stored_index(
                 ni_new, f"{ni_dir}/idx", threshold=0.7,
-                sig_buckets=NI_SIG_BUCKETS,
             )
             .agg(
                 F.count(F.lit(1)).alias("n"),

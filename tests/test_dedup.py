@@ -1406,26 +1406,37 @@ class TestStoredMinhashIndex:
              (13, "totally novel text nothing like the snapshot corpus")],
             "doc_id long, text string",
         )
+        # checkpoint=False so the bands FileScan stays visible in the
+        # plan (a materialised lazy checkpoint shows as ExistingRDD)
         pruned, banded = dedup.read_minhash_index_for_batch(
-            new, path, sig_buckets=8
+            new, path, checkpoint=False
         )
         plan = pruned._jdf.queryExecution().executedPlan().toString()
-        pf_line = plan.split("PartitionFilters:")[1].splitlines()[0]
-        assert "band_id" in pf_line and "sig_bucket" in pf_line
-        # the pruned scan must touch a strict subset of the index files
-        # (inputFiles() ignores partition filters — count the files that
-        # actually contribute rows; partition filters pass every row of
-        # a matched partition through, so this IS the matched file set)
-        n_total = len(spark.read.parquet(path).inputFiles())
+        pf_lines = [
+            seg.splitlines()[0]
+            for seg in plan.split("PartitionFilters:")[1:]
+        ]
+        assert any(
+            "band_id" in ln and "sig_bucket" in ln for ln in pf_lines
+        ), pf_lines
+        # the pruned bands scan must touch a strict subset of the bands
+        # files (inputFiles() ignores partition filters — count the
+        # files that actually contribute rows; partition filters pass
+        # every row of a matched partition through, so this IS the
+        # matched file set)
+        bands_t, _ = dedup.read_minhash_split_frames(
+            new, path, checkpoint=False
+        )
+        n_total = len(spark.read.parquet(f"{path}/bands").inputFiles())
         n_read = (
-            pruned.select(F.input_file_name().alias("f")).distinct().count()
+            bands_t.select(F.input_file_name().alias("f")).distinct().count()
         )
         assert 0 < n_read < n_total
 
         got = {
             r["doc_id"]: r
             for r in dedup.near_dedup_against_stored_index(
-                new, path, threshold=0.5, sig_buckets=8
+                new, path, threshold=0.5
             ).collect()
         }
         want = {
@@ -1442,40 +1453,96 @@ class TestStoredMinhashIndex:
             for k, v in want.items()
         }
 
-    def test_meta_sidecar_makes_bucket_mismatch_impossible(
-        self, spark, tmp_path
-    ):
-        # round 16 (VERDICT r15 item 2): the writer persists its layout
-        # knobs in _index_meta.json and every reader loads them back —
-        # a caller passing WRONG bucket counts (previously a silent
-        # wrong-partitions read) now resolves correctly, because the
-        # sidecar wins. This test replaces the old docstring-pinned
-        # "mismatch is the caller's contract" test.
+    def _layout_gated_calls(self, spark, path):
+        """Every reader, appender and delete of the stored index."""
+        from llm_pretraining_data_pipeline_spark.operators import dedup
+
+        new = spark.createDataFrame(
+            [(11, self.SNAP[1][1])], "doc_id long, text string"
+        )
+        return {
+            "read": lambda: dedup.read_minhash_index_for_batch(new, path),
+            "frames": lambda: dedup.read_minhash_split_frames(new, path),
+            "flag": lambda: dedup.near_dedup_against_stored_index(
+                new, path
+            ).collect(),
+            "open": lambda: dedup.open_minhash_index(spark, path),
+            "append": lambda: dedup.write_minhash_index(
+                dedup.minhash_index_frame(new, "text"), path,
+                mode="append", dedupe_ids=False,
+            ),
+            "delete": lambda: dedup.delete_from_minhash_index(new, path),
+        }
+
+    def test_no_sidecar_raises(self, spark, tmp_path):
+        # the sidecar is the only source of the layout: without it no
+        # reader, appender or delete guesses bucket counts
+        import os
+
+        path, _ = self._write(spark, tmp_path)
+        os.remove(f"{path}/_index_meta.json")
+        for name, call in self._layout_gated_calls(spark, path).items():
+            with pytest.raises(ValueError, match="_index_meta.json") as e:
+                call()
+            assert path in str(e.value), name
+
+    def test_monolithic_sidecar_raises(self, spark, tmp_path):
+        # an index whose sidecar names another layout (the retired
+        # monolithic one) is refused, never read as if it were split
         import json
 
         from llm_pretraining_data_pipeline_spark.operators import dedup
 
         path, _ = self._write(spark, tmp_path, sig_buckets=3)
         meta = json.load(open(f"{path}/_index_meta.json"))
-        assert meta["layout"] == "monolithic"
-        assert meta["sig_buckets"] == 3
+        assert meta["layout"] == "split" and meta["sig_buckets"] == 3
+        dedup._write_index_meta(
+            spark, path,
+            {"version": 1, "layout": "monolithic", "sig_buckets": 3},
+        )
+        for name, call in self._layout_gated_calls(spark, path).items():
+            with pytest.raises(ValueError, match="'monolithic'") as e:
+                call()
+            assert path in str(e.value), name
+
+    def test_crashed_rebuild_leaves_no_sidecar(
+        self, spark, tmp_path, monkeypatch
+    ):
+        # a rebuild deletes the old sidecar before its first table write
+        # and writes the new one last: when the sigs write dies midway,
+        # the index must be refused, not described by the old sidecar
+        import os
+
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from llm_pretraining_data_pipeline_spark.operators import dedup
+
+        path, idx = self._write(spark, tmp_path)
+        real_parquet = DataFrameWriter.parquet
+
+        def failing_parquet(writer, p, *args, **kwargs):
+            if p.endswith("/sigs"):
+                raise RuntimeError("simulated crash in the sigs write")
+            return real_parquet(writer, p, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            dedup.write_minhash_index(idx, path, sig_buckets=4)
+        monkeypatch.undo()
+        assert not os.path.exists(f"{path}/_index_meta.json")
         new = spark.createDataFrame(
             [(11, self.SNAP[1][1])], "doc_id long, text string"
         )
-        # deliberately wrong caller value: the sidecar must override it
-        got = dedup.near_dedup_against_stored_index(
-            new, path, threshold=0.5, sig_buckets=97
-        ).collect()[0]
-        assert got["is_known_near"] is True and got["known_of"] == 2
+        with pytest.raises(ValueError, match="_index_meta.json"):
+            dedup.near_dedup_against_stored_index(new, path)
 
     def test_split_auto_id_buckets_and_sidecar_roundtrip(
         self, spark, tmp_path
     ):
-        # id_buckets=None (the default) auto-derives from the doc count
-        # (next-pow2 of docs/256, floor 8 — a tiny index must NOT shard
-        # into thousands of directories), records the value in the
-        # sidecar, and the reader prunes with the recorded value even
-        # when the caller passes a wrong one.
+        # id_buckets is always derived from the doc count (next-pow2
+        # of docs/256, floor 8 — a tiny index must NOT shard into
+        # thousands of directories), recorded in the sidecar, and the
+        # reader prunes with the recorded value.
         import json
         import os
 
@@ -1484,7 +1551,7 @@ class TestStoredMinhashIndex:
         snap = spark.createDataFrame(self.SNAP, "doc_id long, text string")
         idx = dedup.minhash_index_frame(snap, "text")
         path = str(tmp_path / "mh_split_auto")
-        dedup.write_minhash_index(idx, path, sig_buckets=4, split_sig=True)
+        dedup.write_minhash_index(idx, path, sig_buckets=4)
         meta = json.load(open(f"{path}/_index_meta.json"))
         assert meta == {
             "version": 1, "layout": "split",
@@ -1498,11 +1565,8 @@ class TestStoredMinhashIndex:
         new = spark.createDataFrame(
             [(11, self.SNAP[1][1])], "doc_id long, text string"
         )
-        # wrong caller values everywhere, wrong layout flag too: the
-        # sidecar describes the index, so the read still resolves
         got = dedup.near_dedup_against_stored_index(
-            new, path, threshold=0.5, sig_buckets=99, split_sig=False,
-            id_buckets=1234,
+            new, path, threshold=0.5
         ).collect()[0]
         assert got["is_known_near"] is True and got["known_of"] == 2
 
@@ -1516,14 +1580,13 @@ class TestStoredMinhashIndex:
         snap = spark.createDataFrame(self.SNAP, "doc_id long, text string")
         path = str(tmp_path / "mh_split_append")
         dedup.write_minhash_index(
-            dedup.minhash_index_frame(snap, "text"), path,
-            sig_buckets=4, split_sig=True,
+            dedup.minhash_index_frame(snap, "text"), path, sig_buckets=4,
         )
         nb = spark.createDataFrame(
             [(50, "a brand new night document with fresh words entirely")],
             "doc_id long, text string",
         )
-        # append states NO layout: adopts the sidecar's (split)
+        # append states NO bucket count: adopts the sidecar's
         dedup.write_minhash_index(
             dedup.minhash_index_frame(nb, "text"), path,
             mode="append", dedupe_ids=False,
@@ -1541,12 +1604,21 @@ class TestStoredMinhashIndex:
             ).collect()
         }
         assert got == {50: True, 60: False}
-        # an EXPLICIT wrong layout on append must fail loudly
-        with _pytest.raises(ValueError, match="layout mismatch"):
+        # an EXPLICIT sig_buckets that differs from the sidecar must
+        # fail loudly, naming the path, before anything is written
+        n_bands = spark.read.parquet(f"{path}/bands").count()
+        with _pytest.raises(ValueError, match="sig_buckets=8") as e:
             dedup.write_minhash_index(
                 dedup.minhash_index_frame(nb, "text"), path,
-                mode="append", split_sig=False,
+                mode="append", sig_buckets=8,
             )
+        assert path in str(e.value)
+        assert spark.read.parquet(f"{path}/bands").count() == n_bands
+        # the matching explicit value is accepted
+        dedup.write_minhash_index(
+            dedup.minhash_index_frame(nb, "text"), path,
+            mode="append", sig_buckets=4,
+        )
 
     def test_empty_batch_reads_nothing(self, spark, tmp_path):
         from llm_pretraining_data_pipeline_spark.operators import dedup
@@ -1555,14 +1627,12 @@ class TestStoredMinhashIndex:
         new = spark.createDataFrame(
             [(41, ""), (43, None)], "doc_id long, text string"
         )
-        pruned, _ = dedup.read_minhash_index_for_batch(
-            new, path, sig_buckets=8
-        )
+        pruned, _ = dedup.read_minhash_index_for_batch(new, path)
         assert pruned.count() == 0
         out = {
             r["doc_id"]: r["is_known_near"]
             for r in dedup.near_dedup_against_stored_index(
-                new, path, sig_buckets=8
+                new, path
             ).collect()
         }
         assert out == {41: False, 43: False}
@@ -1659,35 +1729,33 @@ class TestStoredMinhashIndex:
             (r["new_id"], r["known_of"]) for r in pairs
         ) == [(101, 10), (101, 12), (101, 14)]
 
-    def test_split_sig_layout_is_consumer_blind(self, spark, tmp_path):
-        # split_sig=True stores the signature once per doc (bands table
-        # + sigs table, rejoined at read): same verdicts as the
-        # duplicated layout AND as the in-memory index, pruning intact
+    def test_split_layout_is_consumer_blind(self, spark, tmp_path):
+        # the stored index keeps the signature once per doc (bands
+        # table + sigs table, attached at read): same verdicts as the
+        # in-memory index, pruning intact
         from llm_pretraining_data_pipeline_spark.operators import dedup
 
         snap = spark.createDataFrame(self.SNAP, "doc_id long, text string")
         idx = dedup.minhash_index_frame(snap, "text")
-        mono = str(tmp_path / "mono")
         split = str(tmp_path / "split")
-        dedup.write_minhash_index(idx, mono, sig_buckets=8)
-        dedup.write_minhash_index(idx, split, sig_buckets=8, split_sig=True)
+        dedup.write_minhash_index(idx, split, sig_buckets=8)
         new = spark.createDataFrame(
             [(11, self.SNAP[0][1]),
              (13, "totally novel text nothing like the snapshot corpus")],
             "doc_id long, text string",
         )
 
-        def flags(path, **kw):
+        def flags(frame):
             return {
                 r["doc_id"]: (r["is_known_near"], r["known_of"],
                               r["known_est"])
-                for r in dedup.near_dedup_against_stored_index(
-                    new, path, threshold=0.5, sig_buckets=8, **kw
-                ).collect()
+                for r in frame.collect()
             }
 
-        a = flags(mono)
-        b = flags(split, split_sig=True)
+        a = flags(dedup.near_dedup_against_index(new, idx, threshold=0.5))
+        b = flags(
+            dedup.near_dedup_against_stored_index(new, split, threshold=0.5)
+        )
         assert a == b
         assert a[11] == (True, 0, 1.0)
         # BOTH tables prune at the file listing (round 15, VERDICT r14
@@ -1697,7 +1765,7 @@ class TestStoredMinhashIndex:
         # plan (the default lazy checkpoint, once materialised by the
         # id-bucket collect, shows as ExistingRDD instead)
         pruned, _ = dedup.read_minhash_index_for_batch(
-            new, split, sig_buckets=8, split_sig=True, checkpoint=False
+            new, split, checkpoint=False
         )
         plan = pruned._jdf.queryExecution().executedPlan().toString()
         pf_lines = [
@@ -1741,7 +1809,7 @@ class TestStoredMinhashIndex:
         got = {
             r["doc_id"]: r["known_of"]
             for r in dedup.near_dedup_against_stored_index(
-                new, path, threshold=0.5, sig_buckets=8
+                new, path, threshold=0.5
             ).collect()
         }
         assert got == {101: 0, 103: 2}
@@ -1756,7 +1824,7 @@ class TestStoredMinhashIndex:
             gen = spark.createDataFrame(rows, "doc_id long, text string")
             dedup.write_minhash_index(
                 dedup.minhash_index_frame(gen, "text"), path,
-                sig_buckets=8, split_sig=True,
+                sig_buckets=8,
                 mode="overwrite" if rows == [self.SNAP[0]] else "append",
             )
         new = spark.createDataFrame(
@@ -1766,7 +1834,7 @@ class TestStoredMinhashIndex:
         got = {
             r["doc_id"]: r["known_of"]
             for r in dedup.near_dedup_against_stored_index(
-                new, path, threshold=0.5, sig_buckets=8, split_sig=True
+                new, path, threshold=0.5
             ).collect()
         }
         assert got == {101: 0, 103: 2}
@@ -1784,9 +1852,7 @@ class TestStoredMinhashIndex:
         new = spark.createDataFrame(
             [(1, self.SNAP[0][1])], "doc_id long, text string"
         )
-        got = dedup.near_dedup_against_stored_index(
-            new, path, sig_buckets=8
-        ).collect()[0]
+        got = dedup.near_dedup_against_stored_index(new, path).collect()[0]
         assert got["is_known_near"] is False and got["known_of"] is None
 
     def test_split_selective_read_prunes_sigs_files(self, spark, tmp_path):
@@ -1801,9 +1867,7 @@ class TestStoredMinhashIndex:
         snap = spark.createDataFrame(docs, "doc_id long, text string")
         idx = dedup.minhash_index_frame(snap, "text")
         path = str(tmp_path / "mh_split_sel")
-        dedup.write_minhash_index(
-            idx, path, sig_buckets=8, split_sig=True, id_buckets=16
-        )
+        dedup.write_minhash_index(idx, path, sig_buckets=8)
         sigs_total = len(spark.read.parquet(f"{path}/sigs").inputFiles())
         bands_total = len(spark.read.parquet(f"{path}/bands").inputFiles())
         new = spark.createDataFrame(
@@ -1812,7 +1876,7 @@ class TestStoredMinhashIndex:
         # checkpoint=False: a materialised lazy checkpoint turns the
         # bands scan into ExistingRDD, where input_file_name() is ''
         bands_t, sigs_t = dedup.read_minhash_split_frames(
-            new, path, sig_buckets=8, id_buckets=16, checkpoint=False
+            new, path, checkpoint=False
         )
 
         def files_read(frame):
@@ -1824,8 +1888,7 @@ class TestStoredMinhashIndex:
         assert 0 < files_read(bands_t) < bands_total
         # and the verdict is still the full-index one
         got = dedup.near_dedup_against_stored_index(
-            new, path, threshold=0.5, sig_buckets=8, split_sig=True,
-            id_buckets=16,
+            new, path, threshold=0.5
         ).collect()[0]
         assert got["is_known_near"] is True and got["known_of"] == 0
 
@@ -1841,25 +1904,21 @@ class TestStoredMinhashIndex:
             [(10, txt)], "doc_id long, text string"
         )
         dedup.write_minhash_index(
-            dedup.minhash_index_frame(gen1, "text"), path,
-            sig_buckets=8, split_sig=True,
+            dedup.minhash_index_frame(gen1, "text"), path, sig_buckets=8,
         )
         # night 2 re-ingests 10 and adds 14
         gen2 = spark.createDataFrame(
             [(10, txt), (14, txt)], "doc_id long, text string"
         )
         dedup.write_minhash_index(
-            dedup.minhash_index_frame(gen2, "text"), path,
-            sig_buckets=8, split_sig=True, mode="append",
+            dedup.minhash_index_frame(gen2, "text"), path, mode="append",
         )
         sigs = spark.read.parquet(f"{path}/sigs")
         assert sigs.count() == 2  # one row per distinct id
         new = spark.createDataFrame([(101, txt)], "doc_id long, text string")
         pairs = dedup.near_dup_verdicts_against_index(
             new,
-            dedup.read_minhash_index_for_batch(
-                new, path, sig_buckets=8, split_sig=True
-            )[0],
+            dedup.read_minhash_index_for_batch(new, path)[0],
             threshold=0.5,
         ).collect()
         assert sorted((r["new_id"], r["known_of"]) for r in pairs) == [
@@ -1882,8 +1941,7 @@ class TestStoredMinhashIndex:
             [self.SNAP[0]], "doc_id long, text string"
         )
         dedup.write_minhash_index(
-            dedup.minhash_index_frame(gen1, "text"), path,
-            sig_buckets=8, split_sig=True,
+            dedup.minhash_index_frame(gen1, "text"), path, sig_buckets=8,
         )
         gen2 = spark.createDataFrame(
             [self.SNAP[1]], "doc_id long, text string"
@@ -1901,9 +1959,7 @@ class TestStoredMinhashIndex:
             .parquet(f"{path}/bands")
         )
         # retry of the full append
-        dedup.write_minhash_index(
-            idx2, path, sig_buckets=8, split_sig=True, mode="append"
-        )
+        dedup.write_minhash_index(idx2, path, mode="append")
         bands = spark.read.parquet(f"{path}/bands")
         dup_bands = (
             bands.groupBy("id", "band_id").count()
@@ -1919,91 +1975,14 @@ class TestStoredMinhashIndex:
         got = {
             r["doc_id"]: r["known_of"]
             for r in dedup.near_dedup_against_stored_index(
-                new, path, threshold=0.5, sig_buckets=8, split_sig=True
-            ).collect()
-        }
-        assert got == {101: 0, 103: 2}
-
-    def test_monolithic_append_reingested_id_lands_once(
-        self, spark, tmp_path
-    ):
-        from llm_pretraining_data_pipeline_spark.operators import dedup
-
-        txt = self.SNAP[0][1]
-        path = str(tmp_path / "mh_mono_reingest")
-        dedup.write_minhash_index(
-            dedup.minhash_index_frame(
-                spark.createDataFrame(
-                    [(10, txt)], "doc_id long, text string"
-                ),
-                "text",
-            ),
-            path, sig_buckets=8,
-        )
-        dedup.write_minhash_index(
-            dedup.minhash_index_frame(
-                spark.createDataFrame(
-                    [(10, txt), (14, txt)], "doc_id long, text string"
-                ),
-                "text",
-            ),
-            path, sig_buckets=8, mode="append",
-        )
-        dup_rows = (
-            spark.read.parquet(path)
-            .groupBy("id", "band_id").count()
-            .where(F.col("count") > 1)
-            .count()
-        )
-        assert dup_rows == 0
-
-    def test_legacy_flat_sigs_reads_and_appends_flat(self, spark, tmp_path):
-        # a pre-round-15 split index (sigs written flat, no id_bucket
-        # dirs) must still read correctly (unpruned) AND a later append
-        # must keep the flat shape — mixing partitioned and flat files
-        # in one directory would corrupt the table
-        from llm_pretraining_data_pipeline_spark.operators import dedup
-
-        path = str(tmp_path / "mh_legacy")
-        gen1 = spark.createDataFrame(
-            [self.SNAP[0]], "doc_id long, text string"
-        )
-        idx1 = dedup.minhash_index_frame(gen1, "text")
-        dedup.write_minhash_index(
-            idx1, path, sig_buckets=8, split_sig=True
-        )
-        # rewrite sigs in the legacy flat shape
-        legacy = spark.read.parquet(f"{path}/sigs").select("id", "sig")
-        legacy.write.mode("overwrite").parquet(str(tmp_path / "flat_sigs"))
-        import shutil as _sh
-
-        _sh.rmtree(f"{path}/sigs")
-        _sh.copytree(str(tmp_path / "flat_sigs"), f"{path}/sigs")
-        gen2 = spark.createDataFrame(
-            [self.SNAP[1]], "doc_id long, text string"
-        )
-        dedup.write_minhash_index(
-            dedup.minhash_index_frame(gen2, "text"), path,
-            sig_buckets=8, split_sig=True, mode="append",
-        )
-        sigs = spark.read.parquet(f"{path}/sigs")
-        assert "id_bucket" not in sigs.columns  # still flat
-        assert sigs.count() == 2
-        new = spark.createDataFrame(
-            [(101, self.SNAP[0][1]), (103, self.SNAP[1][1])],
-            "doc_id long, text string",
-        )
-        got = {
-            r["doc_id"]: r["known_of"]
-            for r in dedup.near_dedup_against_stored_index(
-                new, path, threshold=0.5, sig_buckets=8, split_sig=True
+                new, path, threshold=0.5
             ).collect()
         }
         assert got == {101: 0, 103: 2}
 
     def test_mistyped_index_path_raises(self, spark, tmp_path):
         # ADVICE r14 (medium): a wrong path must FAIL, never silently
-        # flag every doc is_known_near=false — in both layouts
+        # flag every doc is_known_near=false
         from pyspark.errors import AnalysisException
 
         from llm_pretraining_data_pipeline_spark.operators import dedup
@@ -2013,12 +1992,7 @@ class TestStoredMinhashIndex:
         )
         with pytest.raises(AnalysisException):
             dedup.near_dedup_against_stored_index(
-                new, str(tmp_path / "no_such_index"), sig_buckets=8
-            ).collect()
-        with pytest.raises((AnalysisException, ValueError)):
-            dedup.near_dedup_against_stored_index(
-                new, str(tmp_path / "no_such_split"), sig_buckets=8,
-                split_sig=True,
+                new, str(tmp_path / "no_such_index")
             ).collect()
 
     def test_half_written_split_index_raises(self, spark, tmp_path):
@@ -2031,8 +2005,7 @@ class TestStoredMinhashIndex:
             [self.SNAP[0]], "doc_id long, text string"
         )
         dedup.write_minhash_index(
-            dedup.minhash_index_frame(gen, "text"), path,
-            sig_buckets=8, split_sig=True,
+            dedup.minhash_index_frame(gen, "text"), path, sig_buckets=8,
         )
         import shutil as _sh
 
@@ -2041,9 +2014,7 @@ class TestStoredMinhashIndex:
             [(1, self.SNAP[0][1])], "doc_id long, text string"
         )
         with pytest.raises(ValueError, match="half-written"):
-            dedup.read_minhash_index_for_batch(
-                new, path, sig_buckets=8, split_sig=True
-            )
+            dedup.read_minhash_index_for_batch(new, path)
 
     def test_empty_split_index_flags_all_false(self, spark, tmp_path):
         # bootstrap night, split layout: empty write leaves both table
@@ -2053,15 +2024,12 @@ class TestStoredMinhashIndex:
         empty = spark.createDataFrame([], "doc_id long, text string")
         path = str(tmp_path / "mh_empty_split")
         dedup.write_minhash_index(
-            dedup.minhash_index_frame(empty, "text"), path,
-            sig_buckets=8, split_sig=True,
+            dedup.minhash_index_frame(empty, "text"), path, sig_buckets=8,
         )
         new = spark.createDataFrame(
             [(1, self.SNAP[0][1])], "doc_id long, text string"
         )
-        got = dedup.near_dedup_against_stored_index(
-            new, path, sig_buckets=8, split_sig=True
-        ).collect()[0]
+        got = dedup.near_dedup_against_stored_index(new, path).collect()[0]
         assert got["is_known_near"] is False and got["known_of"] is None
 
 
@@ -2073,51 +2041,14 @@ class TestDeleteFromMinhashIndex:
 
     SNAP = TestNearDedupAgainstIndex.SNAP
 
-    def _build(self, spark, tmp_path, **kw):
+    def _build(self, spark, tmp_path):
         from llm_pretraining_data_pipeline_spark.operators import dedup
 
         snap = spark.createDataFrame(self.SNAP, "doc_id long, text string")
         idx = dedup.minhash_index_frame(snap, "text")
         path = str(tmp_path / "mh_del")
-        dedup.write_minhash_index(idx, path, sig_buckets=8, **kw)
+        dedup.write_minhash_index(idx, path, sig_buckets=8)
         return path
-
-    def test_monolithic_delete_targets_partitions(self, spark, tmp_path):
-        from llm_pretraining_data_pipeline_spark.operators import dedup
-
-        path = self._build(spark, tmp_path)
-        before = set(spark.read.parquet(path).inputFiles())
-        doomed = spark.createDataFrame(
-            [self.SNAP[0]], "doc_id long, text string"
-        )
-        banded = dedup._new_banded_frame(doomed, "text")
-        touched = {
-            (r["band_id"], r["sig_bucket"])
-            for r in banded.select(
-                "band_id",
-                dedup._sig_bucket(F.col("band_sig"), 8).alias("sig_bucket"),
-            ).distinct().collect()
-        }
-        dedup.delete_from_minhash_index(doomed, path, sig_buckets=8)
-        after_df = spark.read.parquet(path)
-        # the doomed id is gone, the others fully intact
-        assert after_df.where(F.col("id") == 0).count() == 0
-        assert after_df.where(F.col("id") == 2).count() == 8
-        assert after_df.where(F.col("id") == 4).count() == 8
-        # untouched partitions' files were NOT rewritten
-        def cell_of(f):
-            import re as _re
-
-            m = _re.search(r"band_id=(\d+)/sig_bucket=(\d+)", f)
-            return (int(m.group(1)), int(m.group(2)))
-
-        untouched_before = {f for f in before if cell_of(f) not in touched}
-        after = set(after_df.inputFiles())
-        assert untouched_before <= after
-        # and no stale file from a touched cell survives
-        assert all(
-            f in untouched_before or cell_of(f) in touched for f in after
-        )
 
     def test_delete_all_docs_empties_cells_and_flags_nothing(
         self, spark, tmp_path
@@ -2128,36 +2059,56 @@ class TestDeleteFromMinhashIndex:
         everything = spark.createDataFrame(
             self.SNAP, "doc_id long, text string"
         )
-        dedup.delete_from_minhash_index(everything, path, sig_buckets=8)
+        dedup.delete_from_minhash_index(everything, path)
         # every partition directory is gone or empty; the reader treats
         # the result as an empty index (bootstrap contract)
         new = spark.createDataFrame(
             [(1, self.SNAP[0][1])], "doc_id long, text string"
         )
-        got = dedup.near_dedup_against_stored_index(
-            new, path, sig_buckets=8
-        ).collect()[0]
+        got = dedup.near_dedup_against_stored_index(new, path).collect()[0]
         assert got["is_known_near"] is False
 
     def test_split_delete_removes_bands_and_sigs(self, spark, tmp_path):
+        import re as _re
+
         from llm_pretraining_data_pipeline_spark.operators import dedup
 
-        path = self._build(
-            spark, tmp_path, split_sig=True, id_buckets=16
-        )
+        path = self._build(spark, tmp_path)
+        bands_before = set(spark.read.parquet(f"{path}/bands").inputFiles())
         doomed = spark.createDataFrame(
             [self.SNAP[1]], "doc_id long, text string"
         )
-        dedup.delete_from_minhash_index(
-            doomed, path, sig_buckets=8, split_sig=True, id_buckets=16
-        )
-        assert (
-            spark.read.parquet(f"{path}/bands")
-            .where(F.col("id") == 2).count() == 0
-        )
+        touched = {
+            (r["band_id"], r["sig_bucket"])
+            for r in dedup._new_banded_frame(doomed, "text").select(
+                "band_id",
+                dedup._sig_bucket(F.col("band_sig"), 8).alias("sig_bucket"),
+            ).distinct().collect()
+        }
+        dedup.delete_from_minhash_index(doomed, path)
+        bands = spark.read.parquet(f"{path}/bands")
+        assert bands.where(F.col("id") == 2).count() == 0
+        # the other docs' band rows fully intact
+        assert bands.where(F.col("id") == 0).count() == 8
+        assert bands.where(F.col("id") == 4).count() == 8
         sigs = spark.read.parquet(f"{path}/sigs")
         assert sigs.where(F.col("id") == 2).count() == 0
         assert sigs.count() == 2  # the other two docs' sigs intact
+
+        # untouched bands cells' files were NOT rewritten, and no stale
+        # file from a touched cell survives
+        def cell_of(f):
+            m = _re.search(r"band_id=(\d+)/sig_bucket=(\d+)", f)
+            return (int(m.group(1)), int(m.group(2)))
+
+        untouched_before = {
+            f for f in bands_before if cell_of(f) not in touched
+        }
+        after = set(bands.inputFiles())
+        assert untouched_before <= after
+        assert all(
+            f in untouched_before or cell_of(f) in touched for f in after
+        )
         # verdicts no longer name the deleted doc; others still match
         new = spark.createDataFrame(
             [(11, self.SNAP[1][1]), (13, self.SNAP[0][1])],
@@ -2166,8 +2117,7 @@ class TestDeleteFromMinhashIndex:
         got = {
             r["doc_id"]: (r["is_known_near"], r["known_of"])
             for r in dedup.near_dedup_against_stored_index(
-                new, path, threshold=0.5, sig_buckets=8, split_sig=True,
-                id_buckets=16,
+                new, path, threshold=0.5
             ).collect()
         }
         assert got[11] == (False, None)
@@ -2177,15 +2127,22 @@ class TestDeleteFromMinhashIndex:
         from llm_pretraining_data_pipeline_spark.operators import dedup
 
         path = self._build(spark, tmp_path)
-        n0 = spark.read.parquet(path).count()
+
+        def counts():
+            return tuple(
+                spark.read.parquet(f"{path}/{t}").count()
+                for t in ("bands", "sigs")
+            )
+
+        n0 = counts()
         dedup.delete_from_minhash_index(
             spark.createDataFrame(
                 [(999, "text that was never indexed at all ok")],
                 "doc_id long, text string",
             ),
-            path, sig_buckets=8,
+            path,
         )
-        assert spark.read.parquet(path).count() == n0
+        assert counts() == n0
 
     def test_delete_then_reappend_works(self, spark, tmp_path):
         from llm_pretraining_data_pipeline_spark.operators import dedup
@@ -2194,16 +2151,17 @@ class TestDeleteFromMinhashIndex:
         gen = spark.createDataFrame(
             [self.SNAP[0]], "doc_id long, text string"
         )
-        dedup.delete_from_minhash_index(gen, path, sig_buckets=8)
+        dedup.delete_from_minhash_index(gen, path)
         # re-append the same id: the guard anti-joins CURRENT ids, the
         # deleted doc is absent, so the append lands exactly once
         dedup.write_minhash_index(
-            dedup.minhash_index_frame(gen, "text"), path,
-            sig_buckets=8, mode="append",
+            dedup.minhash_index_frame(gen, "text"), path, mode="append",
         )
-        t = spark.read.parquet(path)
+        t = spark.read.parquet(f"{path}/bands")
         assert t.where(F.col("id") == 0).count() == 8
         assert (
             t.groupBy("id", "band_id").count()
             .where(F.col("count") > 1).count() == 0
         )
+        sigs = spark.read.parquet(f"{path}/sigs")
+        assert sigs.where(F.col("id") == 0).count() == 1

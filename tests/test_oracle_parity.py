@@ -27,6 +27,31 @@ def test_all_queries_match_oracle(spark, sf_dir):
     assert n_ok >= 50  # guard against silently shrinking oracle coverage
 
 
+# the stored MinHash-LSH index family: every query that writes, reads,
+# merges or deletes from an index, batch and streaming — oracle-checked
+# in the default tier so an index change never waits for the replay
+STORED_INDEX_FAMILY = [
+    "d23_near_index", "d24_pruned_index", "d25_index_merge",
+    "d27_split_selective", "d28_index_delete", "ev_stream_near_index",
+    "ev_stream_near_stored",
+]
+
+
+def test_stored_index_family_matches_oracle(spark, sf_dir):
+    from check_oracle import run_checks
+
+    results = run_checks(
+        names=STORED_INDEX_FAMILY, sf_dir=sf_dir, spark=spark, verbose=False
+    )
+    assert [r[0] for r in results] == STORED_INDEX_FAMILY
+    failures = [
+        f"{name}: {status} {detail}"
+        for name, status, _, detail in results
+        if status != "OK"
+    ]
+    assert not failures, "\n".join(failures)
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as entrymod
 

@@ -869,9 +869,9 @@ class TestNearIndexStream:
         assert len(rows) == 1
 
     def test_persisted_partitioned_index_as_static_side(self, spark, tmp_path):
-        # ev_stream_near_stored's shape (round 14): the stream-static
-        # side is the PERSISTED write_minhash_index table read straight
-        # from parquet (extra sig_bucket partition column and all) —
+        # ev_stream_near_stored's shape: the stream-static side is the
+        # STORED write_minhash_index index, opened unpruned through
+        # open_minhash_index (bands as the index, sigs attached late) —
         # same verdicts, still stateless
         import tempfile
 
@@ -887,8 +887,9 @@ class TestNearIndexStream:
         new.write.mode("overwrite").parquet(stage)
         schema = spark.read.parquet(stage).schema
         stream = spark.readStream.schema(schema).parquet(stage)
+        bands_t, sigs_t = dedup.open_minhash_index(spark, path)
         out = dedup.near_dup_verdicts_against_index(
-            stream, spark.read.parquet(path), threshold=0.5
+            stream, bands_t, threshold=0.5, index_sigs=sigs_t
         )
         ckpt = tempfile.mkdtemp(prefix="near_stored_ckpt_")
         q = (
