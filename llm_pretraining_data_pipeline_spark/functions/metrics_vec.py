@@ -29,8 +29,8 @@ the tables fails loudly instead of silently skewing scores.
 
 100 TB: Arrow-batched, shuffle-free, embarrassingly parallel — the same
 sanctioned-Python shape as the BPE tokeniser and the vectorized lang ID.
-Opt out with PipelineConfig(metrics_vectorized=False) for a zero-Python
-plan of identical output.
+The pipeline (plans/pipeline.py) always runs this block; the registered
+queries call the Catalyst expressions directly.
 """
 
 from __future__ import annotations

@@ -35,9 +35,10 @@ Parity notes (each mirrors a specific Catalyst behavior):
 sanctioned-Python shape as metrics_vec / the BPE tokeniser. NOTE the lazy-
 cascade trade-off: an ArrowEvalPython node computes the struct for EVERY
 row, while the inline expression cascade skips the scans for rows dropped
-by the cheap rules 1-7. Use ``vectorized=True`` when most rows reach the
-repetition rules (curation recipes over pre-filtered web text); keep the
-expression form when an earlier rule drops most rows (raw soup).
+by the cheap rules 1-7. So ``gopher_quality_filter(vectorized=...)`` is
+chosen per caller: the web-curation recipe (pre-filtered web text, most
+rows reach the repetition rules) uses this module; f11 over raw soup keeps
+the expression cascade.
 """
 
 from __future__ import annotations

@@ -1,50 +1,37 @@
-"""Vectorized fast path for jusText-style main-content extraction.
+"""Vectorized fast path for HTML character-reference decoding.
 
-WHY: ``structural.extract_main_content`` builds a per-block struct array
-through interpreted higher-order functions (``transform`` + ``filter`` +
-``aggregate`` + ``zip_with`` are CodegenFallback) and runs FOUR regex
-passes per block through the interpreted walk. Measured at the bench
-shape (50k raw-HTML docs, local[32], round 15/16): the extract rung is
-+7.7 s of the ~18 s web_curation_e2e entry — the most expensive
-untouched path after round 15 (VERDICT r15 item 2). One Arrow-batched
-pass that runs the same regexes through CPython's C engine does the
-block split + classification at a fraction of the cost (guide §4.2:
-batch work belongs in vectorized native code).
+WHY: ``structural.decode_html_entities`` splits the text before every
+``&`` and decodes each part's leading token through an interpreted
+``transform`` (CodegenFallback). Measured at the bench shape (50k
+raw-HTML docs, round 16): the 'entities' rung was +3.2 s of the ~14 s
+web-curation recipe, the largest rung. One Arrow-batched pass that runs
+the same token regex through CPython's C engine (one ``re.sub`` per row)
+does the whole decode. ``plans/web_curation.py`` and p42_html_entities
+use it.
 
 BIT-PARITY IS CONTRACT, not aspiration (the ``metrics_vec`` /
-``minhash_vec`` discipline): the Catalyst expressions in
-``structural.py`` remain the definitional semantics; this module must
-follow them, never lead. The parity surfaces, each mirrored EXACTLY and
-enforced by tests/test_structural_vec.py (full-codepoint sweep +
-adversarial fixtures + real-corpus equality):
+``minhash_vec`` discipline): the Catalyst expression in
+``structural.py`` remains the definitional semantics; this module must
+follow it, never lead. Enforced by tests/test_structural_vec.py
+(named-map sweep, numeric bounds, double-escape one-pass rule,
+full-codepoint sweep). The parity surfaces:
 
-  * REGEX DIALECT. Java's default regex case-insensitivity and ``\\s``
-    are ASCII-only; every Python pattern here therefore carries the
-    ``(?a)`` / ``re.ASCII`` flag (Python's default ``(?i)`` and ``\\s``
-    are Unicode-aware — 'ı' would match '(?i)i', NBSP would match
-    ``\\s``; both would silently change which blocks exist). The
-    whitespace run uses the EXPLICIT class ``[ \\t\\n\\r\\f\\x0b]`` —
-    the exact Java ``\\s`` set.
-  * SPLIT SEMANTICS. ``F.split(s, pat)`` (limit -1) keeps trailing
-    empty strings; so does ``re.split``. Both engines keep a leading
-    empty part when the string starts with a match.
-  * TRIM. Spark's ``trim`` removes ASCII space (0x20) ONLY — the
-    Python mirror is ``.strip(" ")``, never ``.strip()`` (which would
-    also remove the non-ASCII whitespace the Java chain preserves).
-  * LENGTH. ``F.length`` counts code points; so does ``len`` on str.
-  * WORD COUNT. ``size(split(t, " "))`` == ``len(t.split(" "))`` —
-    both split on the literal single space and keep empties.
-  * LINK DENSITY. ``lc <= max_link_density * len(t)`` evaluated in
-    IEEE double on both sides, same operand order.
+  * TOKEN. The exact ``_ENTITY_TOKEN_RE`` of ``structural.py``,
+    case-exact, no flags; a token never contains '&', so a left-to-right
+    sub over '&'-starting matches visits the same tokens as the Catalyst
+    split before each '&'.
+  * ONE PASS. Decoded output is never rescanned (``&amp;amp;`` →
+    ``&amp;``), numeric before named; unknown names and bare '&' pass
+    through; invalid codepoints (0, surrogates, > U+10FFFF) become
+    U+FFFD; null in → null out.
 
 100 TB: Arrow-batched, shuffle-free, embarrassingly parallel — the
-same sanctioned-Python shape as the vectorized metrics block. Opt out
-(``mc_vectorized=False`` in WebCurationConfig / ``vectorized=False``
-at the call sites) for a zero-Python plan of identical output.
+same sanctioned-Python shape as the vectorized metrics block.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
 import pandas as pd
@@ -52,72 +39,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from llm_pretraining_data_pipeline_spark.functions.text_norm import _col
-
-# the Java patterns from structural.py, re-stated with ASCII-only
-# case-folding (Java's default); see module docstring for the dialect
-# parity argument
-_BLOCK_TAG_RE_PY = re.compile(
-    r"</?(?:p|div|li|h[1-6]|section|article|td|tr|table|ul|ol)[^>]*>",
-    re.IGNORECASE | re.ASCII,
-)
-_TAG_RE_PY = re.compile(r"<[^>]+>")
-# Java \s == [ \t\n\x0B\f\r] — explicit class, NOT Python \s
-_WS_RUN_RE_PY = re.compile(r"[ \t\n\r\f\x0b]+")
-_ANCHOR_RE_PY = re.compile(
-    r"<a[^>]*>(.*?)</a>", re.IGNORECASE | re.DOTALL | re.ASCII
-)
-
-
-def _norm_text(b: str) -> str:
-    """strip tags → collapse ASCII-whitespace runs → trim(space) —
-    the exact Catalyst normalisation of both block text and anchor
-    text."""
-    return _WS_RUN_RE_PY.sub(" ", _TAG_RE_PY.sub(" ", b)).strip(" ")
-
-
-def _main_content_py(
-    s, min_words: int, max_link_density: float, smooth: bool
-):
-    """One row of ``extract_main_content``, mirrored block for block.
-    Returns (text, n_blocks, n_kept)."""
-    if not isinstance(s, str):
-        s = ""
-    nonempty: list[tuple[str, int]] = []
-    for b in _BLOCK_TAG_RE_PY.split(s):
-        t = _norm_text(b)
-        if not t:
-            continue
-        lc = 0
-        if "<a" in b or "<A" in b:  # cheap gate; regex confirms
-            for a_txt in _ANCHOR_RE_PY.findall(b):
-                lc += len(_norm_text(a_txt))
-        nonempty.append((t, lc))
-    good0 = [
-        float(lc) <= max_link_density * len(t)
-        and len(t.split(" ")) >= min_words
-        for t, lc in nonempty
-    ]
-    if not smooth:
-        keep = good0
-    else:
-        # good-neighbor context pass: a SHORT link-sparse block between
-        # two independently-good blocks is reclassified as content; the
-        # neighbor flags come from the BASE classification only
-        prev_g = [False] + good0[:-1]
-        next_g = good0[1:] + [False]
-        keep = [
-            g
-            or (
-                float(lc) <= max_link_density * len(t)
-                and len(t.split(" ")) < min_words
-                and p
-                and nx
-            )
-            for (t, lc), g, p, nx in zip(nonempty, good0, prev_g, next_g)
-        ]
-    kept = [t for (t, _), k in zip(nonempty, keep) if k]
-    return "\n".join(kept), len(nonempty), len(kept)
-
 
 # HTML character-reference token — the EXACT _ENTITY_TOKEN_RE from
 # structural.py (anchored there with ^& over each '&'-split part; a
@@ -153,58 +74,27 @@ def _decode_entities_py(s, named: dict) -> str:
     return _ENTITY_SUB_RE_PY.sub(repl, s)
 
 
-_UDFS: dict[tuple, object] = {}
+@functools.cache
+def _decode_udf():
+    from llm_pretraining_data_pipeline_spark.functions.structural import (
+        _NAMED_ENTITIES,
+    )
 
+    named = dict(_NAMED_ENTITIES)
 
-def main_content_struct(
-    c: Column | str,
-    min_words: int = 5,
-    max_link_density: float = 0.5,
-    smooth: bool = False,
-) -> Column:
-    """Arrow-batched ``extract_main_content`` — a struct column
-    ``(text, n_blocks, n_kept)`` bit-identical to the Catalyst chain
-    (see module docstring). One ArrowEvalPython stage; only the HTML
-    column crosses the Python boundary."""
-    key = (int(min_words), float(max_link_density), bool(smooth))
-    if key not in _UDFS:
-        mw, mld, sm = key
+    @F.pandas_udf("string")
+    def _udf(texts: pd.Series) -> pd.Series:
+        return pd.Series(
+            [_decode_entities_py(t, named) for t in texts], dtype=object
+        )
 
-        @F.pandas_udf("text string, n_blocks bigint, n_kept bigint")
-        def _udf(htmls: pd.Series) -> pd.DataFrame:
-            rows = [_main_content_py(h, mw, mld, sm) for h in htmls]
-            return pd.DataFrame(
-                rows, columns=["text", "n_blocks", "n_kept"]
-            )
-
-        _UDFS[key] = _udf
-    return _UDFS[key](_col(c))
+    return _udf
 
 
 def decode_entities_str(c: Column | str) -> Column:
     """Arrow-batched ``structural.decode_html_entities`` — bit-identical
     one-forward-pass HTML character-reference decoding (named, decimal,
     hex; unknown names and bare '&' pass through; invalid codepoints →
-    U+FFFD; null in → null out). The Catalyst chain splits the text
-    before every '&' and decodes each part's leading token through an
-    interpreted transform (measured: the 'entities' rung is +3.2 s of
-    the ~14 s bench recipe at 50k docs, round 16); this mirror is one
-    C-engine ``re.sub`` per row. Parity enforced by
-    tests/test_structural_vec.py (named-map sweep, numeric bounds,
-    double-escape one-pass rule, full-codepoint sweep)."""
-    if "entities" not in _UDFS:
-        from llm_pretraining_data_pipeline_spark.functions.structural import (
-            _NAMED_ENTITIES,
-        )
-
-        named = dict(_NAMED_ENTITIES)
-
-        @F.pandas_udf("string")
-        def _udf(texts: pd.Series) -> pd.Series:
-            return pd.Series(
-                [_decode_entities_py(t, named) for t in texts],
-                dtype=object,
-            )
-
-        _UDFS["entities"] = _udf
-    return _UDFS["entities"](_col(c))
+    U+FFFD; null in → null out), one C-engine ``re.sub`` per row (see
+    module docstring)."""
+    return _decode_udf()(_col(c))

@@ -76,28 +76,23 @@ def attention_mask(ids: Column | str) -> Column:
 
 
 def with_tokenisation(
-    df: DataFrame, text_col: str, prefer_hf: bool = True, backend: str = "auto"
+    df: DataFrame, text_col: str, backend: str = "auto"
 ) -> DataFrame:
     """Add input_ids / attention_mask / n_tokens columns.
 
     ``backend``:
-      * "auto" (default) — the closest-to-reference backend available:
-        full published GPT-2 assets (exact reference ids) > transformers
-        (exact reference ids, skipped when ``prefer_hf=False``) > the JVM
-        regex stand-in. The reference's 51.86M-token contract (BASELINE.md)
-        is reproducible exactly when either of the first two is present; the
-        container this engine is developed in has neither (no network,
-        learned vocab not regenerable), so "auto" degrades honestly and
-        loudly (one warning).
+      * "auto" (default) — full published GPT-2 assets when present (exact
+        reference ids), else the JVM regex stand-in. The reference's
+        51.86M-token contract (BASELINE.md) is reproducible exactly with the
+        assets; without them (the learned vocab cannot be regenerated
+        offline) "auto" degrades honestly and loudly (one warning). It never
+        picks transformers, so a plan does not silently flip to Python
+        tokenisation between environments.
       * "regex" — JVM-side pre-token pieces + hashed ids, zero Python.
       * "bpe" — real byte-level BPE via mapInPandas: the full assets when
         present, else the bundled subset fixture (algorithm-exact, exact
         published ids on the golden strings; NOT the full vocab).
       * "hf" — transformers gpt2 (raises eagerly if not installed).
-    ``prefer_hf`` governs the HF rung everywhere: False pins "auto"/"regex"
-    to deterministic non-HF backends even where transformers is installed
-    (the pipeline's config default, so its plans never silently flip to
-    Python tokenisation between environments).
     """
     from llm_pretraining_data_pipeline_spark.functions import bpe
 
@@ -114,17 +109,12 @@ def with_tokenisation(
                 found[0],
             )
             return bpe.bpe_tokenize_map(df, text_col, codec=bpe.load_gpt2_codec(*found))
-        if prefer_hf and _hf_available():
-            logging.getLogger(__name__).info(
-                "tokenizer backend 'auto' resolved to the transformers (HF) backend"
-            )
-            return hf_tokenize_map(df, text_col)
         import warnings
 
         warnings.warn(
-            "tokenizer backend 'auto': neither the full GPT-2 assets "
-            f"(${bpe.FULL_ASSET_ENV}) nor an enabled transformers backend "
-            "is available — falling back to the regex stand-in; "
+            "tokenizer backend 'auto': the full GPT-2 assets "
+            f"(${bpe.FULL_ASSET_ENV}) are not available — falling back to "
+            "the regex stand-in; "
             "n_tokens/input_ids will not match the reference's GPT-2 "
             "vocabulary",
             stacklevel=2,
@@ -140,8 +130,6 @@ def with_tokenisation(
                 "tokenizer backend 'hf' requires the transformers package; "
                 "it is not installed in this environment"
             )
-        return hf_tokenize_map(df, text_col)
-    if prefer_hf and _hf_available():
         return hf_tokenize_map(df, text_col)
     ids = input_ids(text_col)
     return (

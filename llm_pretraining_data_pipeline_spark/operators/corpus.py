@@ -186,7 +186,6 @@ def repetition_signals(
     id_col: str = "doc_id",
     top_ngram_sizes: tuple[int, ...] = (2, 3),
     dup_ngram_sizes: tuple[int, ...] = (5, 10),
-    vectorized: bool = False,
 ) -> DataFrame:
     """Gopher-style within-document repetition signals (Rae et al. 2021 A1).
 
@@ -201,29 +200,7 @@ def repetition_signals(
 
     Pure per-row expression tree (no shuffle, no UDF): the n-gram counting
     is a run-length scan over the sorted gram array inside ``aggregate``.
-    ``vectorized=True`` swaps in the Arrow-batched bit-parity twin
-    (``functions/repetition_vec.py``) — same values, one Python pass per
-    batch instead of interpreted HOFs; only supported for the default
-    signal sizes (2,3)/(5,10).
     """
-    if vectorized:
-        if top_ngram_sizes != (2, 3) or dup_ngram_sizes != (5, 10):
-            raise ValueError(
-                "vectorized repetition signals support the default "
-                "(2,3)/(5,10) sizes only"
-            )
-        from llm_pretraining_data_pipeline_spark.functions import repetition_vec
-
-        rep = repetition_vec.rep_signals_struct(
-            F.coalesce(F.col(text_col), F.lit(""))
-        )
-        return df.withColumn("_rep", rep).select(
-            F.col(id_col),
-            *[
-                F.col(f"_rep.{f}").alias(f)
-                for f in repetition_vec.REP_FIELDS
-            ],
-        )
     text = F.coalesce(F.col(text_col), F.lit(""))
     lines = _nonempty_lines(text)
     n_lines = F.size(lines).cast("long")

@@ -28,14 +28,12 @@ from pyspark.sql import functions as F
 from llm_pretraining_data_pipeline_spark.functions import (
     hashing,
     langid,
-    metrics,
     metrics_vec,
     pii,
     scoring,
     structural,
     text_norm,
     tokenizer,
-    toxicity,
 )
 from llm_pretraining_data_pipeline_spark.operators import dedup as dedup_ops
 from llm_pretraining_data_pipeline_spark.operators import sharding as shard_ops
@@ -83,28 +81,12 @@ class PipelineConfig:
     # weak signals are markedly more robust on natural prose than stopword
     # profiles alone; the reference's langdetect is likewise n-gram based)
     langid_trigrams: bool = True
-    # True (default) runs lang ID through the Arrow-batched vectorized pass —
-    # bit-identical to the pure-Catalyst expression (parity-tested incl.
-    # hypothesis fuzz) and ~6× faster: the expression form is 15 regex scans
-    # per row, the heaviest tree in the pipeline (functions/langid.py has the
-    # full rationale). False keeps lang ID pure-JVM (zero Python workers).
-    langid_vectorized: bool = True
-    # Same trade for the stage-2/4 metric blocks (quality metrics, toxicity,
-    # token stats): one Arrow pass instead of ~10 HOF trees that each
-    # re-tokenise the row (functions/metrics_vec.py). Bit-identical output,
-    # parity-enforced by tests/test_metrics_vec.py. False = zero-Python plan.
-    # Measured 2×2 at 500k docs/local[32] (warm): both-on 36 s, langid-only
-    # 44 s, both-off 88 s. CAVEAT: metrics_vectorized=True with
-    # langid_vectorized=False is the one bad mix (~120-160 s): the Arrow
-    # boundary splits whole-stage codegen around the 15-regex langid tree.
-    # Flip both flags together.
-    metrics_vectorized: bool = True
-    prefer_hf_tokenizer: bool = False
-    # "auto": full published GPT-2 assets > transformers > regex stand-in —
-    # exact reference ids whenever either real backend is present (drop the
-    # public encoder.json/vocab.bpe into functions/bpe_assets/ or point
+    # "auto": full published GPT-2 assets > regex stand-in — exact reference
+    # ids whenever the assets are present (drop the public
+    # encoder.json/vocab.bpe into functions/bpe_assets/ or point
     # $SPARK_GRAFT_GPT2_ASSETS at them); warns and uses the regex stand-in
-    # otherwise. See functions/tokenizer.py:with_tokenisation.
+    # otherwise. "hf" runs transformers. See
+    # functions/tokenizer.py:with_tokenisation.
     tokenizer_backend: str = "auto"  # "auto" | "regex" | "bpe" | "hf"
     # P8 model-quality backend: "logistic" = the real scorer (deterministic
     # logistic over quality features, pure Catalyst); "constant" = the
@@ -159,50 +141,38 @@ def clean_filter(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataF
     # Reference reassigns text = text_norm downstream (:655-656).
     out = out.withColumn("text", F.coalesce(norm, F.lit(None).cast("string")))
 
-    # Quality metrics on the normalised text (:660-661). The vectorized
-    # default computes the whole stage-2 metric block (these four + the six
-    # toxicity scores below + non_latin_ratio) in ONE Arrow pass —
-    # bit-identical to the expression forms, which otherwise re-tokenise the
+    # Quality metrics on the normalised text (:660-661). One Arrow pass
+    # computes the whole stage-2 metric block (these four + the six
+    # toxicity scores below + non_latin_ratio) — bit-identical to the
+    # expression forms in metrics.py/toxicity.py, which re-tokenise the
     # text once per metric (metrics_vec.py has the rationale and contract).
-    if cfg.metrics_vectorized:
-        out = out.withColumn("_m", metrics_vec.clean_metrics_struct("text"))
-        out = (
-            out.withColumn("n_chars", F.col("_m.n_chars"))
-            .withColumn("n_words", F.col("_m.n_words"))
-            .withColumn("alpha_ratio", F.col("_m.alpha_ratio"))
-            .withColumn("repetition_ratio", F.col("_m.repetition_ratio"))
-        )
-    else:
-        out = (
-            out.withColumn("n_chars", metrics.n_chars("text"))
-            .withColumn("n_words", metrics.n_words("text"))
-            .withColumn("alpha_ratio", metrics.alpha_ratio("text"))
-            .withColumn("repetition_ratio", metrics.repetition_ratio("text"))
-        )
+    # With the Arrow lang ID below, measured 36 s against 88 s for the
+    # pure-Catalyst chain at 500k docs/local[32] (warm).
+    out = out.withColumn("_m", metrics_vec.clean_metrics_struct("text"))
+    out = (
+        out.withColumn("n_chars", F.col("_m.n_chars"))
+        .withColumn("n_words", F.col("_m.n_words"))
+        .withColumn("alpha_ratio", F.col("_m.alpha_ratio"))
+        .withColumn("repetition_ratio", F.col("_m.repetition_ratio"))
+    )
 
-    # Language ID (:692-699): heuristic by default; langdetect UDF for parity.
+    # Language ID (:692-699): the Arrow-batched heuristic by default
+    # (bit-identical to langid.langid_struct, whose 15 regex scans per row
+    # are the heaviest tree in the chain); langdetect UDF for parity.
     lang_struct = None
     if cfg.use_langdetect:
         udf = langid.langdetect_udf()
         if udf is not None:
             lang_struct = udf(F.col("text"))
     if lang_struct is None:
-        if cfg.langid_vectorized:
-            lang_struct = langid.langid_struct_vectorized(
-                "text", use_trigrams=cfg.langid_trigrams
-            )
-        else:
-            lang_struct = langid.langid_struct("text", use_trigrams=cfg.langid_trigrams)
+        lang_struct = langid.langid_struct_vectorized(
+            "text", use_trigrams=cfg.langid_trigrams
+        )
     out = out.withColumn("_lang", lang_struct)
-    non_latin = (
-        F.col("_m.non_latin_ratio")
-        if cfg.metrics_vectorized
-        else metrics.non_latin_ratio("text")
-    )
     out = (
         out.withColumn("lang_pred", F.col("_lang.lang"))
         .withColumn("lang_score", F.col("_lang.score"))
-        .withColumn("non_latin_ratio", non_latin)
+        .withColumn("non_latin_ratio", F.col("_m.non_latin_ratio"))
         .drop("_lang")
     )
     if cfg.apply_lang_filter:
@@ -224,17 +194,12 @@ def clean_filter(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataF
     # PII heuristics + toxicity + model hook (:708-720).
     out = out.withColumn("email_hits", pii.email_hits("text"))
     out = out.withColumn("phone_hits", pii.simple_phone_hits("text"))
-    if cfg.metrics_vectorized:
-        for name in (
-            "toxicity", "severe_toxicity", "insult", "threat",
-            "identity_attack", "sexual_explicit",
-        ):
-            out = out.withColumn(name, F.col(f"_m.{name}"))
-        out = out.drop("_m")
-    else:
-        tox = toxicity.toxicity_scores("text")
-        for name, expr in tox.items():
-            out = out.withColumn(name, expr)
+    for name in (
+        "toxicity", "severe_toxicity", "insult", "threat",
+        "identity_attack", "sexual_explicit",
+    ):
+        out = out.withColumn(name, F.col(f"_m.{name}"))
+    out = out.drop("_m")
     out = out.withColumn(
         "model_q",
         scoring.model_quality_score(
@@ -271,31 +236,22 @@ def deep_clean_pii(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Dat
     """Stage 4: structural cleanup + token stats + low-info filters (F4) +
     PII mask (deep_clean_and_pii.py:339-619)."""
     out = df.withColumn("text_deep_clean", structural.structural_cleanup("text_norm"))
-    if cfg.metrics_vectorized:
-        # One Arrow pass for the whole token-stat block (metrics_vec.py);
-        # the spam predicate is re-expressed over the struct fields with the
-        # identical guarded-ratio arithmetic as is_repetitive_token_spam.
-        out = out.withColumn("_ts", metrics_vec.token_stats_struct("text_deep_clean"))
-        out = (
-            out.withColumn("token_count", F.col("_ts.token_count"))
-            .withColumn("unique_tokens", F.col("_ts.unique_tokens"))
-            .withColumn("unique_token_ratio", F.col("_ts.unique_token_ratio"))
-            .withColumn("stopword_ratio", F.col("_ts.stopword_ratio"))
-        )
-        max_freq_ratio = F.when(
-            F.col("_ts.token_count") > 0,
-            F.col("_ts.max_token_frequency").cast("double")
-            / F.col("_ts.token_count").cast("double"),
-        ).otherwise(F.lit(0.0))
-        spam = (F.col("_ts.token_count") >= 3) & (max_freq_ratio > F.lit(0.70))
-    else:
-        out = (
-            out.withColumn("token_count", metrics.token_count("text_deep_clean"))
-            .withColumn("unique_tokens", metrics.unique_tokens("text_deep_clean"))
-            .withColumn("unique_token_ratio", metrics.unique_token_ratio("text_deep_clean"))
-            .withColumn("stopword_ratio", metrics.stopword_ratio("text_deep_clean"))
-        )
-        spam = metrics.is_repetitive_token_spam("text_deep_clean")
+    # One Arrow pass for the whole token-stat block (metrics_vec.py); the
+    # spam predicate is re-expressed over the struct fields with the
+    # identical guarded-ratio arithmetic as is_repetitive_token_spam.
+    out = out.withColumn("_ts", metrics_vec.token_stats_struct("text_deep_clean"))
+    out = (
+        out.withColumn("token_count", F.col("_ts.token_count"))
+        .withColumn("unique_tokens", F.col("_ts.unique_tokens"))
+        .withColumn("unique_token_ratio", F.col("_ts.unique_token_ratio"))
+        .withColumn("stopword_ratio", F.col("_ts.stopword_ratio"))
+    )
+    max_freq_ratio = F.when(
+        F.col("_ts.token_count") > 0,
+        F.col("_ts.max_token_frequency").cast("double")
+        / F.col("_ts.token_count").cast("double"),
+    ).otherwise(F.lit(0.0))
+    spam = (F.col("_ts.token_count") >= 3) & (max_freq_ratio > F.lit(0.70))
     enough = F.col("token_count") >= cfg.min_tokens_for_stats
     out = apply_rules(
         out,
@@ -305,10 +261,9 @@ def deep_clean_pii(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Dat
             ("high_stopword_ratio", enough & (F.col("stopword_ratio") > cfg.high_stopword_ratio)),
         ],
     )
-    if cfg.metrics_vectorized:
-        out = out.drop("_ts")
     out = (
-        out.withColumn("text_pii_masked", pii.mask_pii("text_deep_clean"))
+        out.drop("_ts")
+        .withColumn("text_pii_masked", pii.mask_pii("text_deep_clean"))
         .withColumn("pii_email_hits", pii.email_hits("text_deep_clean"))
         .withColumn("pii_phone_hits", pii.phone_hits("text_deep_clean"))
         .withColumn("pii_cc_hits", pii.cc_hits("text_deep_clean"))
@@ -413,8 +368,7 @@ def score_mixture(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Data
 def tokenise(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
     """Stage 7: tokenise + token-length filter (F6)."""
     out = tokenizer.with_tokenisation(
-        df, "text_pii_masked", prefer_hf=cfg.prefer_hf_tokenizer,
-        backend=cfg.tokenizer_backend,
+        df, "text_pii_masked", backend=cfg.tokenizer_backend
     )
     return apply_rules(
         out,

@@ -50,14 +50,6 @@ class WebCurationConfig:
     span_sents: int = 3
     apply_gopher: bool = True
     apply_span_dedup: bool = True
-    # Arrow-batched repetition signals (functions/repetition_vec.py,
-    # bit-parity-enforced): ON by default here because curation input is
-    # pre-filtered web text — most rows survive the cheap Gopher rules and
-    # reach the gram scans, which is exactly where the vectorized pass wins
-    # (measured ≥2x at the 50k-doc bench scale). Flip off for raw-soup
-    # corpora where an early rule drops most rows and the expression
-    # cascade's laziness skips the scans entirely.
-    gopher_vectorized: bool = True
     # opt-in round-9 front stages (default OFF: the bench corpus has no
     # robots rules or HTML markup; flipping them on does not change any
     # downstream stage's semantics, only what text reaches it)
@@ -65,24 +57,6 @@ class WebCurationConfig:
     mc_min_words: int = 5
     mc_max_link_density: float = 0.5
     mc_smooth: bool = False           # good-neighbor context pass (p41b)
-    # Arrow-batched block classifier (functions/structural_vec.py,
-    # bit-parity-enforced by tests/test_structural_vec.py): OFF by
-    # default — measured round 16 in isolation at the bench shape
-    # (50k pages x 3 blocks), the Catalyst chain and the mirror are
-    # BOTH ~0.4-0.5 s warm (the r15 '+7.7 s extract rung' was
-    # downstream-stage work over text_main, not the classifier), so
-    # the zero-Python plan stays the default per the guide's
-    # land-only-measured-wins rule. The mirror remains available for
-    # block-dense corpora where the interpreted HOF walk scales with
-    # blocks-per-page.
-    mc_vectorized: bool = False
-    # Arrow-batched HTML entity decoder (same module, same parity
-    # discipline): ON by default — the Catalyst decoder splits before
-    # every '&' and decodes through an interpreted transform, measured
-    # round 16 as +3.2 s of the ~14 s bench recipe (the largest rung),
-    # vs one C-engine re.sub per row in the mirror. Flip off for a
-    # zero-Python plan of identical output.
-    decode_vectorized: bool = True
     # HTML character-reference decode (&amp; &#233; &#xE9; → & é é), run
     # AFTER main-content extraction and BEFORE every text metric — tag
     # stripping alone leaves entity literals that poison alpha ratios,
@@ -151,20 +125,12 @@ def run_web_curation(
             reason, F.when(F.col("is_dup_url"), F.lit("url_duplicate"))
         )
     if cfg.extract_main:
-        if cfg.mc_vectorized:
-            mc = structural_vec.main_content_struct(
-                text_col,
-                min_words=cfg.mc_min_words,
-                max_link_density=cfg.mc_max_link_density,
-                smooth=cfg.mc_smooth,
-            )
-        else:
-            mc = structural.extract_main_content(
-                text_col,
-                min_words=cfg.mc_min_words,
-                max_link_density=cfg.mc_max_link_density,
-                smooth=cfg.mc_smooth,
-            )
+        mc = structural.extract_main_content(
+            text_col,
+            min_words=cfg.mc_min_words,
+            max_link_density=cfg.mc_max_link_density,
+            smooth=cfg.mc_smooth,
+        )
         # Generator barrier (the p41 inline(array(...)) discipline): the
         # downstream stages reference text_main MANY times, and a plain
         # withColumn alias would be substituted into every reference by
@@ -188,17 +154,15 @@ def run_web_curation(
     )
     if decode_entities:
         # Same generator-barrier discipline as text_main above: the
-        # decoder is referenced by every downstream stage — inline()
-        # makes it a real attribute so it evaluates once per row
-        # (needed for the interpreted HOF chain; harmless for the
-        # Arrow mirror, whose single ArrowEvalPython stage would
-        # otherwise still be duplicated per reference by
-        # CollapseProject).
-        decoded = (
-            structural_vec.decode_entities_str(F.col(text_col))
-            if cfg.decode_vectorized
-            else structural.decode_html_entities(F.col(text_col))
-        )
+        # decoder is referenced by every downstream stage, and its single
+        # ArrowEvalPython stage would otherwise be duplicated per
+        # reference by CollapseProject — inline() makes it a real
+        # attribute so it evaluates once per row. The Arrow decoder is
+        # one C-engine re.sub per row, bit-identical to the Catalyst
+        # structural.decode_html_entities (measured round 16: that
+        # interpreted split/transform chain was +3.2 s of the ~14 s bench
+        # recipe).
+        decoded = structural_vec.decode_entities_str(F.col(text_col))
         dec_named = F.transform(
             F.array(decoded),
             lambda m: F.struct(m.alias("text_entities")),
@@ -227,7 +191,11 @@ def run_web_curation(
             out, text_col="text_c4", id_col=id_col,
             min_words=cfg.gopher_min_words,
             min_distinct_stopwords=cfg.gopher_min_stopwords,
-            vectorized=cfg.gopher_vectorized,
+            # Arrow-batched repetition signals: curation input is
+            # pre-filtered web text, so most rows survive the cheap rules
+            # and reach the gram scans, where one Arrow pass wins
+            # (measured ≥2x at the 50k-doc bench scale)
+            vectorized=True,
         )
         reason = F.coalesce(reason, F.col("gopher_drop_reason"))
     out = out.withColumn("drop_reason", reason)

@@ -167,8 +167,6 @@ def main() -> int:
         F.sum("dup5gram_char_frac"), F.sum("top2gram_char_frac"),
         F.sum("top3gram_char_frac"), F.sum("dup10gram_char_frac"))
     t("rep_signals_expr_500k", rep_force(corpus.repetition_signals(big)))
-    t("rep_signals_vec_500k",
-      rep_force(corpus.repetition_signals(big, vectorized=True)))
     passage = F.concat(
         F.lit("shared run alpha bravo charlie delta echo foxtrot golf "
               "hotel india var"),

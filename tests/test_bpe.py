@@ -209,8 +209,7 @@ class TestFullAssetDiscovery:
             warnings.simplefilter("always")
             auto = tokenizer.with_tokenisation(df, "text", backend="auto")
             assert any("regex stand-in" in str(x.message) for x in w)
-        regex = tokenizer.with_tokenisation(df, "text", backend="regex",
-                                            prefer_hf=False)
+        regex = tokenizer.with_tokenisation(df, "text", backend="regex")
         assert [r.asDict() for r in auto.collect()] == [
             r.asDict() for r in regex.collect()
         ]

@@ -1782,9 +1782,9 @@ class TestStoredMinhashIndex:
         ), pf_lines
 
     def test_append_mode_composes_partition_dirs(self, spark, tmp_path):
-        # write_minhash_index(mode="append"): night N's delta partitions
-        # land beside night N-1's in the same layout, and the pruned
-        # reader sees BOTH generations — the on-disk counterpart of
+        # write_minhash_index(mode="append"): night N's bands partitions
+        # AND sigs rows land beside night N-1's, and the pruned reader
+        # sees BOTH generations — the on-disk counterpart of
         # merge_minhash_index for disjoint ids
         from llm_pretraining_data_pipeline_spark.operators import dedup
 
@@ -1814,34 +1814,10 @@ class TestStoredMinhashIndex:
         }
         assert got == {101: 0, 103: 2}
 
-    def test_split_append_composes_both_tables(self, spark, tmp_path):
-        # split layout nightly maintenance: mode="append" lands night
-        # N's bands partitions AND sigs rows beside night N-1's
-        from llm_pretraining_data_pipeline_spark.operators import dedup
-
-        path = str(tmp_path / "mh_split_gen")
-        for rows in ([self.SNAP[0]], [self.SNAP[1]]):
-            gen = spark.createDataFrame(rows, "doc_id long, text string")
-            dedup.write_minhash_index(
-                dedup.minhash_index_frame(gen, "text"), path,
-                sig_buckets=8,
-                mode="overwrite" if rows == [self.SNAP[0]] else "append",
-            )
-        new = spark.createDataFrame(
-            [(101, self.SNAP[0][1]), (103, self.SNAP[1][1])],
-            "doc_id long, text string",
-        )
-        got = {
-            r["doc_id"]: r["known_of"]
-            for r in dedup.near_dedup_against_stored_index(
-                new, path, threshold=0.5
-            ).collect()
-        }
-        assert got == {101: 0, 103: 2}
-
     def test_empty_stored_index_flags_all_false(self, spark, tmp_path):
-        # review finding r14 (bootstrap night): an EMPTY persisted index
-        # must flag every batch doc false, not crash the parquet read
+        # bootstrap night: an EMPTY persisted index (both table dirs
+        # present with only _SUCCESS) must flag every batch doc false,
+        # not crash the parquet read
         from llm_pretraining_data_pipeline_spark.operators import dedup
 
         empty = spark.createDataFrame([], "doc_id long, text string")
@@ -2015,22 +1991,6 @@ class TestStoredMinhashIndex:
         )
         with pytest.raises(ValueError, match="half-written"):
             dedup.read_minhash_index_for_batch(new, path)
-
-    def test_empty_split_index_flags_all_false(self, spark, tmp_path):
-        # bootstrap night, split layout: empty write leaves both table
-        # dirs present with only _SUCCESS — must flag false, not raise
-        from llm_pretraining_data_pipeline_spark.operators import dedup
-
-        empty = spark.createDataFrame([], "doc_id long, text string")
-        path = str(tmp_path / "mh_empty_split")
-        dedup.write_minhash_index(
-            dedup.minhash_index_frame(empty, "text"), path, sig_buckets=8,
-        )
-        new = spark.createDataFrame(
-            [(1, self.SNAP[0][1])], "doc_id long, text string"
-        )
-        got = dedup.near_dedup_against_stored_index(new, path).collect()[0]
-        assert got["is_known_near"] is False and got["known_of"] is None
 
 
 class TestDeleteFromMinhashIndex:

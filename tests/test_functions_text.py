@@ -420,7 +420,7 @@ class TestHashing:
 class TestTokenizer:
     def test_regex_backend(self, spark):
         df = spark.createDataFrame([("Hello world, it's 42 degrees!",), (None,), ("",)], "t string")
-        out = tokenizer.with_tokenisation(df, "t", prefer_hf=False)
+        out = tokenizer.with_tokenisation(df, "t", backend="regex")
         rows = out.collect()
         pieces = re.findall(
             r"'s|'t|'re|'ve|'m|'ll|'d| ?[^\W\d_]+| ?\d+| ?[^\s\w]+|\s+(?!\S)|\s+",
@@ -431,6 +431,27 @@ class TestTokenizer:
         assert all(0 <= i < tokenizer.GPT2_VOCAB_SIZE for i in rows[0].input_ids)
         assert rows[0].attention_mask == [1] * rows[0].n_tokens
         assert rows[1].n_tokens == 0 and rows[2].n_tokens == 0
+
+    def test_explicit_backend_never_runs_hf(self, spark, monkeypatch):
+        """With transformers importable, "regex" and "auto" without the full
+        GPT-2 assets still give the regex ids and never run HF."""
+        import warnings
+
+        from llm_pretraining_data_pipeline_spark.functions import bpe
+
+        def no_hf(*_a, **_k):
+            raise AssertionError("hf_tokenize_map called")
+
+        monkeypatch.setattr(tokenizer, "_hf_available", lambda: True)
+        monkeypatch.setattr(tokenizer, "hf_tokenize_map", no_hf)
+        monkeypatch.setattr(bpe, "find_gpt2_assets", lambda: None)
+        df = spark.createDataFrame([("Hello world, it's 42 degrees!",)], "t string")
+        expected = df.select(tokenizer.input_ids("t").alias("ids")).collect()[0].ids
+        for backend in ("regex", "auto"):
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore")
+                out = tokenizer.with_tokenisation(df, "t", backend=backend)
+            assert out.collect()[0].input_ids == expected, backend
 
 
 class TestFitLogisticWeights:

@@ -8,6 +8,7 @@ import string
 
 from pyspark.sql import functions as F
 
+from llm_pretraining_data_pipeline_spark.functions import repetition_vec
 from llm_pretraining_data_pipeline_spark.operators import corpus
 
 REP_EDGE_CASES = [
@@ -69,7 +70,12 @@ class TestRepetitionSignalsParity:
             [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
         )
         expr = corpus.repetition_signals(df)
-        vec = corpus.repetition_signals(df, vectorized=True)
+        rep = repetition_vec.rep_signals_struct(
+            F.coalesce(F.col("text"), F.lit(""))
+        )
+        vec = df.select(
+            "doc_id", *[rep[f].alias(f) for f in repetition_vec.REP_FIELDS]
+        )
         fields = [c for c in expr.columns if c != "doc_id"]
         j = expr.alias("e").join(vec.alias("v"), "doc_id")
         cond = None
@@ -93,15 +99,6 @@ class TestRepetitionSignalsParity:
         self._assert_parity(
             spark, [r.text for r in docs.select("text").collect()][:400]
         )
-
-    def test_non_default_sizes_rejected(self, spark):
-        import pytest
-
-        df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="default"):
-            corpus.repetition_signals(
-                df, top_ngram_sizes=(2,), vectorized=True
-            )
 
 
 class TestGopherVectorizedParity:

@@ -1,146 +1,11 @@
-"""Bit-parity of the Arrow-batched main-content extraction
-(functions/structural_vec.py) against the definitional Catalyst chain
-(functions/structural.py::extract_main_content) — the metrics_vec
-discipline: adversarial fixtures targeting every regex-dialect trap,
-a full-codepoint sweep, and the real testdata corpus, for both smooth
-modes and non-default thresholds."""
-
-import pytest
-from pyspark.sql import functions as F
+"""Bit-parity of the Arrow-batched HTML entity decoder
+(functions/structural_vec.py::decode_entities_str) against the
+definitional Catalyst chain (functions/structural.py::
+decode_html_entities) — the metrics_vec discipline: fixtures targeting
+every decoding rule and a full-codepoint sweep."""
 
 from llm_pretraining_data_pipeline_spark.functions import structural
 from llm_pretraining_data_pipeline_spark.functions import structural_vec
-
-
-ADVERSARIAL = [
-    None,
-    "",
-    "plain text with no markup at all but enough words to survive",
-    # case-variant block tags (Java (?i) is ASCII-only; so is the mirror)
-    "<P>one two three four five six</P><DiV>seven eight nine ten eleven</DiV>",
-    # NOT block tags: h7, span, bare text with angle brackets
-    "<h7>not a block tag seven words here now ok</h7>",
-    "<span>span is not a block delimiter with many words</span>",
-    "math: 3 < 5 > 2 and more words to pass the length gate",
-    # unterminated tag: <[^>]+> must not fire, text keeps the fragment
-    "<div class=broken one two three four five six seven",
-    # link-only nav (dropped by density) + content + link-only footer
-    '<div><a href="/">home</a> <a href="/x">more</a></div>'
-    "<p>the actual body paragraph with plenty of ordinary words here</p>"
-    '<div><a href="/tos">terms of service</a></div>',
-    # anchors spanning newlines (DOTALL), nested inline tags
-    '<p>alpha beta <a href="x">link\ntext <b>bold</b></a> gamma delta '
-    "epsilon zeta</p>",
-    # anchor with no close tag: findall yields nothing
-    '<p>one two three <a href="x">dangling four five six seven</p>',
-    # unicode whitespace: NBSP / ideographic space / LS are NOT Java \s
-    # and NOT trimmed (trim is 0x20-only); vertical tab IS Java \s
-    "<p> alpha beta gamma delta epsilon zeta </p>",
-    "<p>　one　two three four five six　</p>",
-    "<p>a\x0bb c d e f g h</p>",
-    "<p>line separated words one two three four five</p>",
-    # Python-(?i)-without-ASCII traps: long-s and Kelvin sign would match
-    # 'section'/'k' under Unicode folding — must NOT split blocks here
-    "<ſection>long s is not a section tag in either engine</ſection> "
-    "extra words to pass gates",
-    "<p>kelvin K sign inside text one two three four</p>",
-    # dotted capital I in a tag name: '<İ1>' must not match '<h1>'-ish
-    "<İ1>not a heading block with some words here</İ1> tail words",
-    # astral chars in text and inside [^>]* spans
-    "<p>emoji 😀 body with words one two three four five</p>",
-    "<div data-x=\"😀\">six words inside this block now ok</div>",
-    # entity literals pass through untouched at this stage
-    "<p>fish &amp; chips &ndash; &pound;5 &#233;clair one two three</p>",
-    # only tags
-    "<p></p><div></div>",
-    # trailing-empty split parts + leading match
-    "<p>starts with a block tag and then words enough</p>",
-    "tail words before a final tag <p>",
-]
-
-# smooth-specific shapes: short link-sparse block between two good
-# blocks (kept), at the edge (dropped), next to a bad block (dropped),
-# and a short LINK-DENSE block between good ones (dropped by density)
-SMOOTH_SHAPES = [
-    "<p>first good paragraph with six or more words total</p>"
-    "<p>short aside note</p>"
-    "<p>second good paragraph also has plenty of words here</p>",
-    "<p>short lead in</p>"
-    "<p>good paragraph with six or more words in it</p>",
-    "<p>good paragraph with six or more words in it</p>"
-    "<p>short tail note</p>",
-    "<p>first good paragraph with six or more words total</p>"
-    "<p>short aside note</p>"
-    '<div><a href="/">nav nav nav</a></div>'
-    "<p>second good paragraph also has plenty of words here</p>",
-    "<p>first good paragraph with six or more words total</p>"
-    '<p><a href="x">tiny link</a></p>'
-    "<p>second good paragraph also has plenty of words here</p>",
-]
-
-
-def _compare(spark, texts, min_words=5, max_link_density=0.5,
-             smooth=False):
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "i long, html string"
-    )
-    cat = structural.extract_main_content(
-        "html", min_words=min_words,
-        max_link_density=max_link_density, smooth=smooth,
-    )
-    vec = structural_vec.main_content_struct(
-        "html", min_words=min_words,
-        max_link_density=max_link_density, smooth=smooth,
-    )
-    rows = (
-        df.select("i", F.col("html"), cat.alias("c"), vec.alias("v"))
-        .collect()
-    )
-    for r in rows:
-        assert (r["c"]["text"], r["c"]["n_blocks"], r["c"]["n_kept"]) == (
-            r["v"]["text"], r["v"]["n_blocks"], r["v"]["n_kept"]
-        ), f"row {r['i']}: {r['html']!r}\n cat={r['c']}\n vec={r['v']}"
-
-
-class TestAdversarialParity:
-    @pytest.mark.parametrize("smooth", [False, True])
-    def test_adversarial_fixtures(self, spark, smooth):
-        _compare(spark, ADVERSARIAL + SMOOTH_SHAPES, smooth=smooth)
-
-    def test_smooth_shapes_with_min_words_3(self, spark):
-        _compare(spark, SMOOTH_SHAPES, min_words=3, smooth=True)
-
-    def test_nondefault_link_density(self, spark):
-        _compare(
-            spark, ADVERSARIAL, max_link_density=0.2, smooth=False
-        )
-        _compare(
-            spark, ADVERSARIAL, max_link_density=0.9, smooth=True
-        )
-
-
-class TestCodepointSweep:
-    def test_every_codepoint_in_text_and_tag_positions(self, spark):
-        # every assigned plane-0/1 codepoint (surrogates excluded),
-        # 128 per doc, planted in BOTH text position and inside the
-        # [^>]* span of a real block tag, plus an anchor carrying the
-        # chunk — catches any \s-class, case-folding, trim or length
-        # drift between the engines
-        cps = [
-            c
-            for c in list(range(1, 0x3000)) + list(range(0x1F300, 0x1F400))
-            if not 0xD800 <= c <= 0xDFFF
-        ]
-        docs = []
-        for k in range(0, len(cps), 128):
-            chunk = "".join(chr(c) for c in cps[k:k + 128])
-            docs.append(
-                f"<p {chunk}>lead words one two three four five</p>"
-                f"<div>{chunk} mid words six seven eight nine ten</div>"
-                f'<p><a href="x">{chunk[:24]}</a> tail {chunk}</p>'
-            )
-        _compare(spark, docs, smooth=False)
-        _compare(spark, docs, smooth=True)
 
 
 ENTITY_FIXTURES = [
@@ -218,18 +83,3 @@ class TestEntityDecoderParity:
                 " ".join(f"&#{c};x{chr(c)}y&#x{c:X};" for c in chunk)
             )
         self._compare(spark, docs)
-
-
-class TestRealCorpusParity:
-    @pytest.mark.parametrize("smooth", [False, True])
-    def test_p41_skeleton_over_testdata(self, spark, sf_dir, smooth):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        html = F.concat(
-            F.lit('<div class="nav"><a href="/">home</a> '
-                  '<a href="/about">about</a></div><p>'),
-            F.coalesce(F.col("text"), F.lit("")),
-            F.lit('</p><div>ok</div><div class="footer">'
-                  '<a href="/tos">terms of service</a></div>'),
-        )
-        texts = [r["h"] for r in docs.select(html.alias("h")).collect()]
-        _compare(spark, texts, smooth=smooth)
