@@ -17,7 +17,7 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from llm_pretraining_data_pipeline_spark.functions.text_norm import _col, ws_tokens
+from llm_pretraining_data_pipeline_spark.functions.text_norm import _col, _let, ws_tokens
 
 MERSENNE_31 = 2_147_483_647  # 2^31 - 1, the modulus for all portable hashes
 
@@ -52,17 +52,23 @@ def token_shingles(c: Column | str, n: int = 3) -> Column:
 
     Shorter-than-n docs yield their whole text as a single shingle so every
     non-empty doc has ≥1 shingle (keeps minhash well-defined).
+
+    The token array is let-bound: referenced inside the per-shingle lambda
+    it would re-run the regex split of the whole text for every shingle.
     """
-    toks = ws_tokens(c)
-    size = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), size - F.lit(n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    whole = F.array(F.concat_ws(" ", toks))
-    return F.when(size >= n, grams).when(size > 0, whole).otherwise(
-        F.array().cast("array<string>")
-    )
+
+    def build(toks: Column) -> Column:
+        size = F.size(toks)
+        grams = F.transform(
+            F.sequence(F.lit(1), size - F.lit(n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        )
+        whole = F.array(F.concat_ws(" ", toks))
+        return F.when(size >= n, grams).when(size > 0, whole).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return _let(ws_tokens(c), build)
 
 
 def minhash_coeffs(num_hashes: int, seed: int = 42) -> tuple[list[int], list[int]]:

@@ -31,7 +31,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from llm_pretraining_data_pipeline_spark.functions.metrics import EN_STOPWORDS
-from llm_pretraining_data_pipeline_spark.functions.text_norm import _col, ws_tokens
+from llm_pretraining_data_pipeline_spark.functions.text_norm import _col, _let, ws_tokens
 
 # Ranked vocabulary: EN_STOPWORDS list order is the frequency rank.
 LM_VOCAB: list[str] = list(EN_STOPWORDS)
@@ -234,15 +234,19 @@ def score_with_unigram_lm(
 def _adjacent_pairs(toks):
     """array<struct<w1,w2>> of adjacent token pairs ([] under 2 tokens) —
     ONE definition shared by the bigram trainer and scorer so their join
-    keys can never silently diverge (the _nonempty_lines lesson)."""
-    return F.when(
-        F.size(toks) >= 2,
-        F.zip_with(
-            F.slice(toks, 1, F.size(toks) - 1),
-            F.slice(toks, 2, F.size(toks) - 1),
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    keys can never silently diverge (the _nonempty_lines lesson). ``toks``
+    is let-bound so its four references share one whitespace split."""
+    return _let(
+        toks,
+        lambda t: F.when(
+            F.size(t) >= 2,
+            F.zip_with(
+                F.slice(t, 1, F.size(t) - 1),
+                F.slice(t, 2, F.size(t) - 1),
+                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+            ),
+        ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>")),
+    )
 
 
 def train_bigram_lm(

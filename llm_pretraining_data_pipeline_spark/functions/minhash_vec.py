@@ -3,14 +3,18 @@
 WHY: the Catalyst signature chain in ``operators/dedup.py`` builds every
 token shingle as a STRING through interpreted higher-order functions
 (``transform`` + ``slice`` + ``concat_ws`` are CodegenFallback) and then
-folds it through two nested ``zip_with`` lambdas per shingle. Measured at
-the bench shape (500k docs, local[32], round 15): the shingle-string
-construction alone is ~19 s of the ~22 s pass and the fold another ~4 s,
-while the native ``split`` producing the token array costs ~0.5 s. One
+folds it through nested ``zip_with`` lambdas per shingle. One
 Arrow-batched pass that receives the JVM-tokenised array and does the
-join+md5+affine-min in C-speed Python/NumPy runs the same computation in
-~2 s of wall (guide §4.2: batch work belongs in vectorized native code,
-distribution/shuffles/I-O stay in Spark).
+join+md5+affine-min in C-speed Python/NumPy is still faster: at 2,500
+English pages on local[2] (4 vCPUs, warm), 1.3-1.5 s against 2.4-2.7 s
+for the Catalyst chain, with identical signatures (guide §4.2: batch
+work belongs in vectorized native code, distribution/shuffles/I-O stay
+in Spark). The round-15 figure that motivated this module (500k docs,
+local[32]: shingle strings ~19 s of a ~22 s pass, Arrow ~2 s) was
+measured while ``token_shingles`` re-ran the regex split of the whole
+text for every shingle. On the 2,500-page shape above the Catalyst chain
+took 19.2-19.3 s with that re-split and 2.4-2.7 s without it; the
+500k-doc shape has not been re-measured.
 
 BIT-PARITY IS CONTRACT, not aspiration (the ``metrics_vec`` discipline):
 every signature value backs DuckDB-oracle-refereed queries (d03, d08,
@@ -144,9 +148,9 @@ def ngram_h64_frame_arrow(
     """``(*keep, gh array<long>)`` — the 60-bit h64 hashes of a row's
     word n-grams in one Arrow pass: the vectorized twin of
     ``explode(corpus.ngrams(ws_tokens(coalesce(text, '')), n))`` followed
-    by ``h64(gram)`` (same interpreted-HOF cost profile as the MinHash
-    shingle chain above; same md5-arithmetic parity argument — and the
-    same JVM-side tokenisation, so no regex mirror). ``ngrams`` semantics
+    by ``h64(gram)`` (same md5-arithmetic parity argument as the MinHash
+    shingle chain above, and the same JVM-side tokenisation, so no regex
+    mirror). ``ngrams`` semantics
     mirrored exactly: fewer than ``n`` tokens (incl. null text) yields an
     EMPTY list — there is no whole-text fallback here, unlike
     ``token_shingles``. Callers explode ``gh`` where they exploded the

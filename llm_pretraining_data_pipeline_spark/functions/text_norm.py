@@ -103,6 +103,22 @@ def ws_tokens(c: Column | str) -> Column:
     return F.when(s.isNull(), empty).otherwise(pieces)
 
 
+def _let(bound: Column, fn) -> Column:
+    """Let-binding for Catalyst expressions: evaluate ``bound`` ONCE and
+    feed it to ``fn`` as a lambda variable.
+
+    Referencing a subexpression twice in a projection duplicates its whole
+    tree (``_run_stats(g)["a"]`` + ``_run_stats(g)["b"]`` runs the scan
+    twice — there is no interpreted-mode CSE, and HOFs are interpreted).
+    Inside a lambda body it is worse: in
+    ``transform(seq, i -> slice(ws_tokens(t), i, n))`` the regex split of
+    the whole text re-runs for EVERY element, quadratic in document
+    length. ``transform(array(x), fn)[0]`` binds x to a lambda variable
+    instead, so every reference inside ``fn`` reads the one evaluation.
+    """
+    return F.transform(F.array(bound), fn)[0]
+
+
 def char_len(c: Column | str) -> Column:
     """Length of the (normalised) text; null-propagating like pandas str.len."""
     return F.length(_col(c)).cast("long")

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from llm_pretraining_data_pipeline_spark.functions import minhash_vec
 from llm_pretraining_data_pipeline_spark.functions.hashing import h64, sha256_hex
-from llm_pretraining_data_pipeline_spark.functions.text_norm import ws_tokens
+from llm_pretraining_data_pipeline_spark.functions.text_norm import _let, ws_tokens
 
 __all__ = [
     "ngrams",
@@ -62,14 +62,22 @@ __all__ = [
 
 
 def ngrams(words: Column, n: int) -> Column:
-    """Word n-grams (space-joined) of an array<string>; [] when too short."""
+    """Word n-grams (space-joined) of an array<string>; [] when too short.
+
+    ``words`` is let-bound: it is usually ``ws_tokens(text)``, and a
+    reference inside the per-gram lambda would re-split the whole text
+    for every gram."""
     if n < 1:
         raise ValueError("n must be >= 1")
-    k = F.size(words) - F.lit(n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), k), lambda i: F.array_join(F.slice(words, i, n), " ")
-    )
-    return F.when(k >= 1, grams).otherwise(F.array().cast("array<string>"))
+
+    def build(ws: Column) -> Column:
+        k = F.size(ws) - F.lit(n - 1)
+        grams = F.transform(
+            F.sequence(F.lit(1), k), lambda i: F.array_join(F.slice(ws, i, n), " ")
+        )
+        return F.when(k >= 1, grams).otherwise(F.array().cast("array<string>"))
+
+    return _let(words, build)
 
 
 def _run_stats(grams: Column) -> Column:
@@ -145,19 +153,6 @@ def _nonempty_lines(text: Column) -> Column:
         F.transform(F.split(text, "\n"), lambda l: F.trim(l)),
         lambda l: F.length(l) > 0,
     )
-
-
-def _let(bound: Column, fn) -> Column:
-    """Let-binding for Catalyst expressions: evaluate ``bound`` ONCE and
-    feed it to ``fn`` as a lambda variable.
-
-    Referencing a subexpression twice in a projection duplicates its whole
-    tree (``_run_stats(g)["a"]`` + ``_run_stats(g)["b"]`` runs the scan
-    twice — there is no interpreted-mode CSE, and HOFs are interpreted).
-    ``transform(array(x), fn)[0]`` binds x to a lambda variable instead, so
-    every reference inside ``fn`` reads the one evaluation.
-    """
-    return F.transform(F.array(bound), fn)[0]
 
 
 def _top_ngram_char_frac(text: Column, words: Column, n: int) -> Column:
@@ -655,6 +650,24 @@ def span_dedup(
     )
 
 
+def _window_hashes(words: Column, w: int) -> Column:
+    """h64 of every w-token window's space-joined text, in start order;
+    [] when there are fewer than w tokens. ``words`` is let-bound, as in
+    ``ngrams``, so the per-window lambda does not re-split the text."""
+
+    def build(ws: Column) -> Column:
+        k = F.size(ws) - F.lit(w - 1)
+        return F.when(
+            k >= 1,
+            F.transform(
+                F.sequence(F.lit(1), k),
+                lambda i: h64(F.array_join(F.slice(ws, i, w), " ")),
+            ),
+        ).otherwise(F.array().cast("array<bigint>"))
+
+    return _let(words, build)
+
+
 def _window_dedup_core(
     df: DataFrame,
     text_col: str,
@@ -685,17 +698,9 @@ def _window_dedup_core(
     window order (output identity tested at a 100x-replicated hot key).
     """
     words = ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
-    k = F.size(words) - F.lit(w - 1)
-    win_hashes = F.when(
-        k >= 1,
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: h64(F.array_join(F.slice(words, i, w), " ")),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
 
     wins = df.select(
-        F.col(id_col), F.posexplode(win_hashes).alias("_p0", "_gh")
+        F.col(id_col), F.posexplode(_window_hashes(words, w)).alias("_p0", "_gh")
     ).select(id_col, (F.col("_p0") + 1).alias("start"), "_gh")
 
     if skew_safe:
@@ -1917,11 +1922,12 @@ def repetition_signals_grouped(
     lexicographically-smallest tie-break — and joins the per-size frames
     back on the id.
 
-    MEASURED VERDICT: at 500k docs / local[32] with every row needing all
-    four signals, this loses to the HOF variant 99 s vs 50 s — the two
-    shuffles per gram size move ~85M WIDE gram-string rows (5/10-grams are
-    30-60 chars each), which costs more than interpreting the per-row
-    scans. Kept as the documented-and-rejected alternative (bit-parity
+    MEASURED VERDICT (before ``ngrams`` let-bound its token array, so both
+    variants then re-split the text once per gram): at 500k docs /
+    local[32] with every row needing all four signals, this lost to the
+    HOF variant 99 s vs 50 s — the two shuffles per gram size move ~85M
+    WIDE gram-string rows (5/10-grams are 30-60 chars each), which cost
+    more than interpreting the per-row scans. Kept as the documented-and-rejected alternative (bit-parity
     tested) so the next person doesn't re-derive it; it would win only
     where per-row compute, not shuffle bandwidth, binds (e.g. much longer
     documents, where the HOF sort is O(G log G) per row but the exploded
@@ -2428,12 +2434,13 @@ def gram_novelty(
     row (n_grams_old, n_grams_new, n_novel, novelty_rate 6dp).
     """
     g = F.col(group_col)
-    # Arrow-batched gram hashing (round 15): the former
-    # explode(ngrams(...)) + h64(gram) chain built every gram string
-    # through interpreted HOFs — ~half of the 100k-doc corpus-audit
-    # bench entry; ngram_h64_frame_arrow is hash-identical by
-    # construction (tests/test_minhash_vec.py pins it), so the
-    # distinct/groupBy below see exactly the same 60-bit keys.
+    # Arrow-batched gram hashing (round 15): ngram_h64_frame_arrow is
+    # hash-identical to explode(ngrams(...)) + h64(gram) by construction
+    # (tests/test_minhash_vec.py pins it), so the distinct/groupBy below
+    # see exactly the same 60-bit keys. The "~half of the 100k-doc
+    # corpus-audit bench entry" it saved was measured while ngrams still
+    # re-split the whole text for every gram; the let-bound ngrams no
+    # longer pays that, and the two have not been re-measured since.
     grams = (
         minhash_vec.ngram_h64_frame_arrow(
             df.filter(g.isin([old_group, new_group])).select(

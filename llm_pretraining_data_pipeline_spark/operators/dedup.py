@@ -316,11 +316,12 @@ def _minhash_sig_frame(
 
     ``vectorized=True`` (default, round 15): ONE Arrow pass per
     partition over the JVM-tokenised array (``minhash_vec`` — the
-    shingle join + md5 + affine-min fold in C-speed Python; measured
-    ~7x the Catalyst chain at the 500k-doc bench shape, because the
-    shingle-string HOFs are CodegenFallback). Bit-parity with the
-    Catalyst chain is pinned by tests/test_minhash_vec.py; the DuckDB
-    referee backs both.
+    shingle join + md5 + affine-min fold in C-speed Python; ~1.8x the
+    Catalyst chain at 2,500 docs on local[2], whose shingle-string HOFs
+    are CodegenFallback. The round-15 "~7x" was measured while
+    ``token_shingles`` still re-split the text per shingle). Bit-parity
+    with the Catalyst chain is pinned by tests/test_minhash_vec.py; the
+    DuckDB referee backs both.
 
     ``vectorized=False`` is the zero-Python Catalyst chain: one fold
     over the hashed shingles per row, behind a Generate-node barrier
@@ -587,24 +588,18 @@ def _shingle_df_candidates(
     )
 
 
-def ngram_jaccard_pairs(
+def _shingle_set_pairs(
     df: DataFrame,
     text_col: str,
-    id_col: str = "doc_id",
-    shingle_size: int = 3,
-    threshold: float = 0.8,
-    candidates: DataFrame | None = None,
-    max_shingle_df: int | None = None,
+    id_col: str,
+    shingle_size: int,
+    candidates: DataFrame | None,
+    max_shingle_df: int | None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity pairs (id_a < id_b, jaccard >= threshold).
-
-    Without ``candidates`` this is the brute-force shingle-inverted-index
-    join (fine to sf0.1); with a candidates frame (e.g. from LSH) it verifies
-    only those pairs — the scale path. ``max_shingle_df`` switches the
-    self-generated candidates to the DF-capped one-shuffle index
-    (``_shingle_df_candidates``) — the stop-shingle guard for corpora with
-    hot boilerplate n-grams.
-    """
+    """``(id_a, id_b, set_a, set_b)`` per candidate pair, the sets being each
+    doc's distinct shingles: the shared front half of ``ngram_jaccard_pairs``
+    and ``ngram_containment_pairs``. Candidates come from ``candidates``, else
+    the DF-capped index, else the brute-force shingle self-join."""
     shingle_sets = _spread_small_input(df).select(
         F.col(id_col).alias("_id"),
         F.array_distinct(hashing.token_shingles(text_col, shingle_size)).alias("_set"),
@@ -628,7 +623,30 @@ def ngram_jaccard_pairs(
 
     a_sets = shingle_sets.select(F.col("_id").alias("id_a"), F.col("_set").alias("set_a"))
     b_sets = shingle_sets.select(F.col("_id").alias("id_b"), F.col("_set").alias("set_b"))
-    joined = cand.join(a_sets, "id_a").join(b_sets, "id_b")
+    return cand.join(a_sets, "id_a").join(b_sets, "id_b")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str = "doc_id",
+    shingle_size: int = 3,
+    threshold: float = 0.8,
+    candidates: DataFrame | None = None,
+    max_shingle_df: int | None = None,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity pairs (id_a < id_b, jaccard >= threshold).
+
+    Without ``candidates`` this is the brute-force shingle-inverted-index
+    join (fine to sf0.1); with a candidates frame (e.g. from LSH) it verifies
+    only those pairs — the scale path. ``max_shingle_df`` switches the
+    self-generated candidates to the DF-capped one-shuffle index
+    (``_shingle_df_candidates``) — the stop-shingle guard for corpora with
+    hot boilerplate n-grams.
+    """
+    joined = _shingle_set_pairs(
+        df, text_col, id_col, shingle_size, candidates, max_shingle_df
+    )
     inter = F.size(F.array_intersect("set_a", "set_b"))
     union = F.size("set_a") + F.size("set_b") - inter
     jac = F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
@@ -671,30 +689,9 @@ def ngram_containment_pairs(
     always at least one rare one. A pre-pruned ``candidates`` frame is
     still accepted for composition.
     """
-    shingle_sets = _spread_small_input(df).select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(hashing.token_shingles(text_col, shingle_size)).alias("_set"),
-    ).filter(F.size("_set") > 0)
-
-    if candidates is not None:
-        cand = candidates.select("id_a", "id_b")
-    elif max_shingle_df is not None:
-        cand = _shingle_df_candidates(shingle_sets, max_shingle_df)
-    else:
-        exploded = shingle_sets.select("_id", F.explode("_set").alias("_sh"))
-        cand = (
-            exploded.alias("a")
-            .join(
-                exploded.alias("b"),
-                (F.col("a._sh") == F.col("b._sh")) & (F.col("a._id") < F.col("b._id")),
-            )
-            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-            .distinct()
-        )
-
-    a_sets = shingle_sets.select(F.col("_id").alias("id_a"), F.col("_set").alias("set_a"))
-    b_sets = shingle_sets.select(F.col("_id").alias("id_b"), F.col("_set").alias("set_b"))
-    joined = cand.join(a_sets, "id_a").join(b_sets, "id_b")
+    joined = _shingle_set_pairs(
+        df, text_col, id_col, shingle_size, candidates, max_shingle_df
+    )
     inter = F.size(F.array_intersect("set_a", "set_b"))
     ca = inter.cast("double") / F.size("set_a").cast("double")
     cb = inter.cast("double") / F.size("set_b").cast("double")

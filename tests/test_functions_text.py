@@ -393,6 +393,54 @@ class TestHashing:
         assert rows[1].s == ["a b"]
         assert rows[2].s == []
 
+    # A token array referenced inside a per-gram lambda is re-split for
+    # every gram (no subexpression sharing in lambdas): quadratic in doc
+    # length. Each builder must let-bind it, so the plan splits once.
+    @pytest.mark.parametrize(
+        "builder", ["token_shingles", "ngrams", "window_hashes", "adjacent_pairs"]
+    )
+    def test_ngram_builders_split_text_once(self, spark, builder):
+        from llm_pretraining_data_pipeline_spark.functions import lm
+        from llm_pretraining_data_pipeline_spark.operators import corpus
+
+        toks = text_norm.ws_tokens(F.col("t"))
+        expr = {
+            "token_shingles": lambda: hashing.token_shingles("t", 3),
+            "ngrams": lambda: corpus.ngrams(toks, 5),
+            "window_hashes": lambda: corpus._window_hashes(toks, 5),
+            "adjacent_pairs": lambda: lm._adjacent_pairs(toks),
+        }[builder]()
+        assert str(expr).count("split(") == 1, str(expr)
+
+    @pytest.mark.parametrize("n", [1, 3])
+    def test_ngram_builders_edge_values(self, spark, n):
+        import hashlib
+
+        from llm_pretraining_data_pipeline_spark.operators import corpus
+
+        texts = [
+            None, "", "solo", "a b", "a b c d",
+            "x\u00a0y\u2003z\u3000w\x1cv", "the cat sat on the mat",
+        ]
+        df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+        toks = text_norm.ws_tokens(F.coalesce(F.col("t"), F.lit("")))
+        rows = df.select(
+            "i",
+            hashing.token_shingles("t", n).alias("sh"),
+            corpus.ngrams(toks, n).alias("ng"),
+            corpus._window_hashes(toks, n).alias("wh"),
+        ).orderBy("i").collect()
+        for r, t in zip(rows, texts):
+            words = (t or "").split()
+            grams = [" ".join(words[i:i + n]) for i in range(len(words) - n + 1)]
+            assert r.ng == grams, t
+            assert r.wh == [
+                int(hashlib.md5(g.encode()).hexdigest()[:15], 16) for g in grams
+            ], t
+            # shorter-than-n texts shingle as their whole (re-joined) text
+            whole = [" ".join(words)] if words else []
+            assert r.sh == (grams if len(words) >= n else whole), t
+
     def test_minhash_signature_properties(self, spark):
         df = spark.createDataFrame(
             [(1, "the quick brown fox jumps over the lazy dog"),

@@ -37,19 +37,36 @@ STORED_INDEX_FAMILY = [
 ]
 
 
-def test_stored_index_family_matches_oracle(spark, sf_dir):
+def _assert_family_matches_oracle(spark, sf_dir, names):
     from check_oracle import run_checks
 
-    results = run_checks(
-        names=STORED_INDEX_FAMILY, sf_dir=sf_dir, spark=spark, verbose=False
-    )
-    assert [r[0] for r in results] == STORED_INDEX_FAMILY
+    results = run_checks(names=names, sf_dir=sf_dir, spark=spark, verbose=False)
+    assert [r[0] for r in results] == names
     failures = [
         f"{name}: {status} {detail}"
         for name, status, _, detail in results
         if status != "OK"
     ]
     assert not failures, "\n".join(failures)
+
+
+def test_stored_index_family_matches_oracle(spark, sf_dir):
+    _assert_family_matches_oracle(spark, sf_dir, STORED_INDEX_FAMILY)
+
+
+# the Catalyst n-gram builders (token_shingles, corpus.ngrams, the
+# span-dedup window hash): verify, containment, winnowing and the
+# repetition / cross-doc / span signals built on them. d08 and d17 stay
+# in the slowtier replay: their DuckDB MinHash oracles take ~35-40 s
+# each even at sf0.001.
+NGRAM_FAMILY = [
+    "d04_ngram_jaccard_pairs", "d16_containment_pairs", "d21_winnowing",
+    "corp_rep_signals", "corp_cross_dup_ngrams", "corp_span_dedup",
+]
+
+
+def test_ngram_family_matches_oracle(spark, sf_dir):
+    _assert_family_matches_oracle(spark, sf_dir, NGRAM_FAMILY)
 
 
 def test_entry_smoke(spark):
