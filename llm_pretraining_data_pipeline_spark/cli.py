@@ -47,10 +47,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args(argv)
 
+    from pyspark.sql import functions as F
+
     from llm_pretraining_data_pipeline_spark.operators import reporting, sharding
-    from llm_pretraining_data_pipeline_spark.operators.aggregates import (
-        drop_reason_counts,
-    )
     from llm_pretraining_data_pipeline_spark.plans import exports
     from llm_pretraining_data_pipeline_spark.plans import pipeline as P
     from llm_pretraining_data_pipeline_spark.session import get_spark
@@ -73,23 +72,36 @@ def main(argv: list[str] | None = None) -> int:
     else:
         result = P.run_pipeline(raw, cfg)
     result = result.cache()
-
-    os.makedirs(args.out, exist_ok=True)
-    result.write.mode("overwrite").parquet(f"{args.out}/final.parquet")
-    if args.hashed_shards > 0:
-        kept = sharding.assign_shards_hashed(
-            P.kept(result), num_shards=args.hashed_shards
-        )
-    else:
-        kept = sharding.assign_shards(
-            P.kept(result), docs_per_shard=args.docs_per_shard
-        )
-    manifest = exports.write_sharded_jsonl(kept, f"{args.out}/train_shards")
-    exports.write_manifest(manifest, f"{args.out}/manifest.json")
-    exports.write_text_jsonl(P.kept(result), f"{args.out}/text.jsonl")
-    src.write_csv_report(drop_reason_counts(result), f"{args.out}/drop_reason_counts.csv")
-
-    summary = reporting.metrics_summary(result)
+    try:
+        os.makedirs(args.out, exist_ok=True)
+        result.write.mode("overwrite").parquet(f"{args.out}/final.parquet")
+        if args.hashed_shards > 0:
+            kept = sharding.assign_shards_hashed(
+                P.kept(result), num_shards=args.hashed_shards
+            )
+        else:
+            kept = sharding.assign_shards(
+                P.kept(result), docs_per_shard=args.docs_per_shard
+            )
+        manifest = exports.write_sharded_jsonl(kept, f"{args.out}/train_shards")
+        exports.write_manifest(manifest, f"{args.out}/manifest.json")
+        exports.write_text_jsonl(P.kept(result), f"{args.out}/text.jsonl")
+        summary = reporting.metrics_summary(result)
+    finally:
+        # the cache is keyed by plan: left in place, a later run over the
+        # same input path in this JVM would be served these rows
+        result.unpersist()
+    # drop_reason_counts(result)'s rows and order, from the summary's counts;
+    # literals, not a Python-list frame, which would start Python workers
+    counts = F.array(*[
+        F.struct(F.lit(r), F.lit(n)) for r, n in summary["drop_reasons"].items()
+    ])
+    src.write_csv_report(
+        spark.range(1).select(
+            F.inline(counts.cast("array<struct<drop_reason:string,count:bigint>>"))
+        ),
+        f"{args.out}/drop_reason_counts.csv",
+    )
     summary["wall_seconds"] = round(time.time() - t0, 2)
     with open(f"{args.out}/metrics_summary.json", "w") as f:
         json.dump(summary, f, indent=2, default=str)

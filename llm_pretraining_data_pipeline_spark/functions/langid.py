@@ -96,19 +96,6 @@ CHAR_TRIGRAM_PROFILES: dict[str, list[str]] = {
 }
 
 
-def char_trigrams(c: Column | str) -> Column:
-    """Sliding character trigrams of the lowercased, space-padded text."""
-    s = F.concat(
-        F.lit(" "), F.lower(F.coalesce(_col(c).cast("string"), F.lit(""))), F.lit(" ")
-    )
-    return F.when(F.length(s) < 3, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.length(s) - F.lit(2)),
-            lambda i: F.substr(s, i, F.lit(3)),
-        )
-    )
-
-
 def trigram_evidence(c: Column | str, lang: str) -> Column:
     """Unclipped trigram evidence: profile-coverage fraction × 5. Natural
     prose hits ~0.15-0.35 of the top-40 profile (evidence 0.75-1.75);
@@ -116,11 +103,12 @@ def trigram_evidence(c: Column | str, lang: str) -> Column:
 
     Implemented as ONE JVM regex scan per language: a zero-width lookahead
     alternation ``(?=(g1|g2|...))`` counts every position where a profile
-    trigram starts — overlapping occurrences included — which is exactly
-    ``size(filter(char_trigrams(s), g -> g ∈ profile))``, but stays inside
-    whole-stage codegen. The HOF formulation (transform+filter per language,
-    interpreted, re-evaluated per reference — no CSE for lambda bodies) made
-    langid_struct(use_trigrams=True) ~20× slower in the pipeline hot path.
+    trigram starts — overlapping occurrences included — which is exactly the
+    number of the padded text's sliding character trigrams that are in the
+    profile, but stays inside whole-stage codegen. The HOF formulation
+    (transform+filter per language, interpreted, re-evaluated per reference —
+    no CSE for lambda bodies) made langid_struct(use_trigrams=True) ~20×
+    slower in the pipeline hot path.
     """
     pat = "(?=(" + "|".join(_re.escape(g) for g in CHAR_TRIGRAM_PROFILES[lang]) + "))"
     s = F.concat(

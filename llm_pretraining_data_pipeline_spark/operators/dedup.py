@@ -29,6 +29,7 @@ from llm_pretraining_data_pipeline_spark.functions.text_norm import (
     canonicalize_for_exact,
     canonicalize_for_near,
 )
+from llm_pretraining_data_pipeline_spark.operators.skew import spread_small_input
 
 
 def _first_in_group(df: DataFrame, key: str, order_col: str) -> tuple[Column, Column]:
@@ -282,25 +283,6 @@ def dedup_stage(
 # ----------------------------------------------------------------- at scale
 
 
-def _spread_small_input(df: DataFrame) -> DataFrame:
-    """Repartition to default parallelism when the scan has fewer splits.
-
-    The signature/bucket computations below are per-row CPU-heavy; a small
-    parquet input (one file < maxPartitionBytes → one split) would otherwise
-    run them on a single core. At 100 TB the scan already has orders of
-    magnitude more splits than cores and this is a no-op — the conditional
-    keeps the scale path shuffle-free. Plan inspection only (no job is run).
-    """
-    try:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        nparts = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - non-standard sessions
-        return df
-    if 0 < nparts < target:
-        return df.repartition(target)
-    return df
-
-
 def _minhash_sig_frame(
     df: DataFrame,
     text_col: str,
@@ -333,7 +315,7 @@ def _minhash_sig_frame(
     mod 2^31-1) and are filtered AFTER the opaque stage / barrier —
     pushing the predicate below the spread repartition would re-run
     the whole hash pass on the unspread input partitions."""
-    df = _spread_small_input(df)
+    df = spread_small_input(df)
     if vectorized:
         base = minhash_vec.minhash_sig_frame_arrow(
             df, text_col, id_col=id_col, shingle_size=shingle_size,
@@ -600,7 +582,7 @@ def _shingle_set_pairs(
     doc's distinct shingles: the shared front half of ``ngram_jaccard_pairs``
     and ``ngram_containment_pairs``. Candidates come from ``candidates``, else
     the DF-capped index, else the brute-force shingle self-join."""
-    shingle_sets = _spread_small_input(df).select(
+    shingle_sets = spread_small_input(df).select(
         F.col(id_col).alias("_id"),
         F.array_distinct(hashing.token_shingles(text_col, shingle_size)).alias("_set"),
     ).filter(F.size("_set") > 0)
@@ -720,7 +702,7 @@ def simhash_pairs(
     Returns id_a, id_b, hamming.
     """
     bits_per_band = 32 // bands
-    sigs = _spread_small_input(df).select(
+    sigs = spread_small_input(df).select(
         F.col(id_col).alias("_id"), hashing.simhash32(text_col).alias("_sh")
     )
     # Generate-node barrier: the per-band arithmetic below references _sh
@@ -845,7 +827,7 @@ def embedding_near_dup_pairs(
             "is no bucketing and the call would silently run the O(N²) "
             "brute-force pair join"
         )
-    vecs = _spread_small_input(df).select(
+    vecs = spread_small_input(df).select(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
     )
@@ -2426,7 +2408,7 @@ def semdedup(
     # per-round localCheckpoint.)
     assigned = assigned.persist()
     vecs = (
-        _spread_small_input(df)
+        spread_small_input(df)
         .select(
             F.col(id_col).alias("_id"),
             F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),

@@ -8,7 +8,10 @@ availability (aggregates are the contract; plots are presentation).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections import Counter
+
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from llm_pretraining_data_pipeline_spark.operators.aggregates import (
@@ -17,71 +20,87 @@ from llm_pretraining_data_pipeline_spark.operators.aggregates import (
 )
 
 
-def _stats_block(df: DataFrame, col: str) -> dict:
-    row = df.agg(
-        F.count(col).alias("count"),
-        F.avg(col).alias("mean"),
-        F.min(col).alias("min"),
-        F.expr(f"median({col})").alias("median"),
-        F.max(col).alias("max"),
-    ).collect()[0]
-    return {
-        "count": int(row["count"] or 0),
-        "mean": float(row["mean"]) if row["mean"] is not None else None,
-        "min": float(row["min"]) if row["min"] is not None else None,
-        "median": float(row["median"]) if row["median"] is not None else None,
-        "max": float(row["max"]) if row["max"] is not None else None,
-    }
+def _stats_aggs(col: str, kept: Column) -> list[Column]:
+    """count/mean/min/exact median/max of ``col`` over the kept rows, as
+    columns of a global aggregation (nulls, i.e. dropped rows, are skipped)."""
+    v = F.when(kept, F.col(col))
+    return [
+        F.count(v).alias(f"{col}.count"),
+        F.avg(v).alias(f"{col}.mean"),
+        F.min(v).alias(f"{col}.min"),
+        F.median(v).alias(f"{col}.median"),
+        F.max(v).alias(f"{col}.max"),
+    ]
+
+
+def _stats_block(row: dict, col: str) -> dict:
+    def num(stat: str) -> float | None:
+        v = row[f"{col}.{stat}"]
+        return None if v is None else float(v)
+
+    return {"count": int(row[f"{col}.count"] or 0), "mean": num("mean"),
+            "min": num("min"), "median": num("median"), "max": num("max")}
+
+
+def _by_count(counts: dict) -> dict:
+    """Count-descending, then by name — ``drop_reason_counts``' order."""
+    return dict(sorted(counts.items(), key=lambda kv: (-kv[1], kv[0] or "")))
 
 
 def metrics_summary(result: DataFrame) -> dict:
     """Reference-shaped run summary from the fused pipeline result frame.
 
-    One cache + a handful of aggregation jobs; mirrors the blocks of
-    reports/metrics_summary.json (stage counts, n_tokens distribution,
-    quality/subset distribution, PII totals, drop reasons).
+    Mirrors the blocks of reports/metrics_summary.json (stage counts,
+    n_tokens distribution, quality/subset distribution, PII totals, drop
+    reasons) in two aggregations: one global ``agg`` over every row (the
+    kept-row blocks are ``when(kept, ...)`` columns, the median exact), and
+    one ``groupBy(drop_reason, subset, lang).count()`` that the driver folds
+    into the subsets, lang and drop_reasons blocks, each ordered by count
+    descending, then name. A frame the caller has not cached is cached for
+    the two and unpersisted after; a cached one is left cached.
     """
-    result = result.cache()
-    kept = result.filter(F.col("drop_reason").isNull())
+    owned = result.storageLevel == StorageLevel.NONE
+    if owned:
+        result = result.cache()
+    try:
+        kept = F.col("drop_reason").isNull()
+        pii = {"email": "pii_email_hits", "phone": "pii_phone_hits",
+               "cc": "pii_cc_hits", "iban": "pii_iban_hits"}
+        row = result.agg(
+            F.count(F.lit(1)).alias("input"),
+            F.count_if(kept).alias("kept"),
+            *_stats_aggs("n_tokens", kept),
+            F.sum(F.when(kept, F.col("n_tokens"))).alias("n_tokens.total"),
+            *_stats_aggs("quality_score", kept),
+            *[F.sum(F.when(kept, F.col(c))).alias(k) for k, c in pii.items()],
+            F.count_if(kept & F.col("has_pii")).alias("docs_with_pii"),
+        ).collect()[0].asDict()
+        groups = result.groupBy("drop_reason", "subset", "lang").count().collect()
+    finally:
+        if owned:
+            result.unpersist()
 
-    summary: dict = {}
-    totals = result.agg(
-        F.count(F.lit(1)).alias("input_docs"),
-        F.count_if(F.col("drop_reason").isNull()).alias("kept_docs"),
-    ).collect()[0]
-    summary["docs"] = {
-        "input": int(totals.input_docs),
-        "kept": int(totals.kept_docs),
-        "dropped": int(totals.input_docs - totals.kept_docs),
+    subsets, langs, drops = Counter(), Counter(), Counter()
+    for g in groups:
+        if g["drop_reason"] is None:
+            subsets[g["subset"]] += g["count"]
+            langs[g["lang"]] += g["count"]
+        else:
+            drops[g["drop_reason"]] += g["count"]
+    return {
+        "docs": {
+            "input": int(row["input"]),
+            "kept": int(row["kept"]),
+            "dropped": int(row["input"] - row["kept"]),
+        },
+        "n_tokens": {**_stats_block(row, "n_tokens"),
+                     "total": int(row["n_tokens.total"] or 0)},
+        "quality_score": _stats_block(row, "quality_score"),
+        "subsets": _by_count(subsets),
+        "lang": _by_count(langs),
+        "pii": {k: int(row[k] or 0) for k in (*pii, "docs_with_pii")},
+        "drop_reasons": _by_count(drops),
     }
-    summary["n_tokens"] = _stats_block(kept, "n_tokens")
-    summary["n_tokens"]["total"] = int(
-        kept.agg(F.sum("n_tokens")).collect()[0][0] or 0
-    )
-    summary["quality_score"] = _stats_block(kept, "quality_score")
-    summary["subsets"] = {
-        r.subset: int(r.cnt)
-        for r in kept.groupBy("subset").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    summary["lang"] = {
-        r.lang: int(r.cnt)
-        for r in kept.groupBy("lang").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    summary["pii"] = {
-        k: int(v or 0)
-        for k, v in kept.agg(
-            F.sum("pii_email_hits").alias("email"),
-            F.sum("pii_phone_hits").alias("phone"),
-            F.sum("pii_cc_hits").alias("cc"),
-            F.sum("pii_iban_hits").alias("iban"),
-            F.count_if(F.col("has_pii")).alias("docs_with_pii"),
-        ).collect()[0].asDict().items()
-    }
-    summary["drop_reasons"] = {
-        r["drop_reason"]: int(r["count"]) for r in drop_reason_counts(result).collect()
-    }
-    result.unpersist()
-    return summary
 
 
 # The reference's full render set (plots_charts.py:144-259): 9 metric

@@ -1,6 +1,6 @@
-"""Skew & co-location utilities for the 100 TB path.
+"""Skew, co-location & spread utilities for the 100 TB path.
 
-Three standard techniques, each with its trade-off documented:
+Three standard techniques against skew, each with its trade-off documented:
 
   * AQE skew-join splitting — free, on by default (session.py); handles
     skewed SHUFFLE joins at runtime. First choice.
@@ -10,6 +10,9 @@ Three standard techniques, each with its trade-off documented:
     R sub-keys.
   * bucketed tables (``write_bucketed``) — pre-shuffle once at write time so
     every later equi-join/agg on the bucket key runs exchange-free.
+
+And the opposite case, too few partitions rather than an uneven spread:
+``spread_small_input`` deals a small input out over every core.
 """
 
 from __future__ import annotations
@@ -53,3 +56,27 @@ def write_bucketed(
     if sort_by:
         writer = writer.sortBy(sort_by)
     writer.saveAsTable(table_name)
+
+
+def spread_small_input(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over ``defaultParallelism`` partitions when its
+    plan has fewer; otherwise return it unchanged.
+
+    A small file (under ``maxPartitionBytes`` / ``openCostInBytes``) scans
+    as one split, so the per-row CPU work above it would run on one core.
+    Two callers spread such an input before that work: the pipeline's
+    ``ingest`` (for the text chain of stages 2-4, after it has fixed
+    ``row_order``) and ``operators.dedup``'s per-doc signature paths
+    (MinHash, shingle sets, SimHash, embeddings). At 100 TB the scan
+    already has far more splits than cores and this is a no-op, so the
+    scale path stays shuffle-free and there is no knob. Plan inspection
+    only: no job is run.
+    """
+    try:
+        target = df.sparkSession.sparkContext.defaultParallelism
+        nparts = df.rdd.getNumPartitions()
+    except Exception:  # pragma: no cover - non-standard sessions
+        return df
+    if 0 < nparts < target:
+        return df.repartition(target)
+    return df

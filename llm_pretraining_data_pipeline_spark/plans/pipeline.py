@@ -4,7 +4,8 @@ Reference orchestration: run_pipeline.py:24-49 — eight subprocesses passing
 parquet files. Here every stage is a pure ``DataFrame -> DataFrame`` function
 returning an *unexecuted* plan; ``run_pipeline`` composes them lazily so
 Catalyst fuses the whole pipeline (one scan, one projection chain, shuffles
-only at dedup/shard), while ``run_pipeline_checkpointed`` writes the same
+only at dedup/shard, plus ingest's round-robin spread of an input with
+fewer splits than cores), while ``run_pipeline_checkpointed`` writes the same
 per-stage parquet boundaries the reference has when inspectability matters.
 
 Stage map (reference file : our stage function):
@@ -38,6 +39,7 @@ from llm_pretraining_data_pipeline_spark.functions import (
 from llm_pretraining_data_pipeline_spark.operators import dedup as dedup_ops
 from llm_pretraining_data_pipeline_spark.operators import sharding as shard_ops
 from llm_pretraining_data_pipeline_spark.operators.rules import apply_rules
+from llm_pretraining_data_pipeline_spark.operators.skew import spread_small_input
 
 
 @dataclass
@@ -101,8 +103,12 @@ def ingest(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
 
     row_order uses monotonically_increasing_id (partition-prefixed, stable
     for a given input split) — the distributed stand-in for the pandas index.
+    It is fixed on the scan's own splits, BEFORE ``spread_small_input``
+    deals a small input (fewer splits than cores) round-robin over every
+    core for the text chain: row_order, doc_id, and so every canonical
+    choice and shard position, are the same with or without the spread.
     """
-    return (
+    return spread_small_input(
         df.withColumn("doc_id", hashing.make_doc_id("url", "text"))
         .withColumn("source", F.lit(cfg.source_name))
         .withColumn("ingest_ts", F.current_timestamp())

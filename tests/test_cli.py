@@ -73,3 +73,57 @@ def test_cli_hashed_shards(spark, tmp_path):
     assert 1 <= len(shard_dirs) <= 4
     assert man["total_docs"] == sum(s["num_docs"] for s in man["shards"])
     assert {int(d.split("=")[1]) for d in shard_dirs} <= {0, 1, 2, 3}
+
+
+def _write_docs(path, docs):
+    path.write_text("".join(json.dumps({"url": u, "text": t}) + "\n" for u, t in docs))
+
+
+_STORY = ("the story number {} tells of the river and the boats that sailed "
+          "past the village in the warm evening light of summer")
+
+
+def test_cli_drop_reason_csv_matches_counts(spark, tmp_path):
+    """drop_reason_counts.csv, written from the summary's counts, has the
+    bytes drop_reason_counts() gives over final.parquet: the same header,
+    rows and count-descending, then-name order (ties included)."""
+    from llm_pretraining_data_pipeline_spark import cli
+    from llm_pretraining_data_pipeline_spark.operators.aggregates import (
+        drop_reason_counts,
+    )
+    from llm_pretraining_data_pipeline_spark.sources.io import write_csv_report
+
+    docs = [(f"http://t/{i}", _STORY.format(i)) for i in range(20)]
+    docs += [(f"http://dup/{i}", _STORY.format(0)) for i in range(3)]  # exact_duplicate
+    docs += [(f"http://short/{i}", "tiny") for i in range(3)]  # too_short_chars
+    docs += [("http://num/0", "1234.5678")]  # numeric_like
+    _write_docs(tmp_path / "in.jsonl", docs)
+    out = tmp_path / "out"
+    assert cli.main(["--input", str(tmp_path / "in.jsonl"), "--out", str(out),
+                     "--no-nfkc", "--no-lang-filter"]) == 0
+    final = spark.read.parquet(str(out / "final.parquet"))
+    write_csv_report(drop_reason_counts(final), str(tmp_path / "expected.csv"))
+
+    def csv_bytes(d):
+        (name,) = [f for f in os.listdir(d) if f.endswith(".csv")]
+        return open(os.path.join(d, name), "rb").read()
+
+    got = csv_bytes(out / "drop_reason_counts.csv")
+    assert got == csv_bytes(tmp_path / "expected.csv")
+    assert got.decode().splitlines() == [
+        "drop_reason,count", "exact_duplicate,3", "too_short_chars,3", "numeric_like,1",
+    ]
+
+
+def test_cli_rerun_on_same_path_reads_new_input(spark, tmp_path):
+    """The CLI frees its cached result: a second run over the same input
+    path in the same JVM, after the file changed, sees the new rows."""
+    from llm_pretraining_data_pipeline_spark import cli
+
+    inp, out = tmp_path / "in.jsonl", tmp_path / "out"
+    args = ["--input", str(inp), "--out", str(out), "--no-nfkc", "--no-lang-filter"]
+    for n in (12, 7):
+        _write_docs(inp, [(f"http://t/{i}", _STORY.format(i)) for i in range(n)])
+        assert cli.main(args) == 0
+        with open(out / "metrics_summary.json") as f:
+            assert json.load(f)["docs"]["input"] == n

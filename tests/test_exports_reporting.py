@@ -4,6 +4,7 @@ import json
 import os
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from llm_pretraining_data_pipeline_spark.operators import reporting, sharding
@@ -23,6 +24,27 @@ def pipeline_result(spark):
     ).cache()
     yield out
     out.unpersist()
+
+
+def _summary_frame(spark):
+    """3 kept and 7 dropped rows with every column metrics_summary reads;
+    the dropped rows' values must not reach the kept-row blocks."""
+    kept = [
+        (None, "high_quality", "en", 10, 0.9, 1, 0, 0, 0, True),
+        (None, "rest", "en", 20, 0.5, 0, 2, 0, 0, True),
+        (None, "rest", "de", 30, 0.6, 0, 0, 0, 0, False),
+    ]
+    dropped = [
+        (reason, "rest", "fr", 99, 0.1, 5, 5, 5, 5, True)
+        for reason, n in (("near_duplicate", 2), ("too_long", 3), ("exact_duplicate", 2))
+        for _ in range(n)
+    ]
+    return spark.createDataFrame(
+        kept + dropped,
+        "drop_reason string, subset string, lang string, n_tokens int, "
+        "quality_score double, pii_email_hits int, pii_phone_hits int, "
+        "pii_cc_hits int, pii_iban_hits int, has_pii boolean",
+    )
 
 
 class TestExports:
@@ -76,6 +98,47 @@ class TestReporting:
         assert sum(s["subsets"].values()) == s["docs"]["kept"]
         assert sum(s["drop_reasons"].values()) == s["docs"]["dropped"]
         assert set(s["pii"]) == {"email", "phone", "cc", "iban", "docs_with_pii"}
+
+    def test_metrics_summary_leaves_callers_cache(self, spark):
+        df = _summary_frame(spark).cache()
+        try:
+            reporting.metrics_summary(df)
+            assert df.is_cached
+            assert df.storageLevel != StorageLevel.NONE
+        finally:
+            df.unpersist()
+
+    def test_metrics_summary_two_aggregations(self, spark):
+        """An uncached frame: cached for the summary's two aggregations and
+        freed after, in at most 6 jobs (AQE runs each shuffle map stage as
+        its own job); every block's keys are in count-descending, then
+        name order."""
+        df = _summary_frame(spark)
+        sc = spark.sparkContext
+        sc.setJobGroup("metrics_summary", "metrics_summary")
+        try:
+            s = reporting.metrics_summary(df)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        assert len(sc.statusTracker().getJobIdsForGroup("metrics_summary")) <= 6
+        assert df.storageLevel == StorageLevel.NONE
+        assert s == {
+            "docs": {"input": 10, "kept": 3, "dropped": 7},
+            "n_tokens": {"count": 3, "mean": 20.0, "min": 10.0, "median": 20.0,
+                         "max": 30.0, "total": 60},
+            "quality_score": {"count": 3, "mean": pytest.approx(2.0 / 3),
+                              "min": 0.5, "median": 0.6, "max": 0.9},
+            "subsets": {"rest": 2, "high_quality": 1},
+            "lang": {"en": 2, "de": 1},
+            "pii": {"email": 1, "phone": 2, "cc": 0, "iban": 0, "docs_with_pii": 2},
+            "drop_reasons": {"too_long": 3, "exact_duplicate": 2, "near_duplicate": 2},
+        }
+        assert (list(s["subsets"]), list(s["lang"]), list(s["drop_reasons"])) == (
+            ["rest", "high_quality"], ["en", "de"],
+            ["too_long", "exact_duplicate", "near_duplicate"],
+        )
 
     def test_histogram_render_gated(self, pipeline_result, tmp_path):
         paths = reporting.render_histograms(

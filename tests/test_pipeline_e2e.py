@@ -116,6 +116,31 @@ def result(spark):
     out.unpersist()
 
 
+def test_ingest_spreads_one_split_input(spark, tmp_path, monkeypatch):
+    """A one-split input leaves ingest dealt over defaultParallelism
+    partitions, with exactly the doc_id and row_order of the unspread
+    ingest (row_order is fixed on the scan's split, before the spread)."""
+    import json
+
+    from llm_pretraining_data_pipeline_spark.sources import io as src
+
+    path = tmp_path / "in.jsonl"
+    path.write_text("".join(json.dumps({"url": u, "text": t}) + "\n" for u, t, _ in CORPUS))
+    raw = src.read_jsonl(spark, str(path))
+    assert raw.rdd.getNumPartitions() == 1
+    spread = P.ingest(raw)
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(P, "spread_small_input", lambda df: df)
+    unspread = P.ingest(raw)
+    assert unspread.rdd.getNumPartitions() == 1
+
+    def ids(df):
+        return sorted(tuple(r) for r in df.select("row_order", "doc_id").collect())
+
+    assert ids(spread) == ids(unspread)
+    assert [r[0] for r in ids(spread)] == list(range(len(CORPUS)))
+
+
 class TestPipelineE2E:
     def test_every_expected_drop_reason(self, result):
         got = {r.url: r.drop_reason for r in result.select("url", "drop_reason").collect()}

@@ -7,6 +7,7 @@ small dimensions broadcast, scans prune columns, top-k avoids global sorts.
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +22,56 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _tree(plan: str) -> list[str]:
+    """Node names of a formatted plan's tree, root first (``Exchange (3)``)."""
+    return [
+        re.sub(r"^[\s+\-*]*", "", line)
+        for line in plan.split("\n\n")[0].splitlines()[1:]
+    ]
+
+
+def _exchanges(plan: str) -> list[str]:
+    """The partitioning of every Exchange node, root first."""
+    args = dict(re.findall(r"\n\((\d+)\) Exchange\n(?:.+\n)*?Arguments: ([^,\n]+)", plan))
+    return [
+        args[re.search(r"\((\d+)\)$", node).group(1)]
+        for node in _tree(plan) if node.startswith("Exchange ")
+    ]
+
+
+def _round_robin(spark) -> str:
+    return f"RoundRobinPartitioning({spark.sparkContext.defaultParallelism})"
+
+
+def _assert_spread_directly_above_scan(spark, plan: str) -> None:
+    """In a linear plan whose bottom Exchange is the round-robin spread,
+    only ingest's projections and the scan lie below it: doc_id and
+    row_order are computed on the scan's own split."""
+    assert _exchanges(plan)[-1] == _round_robin(spark), plan
+    nodes = _tree(plan)
+    bottom = max(i for i, node in enumerate(nodes) if node.startswith("Exchange "))
+    below = nodes[bottom + 1:]
+    assert below[-1].startswith("Scan json"), plan
+    assert all(node.startswith("Project ") for node in below[:-1]), plan
+
+
+def _split_and_one_split_inputs(spark, tmp_path):
+    """The same two docs as a frame split defaultParallelism ways and as a
+    one-split JSONL scan (the CLI's input shape)."""
+    import json
+
+    from llm_pretraining_data_pipeline_spark.sources import io as src
+
+    rows = [("u1", "some text here"), ("u2", "other text there")]
+    split = spark.createDataFrame(rows, "url string, text string")
+    assert split.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    path = tmp_path / "one.jsonl"
+    path.write_text("".join(json.dumps({"url": u, "text": t}) + "\n" for u, t in rows))
+    one = src.read_jsonl(spark, str(path))
+    assert one.rdd.getNumPartitions() == 1
+    return split, one
 
 
 class TestPlanQuality:
@@ -79,26 +130,40 @@ class TestPlanQuality:
         for unused in ("lang", "source", "n_chars"):
             assert unused not in read_schema
 
-    def test_pipeline_has_no_shuffle_before_dedup(self, spark):
-        """Stages 1-4 (ingest through deep-clean) must be one narrow pass —
-        every scalar op fused, zero exchanges until the dedup window."""
+    def test_pipeline_has_no_shuffle_before_dedup(self, spark, tmp_path):
+        """Stages 1-4 (ingest through deep-clean) are one narrow pass over
+        an input split at least defaultParallelism ways — zero exchanges
+        until the dedup window. A one-split input gets exactly one
+        exchange: ingest's round-robin spread, directly above the scan."""
         from llm_pretraining_data_pipeline_spark.plans import pipeline as P
 
-        raw = spark.createDataFrame([("u", "some text here")], "url string, text string")
-        upto_clean = P.deep_clean_pii(
-            P.clean_filter(P.ingest(raw), P.PipelineConfig(use_nfkc=False)),
-        )
-        assert "Exchange" not in plan_of(upto_clean)
+        cfg = P.PipelineConfig(use_nfkc=False)
+        split, one = _split_and_one_split_inputs(spark, tmp_path)
+        plan = plan_of(P.deep_clean_pii(P.clean_filter(P.ingest(split), cfg), cfg))
+        assert _exchanges(plan) == [], plan
 
-    def test_pipeline_dedup_shuffles_exactly_twice(self, spark):
+        plan = plan_of(P.deep_clean_pii(P.clean_filter(P.ingest(one), cfg), cfg))
+        assert _exchanges(plan) == [_round_robin(spark)], plan
+        _assert_spread_directly_above_scan(spark, plan)
+
+    def test_pipeline_dedup_shuffles_exactly_twice(self, spark, tmp_path):
         """The full pipeline's only exchanges are the two dedup windows
-        (exact_hash, near_key) — everything else stays fused."""
+        (exact_hash, near_key) — everything else stays fused — plus, for a
+        one-split input, ingest's spread directly above the scan."""
         from llm_pretraining_data_pipeline_spark.plans import pipeline as P
 
-        raw = spark.createDataFrame([("u", "some text here")], "url string, text string")
-        plan = plan_of(P.run_pipeline(raw, P.PipelineConfig(use_nfkc=False)))
-        # formatted mode prints each node in the tree AND the detail section
-        assert plan.count("- Exchange") == 2, plan
+        cfg = P.PipelineConfig(use_nfkc=False)
+        split, one = _split_and_one_split_inputs(spark, tmp_path)
+        plan = plan_of(P.run_pipeline(split, cfg))
+        exchanges = _exchanges(plan)
+        assert len(exchanges) == 2, plan
+        assert _round_robin(spark) not in exchanges, plan
+
+        plan = plan_of(P.run_pipeline(one, cfg))
+        exchanges = _exchanges(plan)
+        assert len(exchanges) == 3, plan
+        assert exchanges.count(_round_robin(spark)) == 1, plan
+        _assert_spread_directly_above_scan(spark, plan)
 
     def test_semi_join_stays_semi(self, spark, sf_dir):
         plan = plan_of(QUERIES["rel_semi_join"].spark(spark, sf_dir))
