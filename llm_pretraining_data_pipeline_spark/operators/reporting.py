@@ -9,6 +9,8 @@ availability (aggregates are the contract; plots are presentation).
 from __future__ import annotations
 
 from collections import Counter
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
@@ -18,6 +20,20 @@ from llm_pretraining_data_pipeline_spark.operators.aggregates import (
     drop_reason_counts,
     histogram,
 )
+
+
+@contextmanager
+def _cached(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` cached for the block: a frame the caller has not cached is
+    cached here and unpersisted after; a cached one is left cached."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df = df.cache()
+    try:
+        yield df
+    finally:
+        if owned:
+            df.unpersist()
 
 
 def _stats_aggs(col: str, kept: Column) -> list[Column]:
@@ -59,10 +75,7 @@ def metrics_summary(result: DataFrame) -> dict:
     descending, then name. A frame the caller has not cached is cached for
     the two and unpersisted after; a cached one is left cached.
     """
-    owned = result.storageLevel == StorageLevel.NONE
-    if owned:
-        result = result.cache()
-    try:
+    with _cached(result) as result:
         kept = F.col("drop_reason").isNull()
         pii = {"email": "pii_email_hits", "phone": "pii_phone_hits",
                "cc": "pii_cc_hits", "iban": "pii_iban_hits"}
@@ -76,9 +89,6 @@ def metrics_summary(result: DataFrame) -> dict:
             F.count_if(kept & F.col("has_pii")).alias("docs_with_pii"),
         ).collect()[0].asDict()
         groups = result.groupBy("drop_reason", "subset", "lang").count().collect()
-    finally:
-        if owned:
-            result.unpersist()
 
     subsets, langs, drops = Counter(), Counter(), Counter()
     for g in groups:
@@ -157,73 +167,73 @@ def render_report(result: DataFrame, plots_dir: str, reports_dir: str) -> dict:
     reference reads per-stage parquet checkpoints; the fused frame carries
     all stage columns, so kept rows stand in for the stage-N "clean" frames
     and the whole frame for the dropped-row concat. Returns
-    {"plots": [...], "reports": [...]} of written paths.
+    {"plots": [...], "reports": [...]} of written paths. A frame the caller
+    has cached stays cached.
     """
     import json
     import os
 
     os.makedirs(reports_dir, exist_ok=True)
-    result = result.cache()
-    kept = result.filter(F.col("drop_reason").isNull())
-    written: dict = {"plots": [], "reports": []}
+    with _cached(result) as result:
+        kept = result.filter(F.col("drop_reason").isNull())
+        written: dict = {"plots": [], "reports": []}
 
-    # ---- 9 metric histograms + 4 PII bars + summary (matplotlib-gated)
-    written["plots"] += render_histograms(
-        kept, plots_dir,
-        cols=[c for c, _ in REFERENCE_HISTOGRAMS],
-        bins_by_col=dict(REFERENCE_HISTOGRAMS),
-        file_prefix="hist_",
-    )
-    written["plots"] += render_pii_bars(result, plots_dir)
+        # ---- 9 metric histograms + 4 PII bars + summary (matplotlib-gated)
+        written["plots"] += render_histograms(
+            kept, plots_dir,
+            cols=[c for c, _ in REFERENCE_HISTOGRAMS],
+            bins_by_col=dict(REFERENCE_HISTOGRAMS),
+            file_prefix="hist_",
+        )
+        written["plots"] += render_pii_bars(result, plots_dir)
 
-    # ---- metrics.json (plots_charts.py:262-340)
-    metrics: dict = {}
-    for col in ("n_tokens", "lang_score", "quality_score"):
-        if col in kept.columns:
-            metrics[col] = _describe_block(kept, col)
-    if "subset" in kept.columns:
-        metrics["subset_counts"] = {
-            str(r["subset"]): int(r["cnt"])
-            for r in kept.groupBy("subset").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        # ---- metrics.json (plots_charts.py:262-340)
+        metrics: dict = {}
+        for col in ("n_tokens", "lang_score", "quality_score"):
+            if col in kept.columns:
+                metrics[col] = _describe_block(kept, col)
+        if "subset" in kept.columns:
+            metrics["subset_counts"] = {
+                str(r["subset"]): int(r["cnt"])
+                for r in kept.groupBy("subset").agg(F.count(F.lit(1)).alias("cnt")).collect()
+            }
+        totals = result.agg(
+            F.count(F.lit(1)).alias("input_rows"),
+            F.count_if(F.col("drop_reason").isNull()).alias("kept_rows"),
+        ).collect()[0]
+        metrics["counts"] = {
+            "input_rows": int(totals["input_rows"]),
+            "kept_rows": int(totals["kept_rows"]),
+            "dropped_rows": int(totals["input_rows"] - totals["kept_rows"]),
         }
-    totals = result.agg(
-        F.count(F.lit(1)).alias("input_rows"),
-        F.count_if(F.col("drop_reason").isNull()).alias("kept_rows"),
-    ).collect()[0]
-    metrics["counts"] = {
-        "input_rows": int(totals["input_rows"]),
-        "kept_rows": int(totals["kept_rows"]),
-        "dropped_rows": int(totals["input_rows"] - totals["kept_rows"]),
-    }
-    pii_agg_cols = [c for c in PII_COLUMNS if c in result.columns]
-    if pii_agg_cols:
-        aggs = [F.sum(c).alias(c) for c in pii_agg_cols]
-        if "has_pii" in result.columns:
-            aggs.append(F.count_if(F.col("has_pii")).alias("has_pii"))
-        metrics["pii_aggregate"] = {
-            k: int(v or 0) for k, v in result.agg(*aggs).collect()[0].asDict().items()
-        }
-    metrics_path = os.path.join(reports_dir, "metrics.json")
-    with open(metrics_path, "w", encoding="utf-8") as f:
-        json.dump(metrics, f, indent=2)
-    written["reports"].append(metrics_path)
+        pii_agg_cols = [c for c in PII_COLUMNS if c in result.columns]
+        if pii_agg_cols:
+            aggs = [F.sum(c).alias(c) for c in pii_agg_cols]
+            if "has_pii" in result.columns:
+                aggs.append(F.count_if(F.col("has_pii")).alias("has_pii"))
+            metrics["pii_aggregate"] = {
+                k: int(v or 0) for k, v in result.agg(*aggs).collect()[0].asDict().items()
+            }
+        metrics_path = os.path.join(reports_dir, "metrics.json")
+        with open(metrics_path, "w", encoding="utf-8") as f:
+            json.dump(metrics, f, indent=2)
+        written["reports"].append(metrics_path)
 
-    # ---- pii_stats.csv (full column dump, Spark CSV writer) + drop counts
-    if pii_agg_cols:
+        # ---- pii_stats.csv (full column dump, Spark CSV writer) + drop counts
+        if pii_agg_cols:
+            from llm_pretraining_data_pipeline_spark.sources.io import write_csv_report
+
+            pii_path = os.path.join(reports_dir, "pii_stats.csv")
+            cols = pii_agg_cols + (["has_pii"] if "has_pii" in result.columns else [])
+            write_csv_report(result.select(*cols), pii_path)
+            written["reports"].append(pii_path)
+
+        drop_path = os.path.join(reports_dir, "drop_reason_counts.csv")
         from llm_pretraining_data_pipeline_spark.sources.io import write_csv_report
 
-        pii_path = os.path.join(reports_dir, "pii_stats.csv")
-        cols = pii_agg_cols + (["has_pii"] if "has_pii" in result.columns else [])
-        write_csv_report(result.select(*cols), pii_path)
-        written["reports"].append(pii_path)
+        write_csv_report(drop_reason_counts(result), drop_path)
+        written["reports"].append(drop_path)
 
-    drop_path = os.path.join(reports_dir, "drop_reason_counts.csv")
-    from llm_pretraining_data_pipeline_spark.sources.io import write_csv_report
-
-    write_csv_report(drop_reason_counts(result), drop_path)
-    written["reports"].append(drop_path)
-
-    result.unpersist()
     return written
 
 

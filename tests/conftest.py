@@ -23,6 +23,13 @@ def spark(tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
+def codegen_compiles(spark):
+    """Callable: how many generated classes this JVM has Janino-compiled."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return lambda: metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
 

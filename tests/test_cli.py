@@ -115,15 +115,22 @@ def test_cli_drop_reason_csv_matches_counts(spark, tmp_path):
     ]
 
 
-def test_cli_rerun_on_same_path_reads_new_input(spark, tmp_path):
+def test_cli_rerun_on_same_path_reads_new_input(spark, tmp_path, codegen_compiles):
     """The CLI frees its cached result: a second run over the same input
-    path in the same JVM, after the file changed, sees the new rows."""
+    path in the same JVM, after the file changed, sees the new rows. The
+    second run reuses the first's generated code: only the classes that
+    inline the run's ``ingest_ts`` literal are compiled again (about 50
+    with Spark's 100-entry codegen cache)."""
     from llm_pretraining_data_pipeline_spark import cli
 
     inp, out = tmp_path / "in.jsonl", tmp_path / "out"
     args = ["--input", str(inp), "--out", str(out), "--no-nfkc", "--no-lang-filter"]
+    compiled = []
     for n in (12, 7):
         _write_docs(inp, [(f"http://t/{i}", _STORY.format(i)) for i in range(n)])
+        before = codegen_compiles()
         assert cli.main(args) == 0
+        compiled.append(codegen_compiles() - before)
         with open(out / "metrics_summary.json") as f:
             assert json.load(f)["docs"]["input"] == n
+    assert compiled[1] <= 3, compiled

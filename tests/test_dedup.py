@@ -1397,6 +1397,41 @@ class TestStoredMinhashIndex:
         dedup.write_minhash_index(idx, path, sig_buckets=sig_buckets)
         return path, idx
 
+    def test_second_night_reuses_generated_code(
+        self, spark, tmp_path, codegen_compiles
+    ):
+        # a long-lived application runs the same night again and again:
+        # the second identical night must find its generated classes in
+        # the codegen cache (Spark's 100-entry default evicts them between
+        # nights, and each night recompiles about 130). Spark keys that
+        # cache by class loader as well as by source, and whether a class
+        # is first generated on the planning thread or on a task thread
+        # varies from run to run, so a few (0-8 seen at local[4]) still
+        # compile once more for the other loader.
+        import shutil
+
+        path, _ = self._write(spark, tmp_path, sig_buckets=4)
+        pristine = str(tmp_path / "pristine")
+        shutil.copytree(path, pristine)
+        batch = spark.createDataFrame(
+            [(11, self.SNAP[0][1]), (12, self.SNAP[0][1] + " lambda"),
+             (13, "totally novel text nothing like the snapshot corpus")],
+            "doc_id long, text string",
+        )
+        compiled = []
+        for _ in range(2):
+            shutil.rmtree(path)
+            shutil.copytree(pristine, path)
+            before = codegen_compiles()
+            dedup.minhash_dedup(batch, "text", id_col="doc_id").collect()
+            dedup.near_dedup_against_stored_index(batch, path).collect()
+            dedup.write_minhash_index(
+                dedup.minhash_index_frame(batch, "text"), path,
+                mode="append", dedupe_ids=False,
+            )
+            compiled.append(codegen_compiles() - before)
+        assert compiled[1] <= 16, compiled
+
     def test_pruned_read_prunes_and_matches_full(self, spark, tmp_path):
         from llm_pretraining_data_pipeline_spark.operators import dedup
 

@@ -108,6 +108,17 @@ class TestReporting:
         finally:
             df.unpersist()
 
+    def test_render_report_leaves_callers_cache(self, spark, tmp_path):
+        df = _summary_frame(spark).cache()
+        try:
+            reporting.render_report(
+                df, str(tmp_path / "plots"), str(tmp_path / "reports")
+            )
+            assert df.is_cached
+            assert df.storageLevel != StorageLevel.NONE
+        finally:
+            df.unpersist()
+
     def test_metrics_summary_two_aggregations(self, spark):
         """An uncached frame: cached for the summary's two aggregations and
         freed after, in at most 6 jobs (AQE runs each shuffle map stage as

@@ -116,6 +116,38 @@ def result(spark):
     out.unpersist()
 
 
+def test_run_pipeline_plan_round_trips(spark, monkeypatch):
+    """Building the pipeline's plan (no job) takes at most 3,000 py4j
+    round trips. With PySpark's call-site capture on, every Column call
+    pays about 5 more and the same plan takes ~5,000. A fresh process
+    state is simulated: the capture flag is read anew from the session.
+    py4j's object releases are not counted: how many fall inside the
+    build depends on when objects made before it die."""
+    from py4j import protocol as proto
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.errors import utils
+
+    from llm_pretraining_data_pipeline_spark.session import get_spark
+
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    get_spark()
+    raw = spark.createDataFrame(
+        [(u, t) for u, t, _ in CORPUS], "url string, text string"
+    )
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if not command.startswith(proto.MEMORY_COMMAND_NAME):
+            calls.append(1)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    P.run_pipeline(raw, P.PipelineConfig())
+    monkeypatch.undo()
+    assert len(calls) <= 3000, len(calls)
+
+
 def test_ingest_spreads_one_split_input(spark, tmp_path, monkeypatch):
     """A one-split input leaves ingest dealt over defaultParallelism
     partitions, with exactly the doc_id and row_order of the unspread
