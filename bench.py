@@ -214,7 +214,7 @@ def main() -> int:
     # outside the gate, so its cost must stay proportional to the gated
     # slice, not the corpus.
     # mb_off > mb_on is EXPECTED on this fixture (adjudicated round 15,
-    # scripts/profile_charset_mb.py, alternating one-session A/B):
+    # OPTIMIZATION_r15.md §2, alternating one-session A/B):
     # baseline with no sjis labels 2.87 s; mb_off 4.45 s (+1.58);
     # mb_on 3.77 s (+0.90). Under mb_off an unhonorable label falls
     # through to the content arm and pays the full JVM validity chain

@@ -37,10 +37,10 @@ from __future__ import annotations
 
 from collections import Counter
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType
 
+from llm_pretraining_data_pipeline_spark.functions.arrow_rows import row_udf, struct_type
 from llm_pretraining_data_pipeline_spark.functions.metrics import EN_STOPWORDS
 from llm_pretraining_data_pipeline_spark.functions.text_norm import _col
 from llm_pretraining_data_pipeline_spark.functions.toxicity import ALL_LEXICONS
@@ -180,14 +180,17 @@ del _name, _words, _w
 
 # Field orders are load-bearing: pipeline.py extracts by name, tests compare
 # field-by-field against the expression forms.
-CLEAN_METRICS_SCHEMA = (
-    "struct<n_chars:long,n_words:long,alpha_ratio:double,repetition_ratio:double,"
-    "non_latin_ratio:double,toxicity:double,severe_toxicity:double,insult:double,"
-    "threat:double,identity_attack:double,sexual_explicit:double>"
+CLEAN_METRICS_SCHEMA = struct_type(
+    n_chars=LongType(), n_words=LongType(), alpha_ratio=DoubleType(),
+    repetition_ratio=DoubleType(), non_latin_ratio=DoubleType(),
+    toxicity=DoubleType(), severe_toxicity=DoubleType(), insult=DoubleType(),
+    threat=DoubleType(), identity_attack=DoubleType(),
+    sexual_explicit=DoubleType(),
 )
-TOKEN_STATS_SCHEMA = (
-    "struct<token_count:long,unique_tokens:long,unique_token_ratio:double,"
-    "stopword_ratio:double,max_token_frequency:long>"
+TOKEN_STATS_SCHEMA = struct_type(
+    token_count=LongType(), unique_tokens=LongType(),
+    unique_token_ratio=DoubleType(), stopword_ratio=DoubleType(),
+    max_token_frequency=LongType(),
 )
 
 
@@ -259,45 +262,17 @@ def _token_stats_py(t):
     return (total, uniq, uniq / total, stop_hits / total, max(counts.values()))
 
 
-_UDFS: dict[str, object] = {}
+_CLEAN_METRICS = row_udf(CLEAN_METRICS_SCHEMA, _clean_metrics_py)
+_TOKEN_STATS = row_udf(TOKEN_STATS_SCHEMA, _token_stats_py)
 
 
 def clean_metrics_struct(c: Column | str) -> Column:
     """Arrow-batched stage-2 metric block, bit-identical to the expression
     forms (see module docstring)."""
-    if "clean" not in _UDFS:
-
-        @F.pandas_udf(CLEAN_METRICS_SCHEMA)
-        def _udf(texts: pd.Series) -> pd.DataFrame:
-            rows = [_clean_metrics_py(t) for t in texts]
-            return pd.DataFrame(
-                rows,
-                columns=[
-                    "n_chars", "n_words", "alpha_ratio", "repetition_ratio",
-                    "non_latin_ratio", "toxicity", "severe_toxicity", "insult",
-                    "threat", "identity_attack", "sexual_explicit",
-                ],
-            )
-
-        _UDFS["clean"] = _udf
-    return _UDFS["clean"](_col(c))
+    return _CLEAN_METRICS(_col(c))
 
 
 def token_stats_struct(c: Column | str) -> Column:
     """Arrow-batched stage-4 token stats, bit-identical to the expression
     forms (see module docstring)."""
-    if "token" not in _UDFS:
-
-        @F.pandas_udf(TOKEN_STATS_SCHEMA)
-        def _udf(texts: pd.Series) -> pd.DataFrame:
-            rows = [_token_stats_py(t) for t in texts]
-            return pd.DataFrame(
-                rows,
-                columns=[
-                    "token_count", "unique_tokens", "unique_token_ratio",
-                    "stopword_ratio", "max_token_frequency",
-                ],
-            )
-
-        _UDFS["token"] = _udf
-    return _UDFS["token"](_col(c))
+    return _TOKEN_STATS(_col(c))

@@ -43,22 +43,17 @@ the expression cascade.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType
 
+from llm_pretraining_data_pipeline_spark.functions.arrow_rows import row_udf, struct_type
 from llm_pretraining_data_pipeline_spark.functions.text_norm import _col
 
-REP_SIGNALS_SCHEMA = (
-    "struct<n_lines:long,dup_line_frac:double,dup_line_char_frac:double,"
-    "top2gram_char_frac:double,top3gram_char_frac:double,"
-    "dup5gram_char_frac:double,dup10gram_char_frac:double>"
-)
-
-REP_FIELDS = (
-    "n_lines", "dup_line_frac", "dup_line_char_frac",
-    "top2gram_char_frac", "top3gram_char_frac",
-    "dup5gram_char_frac", "dup10gram_char_frac",
+REP_SIGNALS_SCHEMA = struct_type(
+    n_lines=LongType(), dup_line_frac=DoubleType(),
+    dup_line_char_frac=DoubleType(), top2gram_char_frac=DoubleType(),
+    top3gram_char_frac=DoubleType(), dup5gram_char_frac=DoubleType(),
+    dup10gram_char_frac=DoubleType(),
 )
 
 
@@ -124,18 +119,10 @@ def _rep_signals_py(t) -> tuple:
     )
 
 
-_UDFS: dict[str, object] = {}
+_REP_SIGNALS = row_udf(REP_SIGNALS_SCHEMA, _rep_signals_py)
 
 
 def rep_signals_struct(c: Column | str) -> Column:
     """Arrow-batched repetition-signal block, bit-identical to the
     expression forms (see module docstring)."""
-    if "rep" not in _UDFS:
-
-        @F.pandas_udf(REP_SIGNALS_SCHEMA)
-        def _udf(texts: pd.Series) -> pd.DataFrame:
-            rows = [_rep_signals_py(t) for t in texts]
-            return pd.DataFrame(rows, columns=list(REP_FIELDS))
-
-        _UDFS["rep"] = _udf
-    return _UDFS["rep"](_col(c))
+    return _REP_SIGNALS(_col(c))

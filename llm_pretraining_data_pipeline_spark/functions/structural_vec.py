@@ -31,13 +31,13 @@ same sanctioned-Python shape as the vectorized metrics block.
 
 from __future__ import annotations
 
-import functools
 import re
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
+from llm_pretraining_data_pipeline_spark.functions.arrow_rows import row_udf
+from llm_pretraining_data_pipeline_spark.functions.structural import _NAMED_ENTITIES
 from llm_pretraining_data_pipeline_spark.functions.text_norm import _col
 
 # HTML character-reference token — the EXACT _ENTITY_TOKEN_RE from
@@ -49,7 +49,7 @@ _ENTITY_SUB_RE_PY = re.compile(
 )
 
 
-def _decode_entities_py(s, named: dict) -> str:
+def _decode_entities_py(s) -> str:
     """One row of ``structural.decode_html_entities``, mirrored rule
     for rule: ONE forward pass (decoded output never rescanned),
     numeric before named, unknown names / bare '&' pass through,
@@ -68,27 +68,13 @@ def _decode_entities_py(s, named: dict) -> str:
             if 1 <= cp <= 0x10FFFF and not 0xD800 <= cp <= 0xDFFF:
                 return chr(cp)
             return "�"
-        rep = named.get(tok)
+        rep = _NAMED_ENTITIES.get(tok)
         return rep if rep is not None else m.group(0)
 
     return _ENTITY_SUB_RE_PY.sub(repl, s)
 
 
-@functools.cache
-def _decode_udf():
-    from llm_pretraining_data_pipeline_spark.functions.structural import (
-        _NAMED_ENTITIES,
-    )
-
-    named = dict(_NAMED_ENTITIES)
-
-    @F.pandas_udf("string")
-    def _udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_decode_entities_py(t, named) for t in texts], dtype=object
-        )
-
-    return _udf
+_DECODE_ENTITIES = row_udf(StringType(), _decode_entities_py)
 
 
 def decode_entities_str(c: Column | str) -> Column:
@@ -97,4 +83,4 @@ def decode_entities_str(c: Column | str) -> Column:
     hex; unknown names and bare '&' pass through; invalid codepoints →
     U+FFFD; null in → null out), one C-engine ``re.sub`` per row (see
     module docstring)."""
-    return _decode_udf()(_col(c))
+    return _DECODE_ENTITIES(_col(c))

@@ -6,19 +6,21 @@ Reference semantics (all pandas row loops there, all JVM expressions here):
   * ``canonicalize_for_exact/near`` — duplication.py:31-56
   * ``pick_text`` fallback  — Export_to_jsonl.py:25-30
 
-Only NFKC unicode normalisation has no Spark builtin; it is the one pandas
-UDF in this module (Arrow-batched, optional — ``normalize_text_expr`` can be
-built without it for ASCII-ish corpora and for the DuckDB oracle, which has
-no NFKC either).
+Only NFKC unicode normalisation has no Spark builtin; it is the one
+Arrow-batched row UDF in this module (optional — ``normalize_text_expr`` can
+be built without it for ASCII-ish corpora and for the DuckDB oracle, which
+has no NFKC either).
 """
 
 from __future__ import annotations
 
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
+
+from llm_pretraining_data_pipeline_spark.functions.arrow_rows import row_udf
 
 # U+0000-001F and U+007F-009F, as in reference CONTROL_CHAR_RE
 # (text_clean_and_filter.py:50-53). Reference replaces them with a space.
@@ -34,15 +36,16 @@ PY_WS_RE = "(?U)[\\s\\x1c-\\x1f]+"
 NULL_LIKE_STRINGS = ["nan", "none", "null", "n/a", "null value"]
 
 
-_NFKC_UDF = None
+def _nfkc(x):
+    return unicodedata.normalize("NFKC", x) if isinstance(x, str) else x
+
+
+_NFKC = row_udf(StringType(), _nfkc)
 
 
 def nfkc_normalize(c: Column | str) -> Column:
-    """NFKC unicode normalisation (the one step with no Spark builtin).
-
-    Arrow-batched pandas UDF, created lazily because UDF registration needs
-    an active SparkSession (and the rest of this module must stay importable
-    without one).
+    """NFKC unicode normalisation (the one step with no Spark builtin), as
+    an Arrow-batched row UDF; null stays null.
 
     Deliberately the PLAIN udf with no ASCII-mask fast path: masking
     pure-ASCII rows to null before the Arrow transfer (NFKC is identity on
@@ -52,15 +55,7 @@ def nfkc_normalize(c: Column | str) -> Column:
     NFKC is only ~1.2 µs/row). Masking only wins on cold Python workers,
     which is not the steady-state that matters.
     """
-    global _NFKC_UDF
-    if _NFKC_UDF is None:
-
-        @F.pandas_udf("string")
-        def _nfkc(s: pd.Series) -> pd.Series:
-            return s.map(lambda x: unicodedata.normalize("NFKC", x) if isinstance(x, str) else x)
-
-        _NFKC_UDF = _nfkc
-    return _NFKC_UDF(_col(c))
+    return _NFKC(_col(c))
 
 
 def _col(c: Column | str) -> Column:
@@ -84,7 +79,7 @@ def normalize_text_expr(c: Column | str, *, nfkc: bool = True) -> Column:
     """
     s = _col(c).cast("string")
     if nfkc:
-        s = nfkc_normalize(s)  # pandas UDF (lazy)
+        s = nfkc_normalize(s)  # Arrow row UDF
     s = F.regexp_replace(s, CONTROL_CHAR_CLASS, " ")
     s = collapse_ws(s)
     return F.nullif(s, F.lit(""))

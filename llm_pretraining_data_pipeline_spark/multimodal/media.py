@@ -15,7 +15,13 @@ Design for 100 TB:
     payload is read (column pruning keeps the heavy column out of scans that
     don't need it);
   * all per-payload work runs in ``mapInPandas`` over Arrow batches — one
-    Python worker init per partition, zero per-row overhead;
+    Python worker init per partition, zero per-row overhead. The payload
+    decoders (png/wav/webp/mp3/gif/bmp/mp4/jpeg stats and ``png_ahash``)
+    are each a parser of one payload plus the fields it yields, run by
+    ``functions.arrow_rows.map_rows``: output rows are keyed by the
+    caller's ``id_col``, and a payload that fails to decode survives as a
+    ``decode_ok=false`` row carrying the exact error — a curation pipeline
+    counts those, never dies on them;
   * derived features land in narrow sibling tables keyed by ``media_id`` so
     downstream joins never drag payload bytes through a shuffle.
 """
@@ -28,72 +34,61 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+)
 
-from llm_pretraining_data_pipeline_spark.multimodal import bmp, jpeg, mp4, png, wav
+from llm_pretraining_data_pipeline_spark.functions.arrow_rows import map_rows, struct_type
+from llm_pretraining_data_pipeline_spark.multimodal import (
+    bmp,
+    gif,
+    jpeg,
+    mp3,
+    mp4,
+    png,
+    wav,
+    webp,
+)
 from llm_pretraining_data_pipeline_spark.schemas import MEDIA_SCHEMA
 
 FEATURE_DIM = 16
 
-PNG_STATS_SCHEMA = (
-    "media_id bigint, width int, height int, bit_depth int, channels int, "
-    "n_pixels bigint, px_sum bigint, px_min int, px_max int, "
-    "decode_ok boolean, decode_err string"
+PNG_FIELDS = struct_type(
+    width=IntegerType(), height=IntegerType(), bit_depth=IntegerType(),
+    channels=IntegerType(), n_pixels=LongType(), px_sum=LongType(),
+    px_min=IntegerType(), px_max=IntegerType(),
 )
 
 
 def png_feature_stats(media: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Image payloads → decoded PNG statistics via Arrow-batched
-    mapInPandas: the REAL decode step (``png.decode_png`` — zlib inflate +
-    scanline filter reconstruction), emitting integer stats a DuckDB
-    referee can recompute from a closed-form fixture (``mm_png_features``).
+    """Image payloads → decoded PNG statistics: the REAL decode step
+    (``png.decode_png`` — zlib inflate + scanline filter reconstruction),
+    emitting integer stats a DuckDB referee can recompute from a
+    closed-form fixture (``mm_png_features``)."""
+    return map_rows(media, id_col, PNG_FIELDS, png.png_stats)
 
-    Rows whose payload fails to decode survive with ``decode_ok=false``
-    and the exact error string — a curation pipeline counts those, never
-    dies on them. Projects (id, payload) only before the Python exchange.
-    """
-    import pandas as pd
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    st = png.png_stats(raw)
-                    rows.append(
-                        (mid, st["width"], st["height"], st["bit_depth"],
-                         st["channels"], st["n_pixels"], st["px_sum"],
-                         st["px_min"], st["px_max"], True, None)
-                    )
-                except ValueError as exc:
-                    rows.append(
-                        (mid, None, None, None, None, None, None, None,
-                         None, False, str(exc))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "bit_depth", "channels",
-                    "n_pixels", "px_sum", "px_min", "px_max", "decode_ok",
-                    "decode_err",
-                ],
-            )
-
-    return media.select(id_col, "payload").mapInPandas(
-        batches, schema=PNG_STATS_SCHEMA
-    )
+WAV_FIELDS = struct_type(
+    sample_rate=IntegerType(), channels=IntegerType(),
+    bit_depth=IntegerType(), n_frames=LongType(), sq_sum=LongType(),
+    peak_abs=LongType(), clip_count=LongType(), flip_count=LongType(),
+)
 
 
 def wav_feature_stats(
     media: DataFrame, id_col: str = "media_id", backend: str | None = None
 ) -> DataFrame:
-    """Audio payloads → decoded WAV statistics via Arrow-batched
-    mapInPandas: the REAL decode step (``wav.decode_wav`` — RIFF chunk walk
-    + PCM sample extraction), emitting the integer accumulators a DuckDB
-    referee recomputes from a closed-form fixture (``mm_wav_features``).
-    Derived float stats (RMS, peak, clip ratio, zero-crossing rate) are
-    computed DOWNSTREAM from these integers with JVM-side expressions, so
-    the Python exchange carries only exact values.
+    """Audio payloads → decoded WAV statistics: the REAL decode step
+    (``wav.decode_wav`` — RIFF chunk walk + PCM sample extraction),
+    emitting the integer accumulators a DuckDB referee recomputes from a
+    closed-form fixture (``mm_wav_features``). Derived float stats (RMS,
+    peak, clip ratio, zero-crossing rate) are computed DOWNSTREAM from
+    these integers with JVM-side expressions, so the Python exchange
+    carries only exact values.
 
     ``backend``: ``'stdlib'`` (default, the refereed pure-Python decoder)
     or ``'soundfile'`` (libsndfile swap-in for the long tail —
@@ -101,331 +96,109 @@ def wav_feature_stats(
     ``$SPARK_GRAFT_AUDIO_BACKEND``, mirroring the langdetect/GPT-2
     gating pattern, so a deployment flips the backend without touching
     plan code.
-
-    Rows whose payload fails to decode survive with ``decode_ok=false`` and
-    the exact error string — same contract as ``png_feature_stats``.
     """
     import os
-
-    import pandas as pd
 
     backend = backend or os.environ.get("SPARK_GRAFT_AUDIO_BACKEND", "stdlib")
     if backend not in ("stdlib", "soundfile"):
         raise ValueError(f"wav_feature_stats: unknown backend {backend!r}")
 
-    schema = (
-        f"{id_col} bigint, sample_rate int, channels int, bit_depth int, "
-        "n_frames bigint, sq_sum bigint, peak_abs bigint, clip_count bigint, "
-        "flip_count bigint, decode_ok boolean, decode_err string"
-    )
+    def wav_stats(raw: bytes) -> dict:
+        return wav.wav_stats(raw, backend=backend)
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    st = wav.wav_stats(raw, backend=backend)
-                    rows.append(
-                        (mid, st["sample_rate"], st["channels"],
-                         st["bit_depth"], st["n_frames"], st["sq_sum"],
-                         st["peak_abs"], st["clip_count"], st["flip_count"],
-                         True, None)
-                    )
-                except ValueError as exc:
-                    rows.append(
-                        (mid, None, None, None, None, None, None, None,
-                         None, False, str(exc))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "sample_rate", "channels", "bit_depth",
-                    "n_frames", "sq_sum", "peak_abs", "clip_count",
-                    "flip_count", "decode_ok", "decode_err",
-                ],
-            )
+    return map_rows(media, id_col, WAV_FIELDS, wav_stats)
 
-    return media.select(id_col, "payload").mapInPandas(batches, schema=schema)
+
+WEBP_FIELDS = struct_type(
+    format=StringType(), width=IntegerType(), height=IntegerType(),
+    has_alpha=BooleanType(), animated=BooleanType(), n_frames=IntegerType(),
+)
 
 
 def webp_feature_stats(media: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Image payloads → WebP structure metadata via Arrow-batched
-    mapInPandas (``webp.parse_webp`` — RIFF chunk walk, all three
-    header shapes, bomb-guarded dims, ANMF frame counts): what CDNs
-    actually serve today, so a real CC image stream needs this tier
-    next to png/bmp/jpeg/gif. Same error contract as the codec family:
-    malformed payloads are ``decode_ok=false`` rows."""
-    import pandas as pd
+    """Image payloads → WebP structure metadata (``webp.parse_webp`` —
+    RIFF chunk walk, all three header shapes, bomb-guarded dims, ANMF
+    frame counts): what CDNs actually serve today, so a real CC image
+    stream needs this tier next to png/bmp/jpeg/gif."""
+    return map_rows(media, id_col, WEBP_FIELDS, webp.parse_webp)
 
-    from llm_pretraining_data_pipeline_spark.multimodal import webp
 
-    schema = (
-        f"{id_col} bigint, format string, width int, height int, "
-        "has_alpha boolean, animated boolean, n_frames int, "
-        "decode_ok boolean, decode_err string"
-    )
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    st = webp.parse_webp(raw)
-                    rows.append(
-                        (mid, st["format"], st["width"], st["height"],
-                         st["has_alpha"], st["animated"],
-                         st["n_frames"], True, None)
-                    )
-                except ValueError as exc:
-                    rows.append(
-                        (mid, None, None, None, None, None, None,
-                         False, str(exc))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "format", "width", "height", "has_alpha",
-                    "animated", "n_frames", "decode_ok", "decode_err",
-                ],
-            )
-
-    return media.select(id_col, "payload").mapInPandas(batches, schema=schema)
+MP3_FIELDS = struct_type(
+    n_frames=IntegerType(), bitrate_kbps=IntegerType(), vbr=BooleanType(),
+    sample_rate=IntegerType(), channel_mode=StringType(),
+    n_samples=LongType(), duration_ms=DoubleType(), id3_size=IntegerType(),
+)
 
 
 def mp3_feature_stats(media: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Audio payloads → MP3 frame-structure metadata via Arrow-batched
-    mapInPandas (``mp3.parse_mp3`` — strict MPEG-1 Layer III frame
-    walk, ID3v2 skip, CBR/VBR detection): duration/bitrate/sample-rate
-    triage before any entropy decoder runs — the compressed tier next
-    to ``wav_feature_stats``' PCM decode. Same error contract as the
-    codec family: malformed payloads are ``decode_ok=false`` rows."""
-    import pandas as pd
+    """Audio payloads → MP3 frame-structure metadata (``mp3.parse_mp3`` —
+    strict MPEG-1 Layer III frame walk, ID3v2 skip, CBR/VBR detection):
+    duration/bitrate/sample-rate triage before any entropy decoder runs —
+    the compressed tier next to ``wav_feature_stats``' PCM decode."""
+    return map_rows(media, id_col, MP3_FIELDS, mp3.parse_mp3)
 
-    from llm_pretraining_data_pipeline_spark.multimodal import mp3
 
-    schema = (
-        f"{id_col} bigint, n_frames int, bitrate_kbps int, vbr boolean, "
-        "sample_rate int, channel_mode string, n_samples bigint, "
-        "duration_ms double, id3_size int, decode_ok boolean, "
-        "decode_err string"
-    )
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    st = mp3.parse_mp3(raw)
-                    rows.append(
-                        (mid, st["n_frames"], st["bitrate_kbps"],
-                         st["vbr"], st["sample_rate"],
-                         st["channel_mode"], st["n_samples"],
-                         st["duration_ms"], st["id3_size"], True, None)
-                    )
-                except ValueError as exc:
-                    rows.append(
-                        (mid, None, None, None, None, None, None, None,
-                         None, False, str(exc))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_frames", "bitrate_kbps", "vbr",
-                    "sample_rate", "channel_mode", "n_samples",
-                    "duration_ms", "id3_size", "decode_ok", "decode_err",
-                ],
-            )
-
-    return media.select(id_col, "payload").mapInPandas(batches, schema=schema)
+GIF_FIELDS = struct_type(
+    version=StringType(), width=IntegerType(), height=IntegerType(),
+    gct_colors=IntegerType(), n_frames=IntegerType(), animated=BooleanType(),
+    loop_count=IntegerType(), n_extensions=IntegerType(),
+)
 
 
 def gif_feature_stats(media: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Image payloads → GIF STRUCTURE metadata via Arrow-batched
-    mapInPandas (``gif.parse_gif`` — strict block walk, frame count,
-    NETSCAPE loop extension, bomb-guarded declared dimensions): the
-    triage a multimodal pipeline needs to route animated media (a
-    12-frame banner ad and a photo are different corpus citizens)
-    without paying LZW pixel decode. Same error contract as the codec
-    family: malformed payloads are ``decode_ok=false`` rows."""
-    import pandas as pd
+    """Image payloads → GIF STRUCTURE metadata (``gif.parse_gif`` —
+    strict block walk, frame count, NETSCAPE loop extension,
+    bomb-guarded declared dimensions): the triage a multimodal pipeline
+    needs to route animated media (a 12-frame banner ad and a photo are
+    different corpus citizens) without paying LZW pixel decode."""
+    return map_rows(media, id_col, GIF_FIELDS, gif.parse_gif)
 
-    from llm_pretraining_data_pipeline_spark.multimodal import gif
 
-    schema = (
-        f"{id_col} bigint, version string, width int, height int, "
-        "gct_colors int, n_frames int, animated boolean, "
-        "loop_count int, n_extensions int, decode_ok boolean, "
-        "decode_err string"
-    )
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    st = gif.parse_gif(raw)
-                    rows.append(
-                        (mid, st["version"], st["width"], st["height"],
-                         st["gct_colors"], st["n_frames"],
-                         st["animated"], st["loop_count"],
-                         st["n_extensions"], True, None)
-                    )
-                except ValueError as exc:
-                    rows.append(
-                        (mid, None, None, None, None, None, None, None,
-                         None, False, str(exc))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "version", "width", "height", "gct_colors",
-                    "n_frames", "animated", "loop_count",
-                    "n_extensions", "decode_ok", "decode_err",
-                ],
-            )
-
-    return media.select(id_col, "payload").mapInPandas(batches, schema=schema)
+BMP_FIELDS = struct_type(
+    width=IntegerType(), height=IntegerType(), bpp=IntegerType(),
+    n_pixels=LongType(), px_sum=LongType(), px_min=IntegerType(),
+    px_max=IntegerType(),
+)
 
 
 def bmp_feature_stats(media: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Image payloads → decoded BMP statistics via Arrow-batched
-    mapInPandas: the REAL decode step (``bmp.decode_bmp`` — BI_RGB 24/32
-    bpp, bottom-up and top-down row orders normalised), emitting the
-    integer accumulators a DuckDB referee recomputes from a closed-form
-    fixture (``mm_bmp_features``). Same error contract as the rest of the
-    codec family: undecodable payloads survive as ``decode_ok=false``
-    rows with the exact error string.
-    """
-    import pandas as pd
+    """Image payloads → decoded BMP statistics: the REAL decode step
+    (``bmp.decode_bmp`` — BI_RGB 24/32 bpp, bottom-up and top-down row
+    orders normalised), emitting the integer accumulators a DuckDB
+    referee recomputes from a closed-form fixture (``mm_bmp_features``)."""
+    return map_rows(media, id_col, BMP_FIELDS, bmp.bmp_stats)
 
-    schema = (
-        f"{id_col} bigint, width int, height int, bpp int, "
-        "n_pixels bigint, px_sum bigint, px_min int, px_max int, "
-        "decode_ok boolean, decode_err string"
-    )
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    st = bmp.bmp_stats(raw)
-                    rows.append(
-                        (mid, st["width"], st["height"], st["bpp"],
-                         st["n_pixels"], st["px_sum"], st["px_min"],
-                         st["px_max"], True, None)
-                    )
-                except ValueError as exc:
-                    rows.append(
-                        (mid, None, None, None, None, None, None, None,
-                         False, str(exc))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "bpp", "n_pixels",
-                    "px_sum", "px_min", "px_max", "decode_ok",
-                    "decode_err",
-                ],
-            )
-
-    return media.select(id_col, "payload").mapInPandas(batches, schema=schema)
+MP4_FIELDS = struct_type(
+    brand=StringType(), timescale=LongType(), duration=LongType(),
+    width=IntegerType(), height=IntegerType(),
+)
 
 
 def mp4_meta_stats(media: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Video payloads → container metadata via Arrow-batched mapInPandas:
-    the REAL ISO-BMFF box walk (``mp4.parse_mp4_meta`` — ftyp brand,
-    mvhd timescale/duration v0+v1, tkhd 16.16 width/height), no codec
-    work. Emits integers + the brand string; ``duration_ms`` and frame
-    plans derive downstream in JVM expressions (``mm_mp4_meta``).
+    """Video payloads → container metadata: the REAL ISO-BMFF box walk
+    (``mp4.parse_mp4_meta`` — ftyp brand, mvhd timescale/duration v0+v1,
+    tkhd 16.16 width/height), no codec work. Emits integers + the brand
+    string; ``duration_ms`` and frame plans derive downstream in JVM
+    expressions (``mm_mp4_meta``)."""
+    return map_rows(media, id_col, MP4_FIELDS, mp4.parse_mp4_meta)
 
-    Rows whose payload fails to parse survive with ``decode_ok=false`` and
-    the exact error string — same contract as ``png_feature_stats``.
-    """
-    import pandas as pd
 
-    schema = (
-        f"{id_col} bigint, brand string, timescale bigint, duration bigint, "
-        "width int, height int, decode_ok boolean, decode_err string"
-    )
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    m = mp4.parse_mp4_meta(raw)
-                    rows.append(
-                        (mid, m["brand"], m["timescale"], m["duration"],
-                         m["width"], m["height"], True, None)
-                    )
-                except ValueError as exc:
-                    rows.append(
-                        (mid, None, None, None, None, None, False, str(exc))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "brand", "timescale", "duration", "width",
-                    "height", "decode_ok", "decode_err",
-                ],
-            )
-
-    return media.select(id_col, "payload").mapInPandas(batches, schema=schema)
+JPEG_FIELDS = struct_type(
+    width=IntegerType(), height=IntegerType(), components=IntegerType(),
+    precision=IntegerType(), progressive=BooleanType(), jfif=BooleanType(),
+)
 
 
 def jpeg_meta_stats(media: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Image payloads → frame metadata via Arrow-batched mapInPandas: the
-    REAL ITU-T T.81 marker walk (``jpeg.parse_jpeg_meta`` — SOF precision/
-    height/width/components, progressive flag, JFIF APP0 detection), no
-    entropy decode. This is the ``imagesize``-style header sniff every
-    web-curation pipeline runs before any resolution/aspect-ratio gate —
-    dimensions come from the first marker segments, so at 100 TB the scan
-    never touches the entropy-coded body.
-
-    Rows whose payload fails to parse survive with ``decode_ok=false`` and
-    the exact error string — same contract as ``png_feature_stats``.
-    """
-    import pandas as pd
-
-    schema = (
-        f"{id_col} bigint, width int, height int, components int, "
-        "precision int, progressive boolean, jfif boolean, "
-        "decode_ok boolean, decode_err string"
-    )
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    m = jpeg.parse_jpeg_meta(raw)
-                    rows.append(
-                        (mid, m["width"], m["height"], m["components"],
-                         m["precision"], m["progressive"], m["jfif"],
-                         True, None)
-                    )
-                except ValueError as exc:
-                    rows.append(
-                        (mid, None, None, None, None, None, None,
-                         False, str(exc))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "components", "precision",
-                    "progressive", "jfif", "decode_ok", "decode_err",
-                ],
-            )
-
-    return media.select(id_col, "payload").mapInPandas(batches, schema=schema)
+    """Image payloads → frame metadata: the REAL ITU-T T.81 marker walk
+    (``jpeg.parse_jpeg_meta`` — SOF precision/height/width/components,
+    progressive flag, JFIF APP0 detection), no entropy decode. This is
+    the ``imagesize``-style header sniff every web-curation pipeline runs
+    before any resolution/aspect-ratio gate — dimensions come from the
+    first marker segments, so at 100 TB the scan never touches the
+    entropy-coded body."""
+    return map_rows(media, id_col, JPEG_FIELDS, jpeg.parse_jpeg_meta)
 
 
 def magic_kind(payload_col="payload"):
@@ -626,10 +399,7 @@ def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     )
 
 
-AHASH_SCHEMA = (
-    "media_id bigint, ahash_hi bigint, ahash_lo bigint, "
-    "decode_ok boolean, decode_err string"
-)
+AHASH_FIELDS = struct_type(ahash_hi=LongType(), ahash_lo=LongType())
 
 
 def png_ahash(
@@ -645,38 +415,14 @@ def png_ahash(
     INTEGER arithmetic (floor divisions only), split into two int32-range
     halves (``ahash_hi`` bits 32..63, ``ahash_lo`` bits 0..31) so an
     independent referee can recompute it from a closed-form pixel formula
-    and every value fits signed bigint on any engine.
-
-    Same executor shape as ``png_feature_stats``: Arrow-batched
-    mapInPandas over (id, payload) only; rows that fail to decode (or are
-    smaller than the grid) survive with ``decode_ok=false``.
+    and every value fits signed bigint on any engine. Rows that fail to
+    decode (or are smaller than the grid) survive with ``decode_ok=false``.
     """
-    import pandas as pd
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    hi, lo = png.ahash_bits(raw, grid=grid)
-                    rows.append((mid, hi, lo, True, None))
-                except ValueError as exc:
-                    rows.append((mid, None, None, False, str(exc)))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "ahash_hi", "ahash_lo", "decode_ok",
-                         "decode_err"],
-            )
+    def ahash(raw: bytes) -> dict:
+        return dict(zip(AHASH_FIELDS.fieldNames(), png.ahash_bits(raw, grid=grid)))
 
-    # mapInPandas matches pandas column labels to schema FIELD NAMES, so
-    # the id field must be spelled as the caller's id_col — a fixed
-    # "media_id" schema would break any non-default id_col at runtime.
-    schema = (
-        f"{id_col} bigint, ahash_hi bigint, ahash_lo bigint, "
-        "decode_ok boolean, decode_err string"
-    )
-    return media.select(id_col, "payload").mapInPandas(batches, schema=schema)
+    return map_rows(media, id_col, AHASH_FIELDS, ahash)
 
 
 def phash_near_dup_pairs(

@@ -21,7 +21,7 @@ Stage map (reference file : our stage function):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,7 +37,6 @@ from llm_pretraining_data_pipeline_spark.functions import (
     tokenizer,
 )
 from llm_pretraining_data_pipeline_spark.operators import dedup as dedup_ops
-from llm_pretraining_data_pipeline_spark.operators import sharding as shard_ops
 from llm_pretraining_data_pipeline_spark.operators.rules import apply_rules
 from llm_pretraining_data_pipeline_spark.operators.skew import spread_small_input
 
@@ -78,7 +77,6 @@ class PipelineConfig:
     max_tokens: int = 2048               # :61
     docs_per_shard: int = 50_000         # sharding.py:31
     use_nfkc: bool = True
-    use_langdetect: bool = False  # True -> langdetect pandas UDF (if installed)
     # blend char-trigram evidence into lang ID (default on: two independent
     # weak signals are markedly more robust on natural prose than stopword
     # profiles alone; the reference's langdetect is likewise n-gram based)
@@ -95,7 +93,6 @@ class PipelineConfig:
     # reference's 0.5 stub (text_clean_and_filter.py:370-378) for bit-parity.
     model_quality_backend: str = "logistic"
     source_name: str = "mainpipe_v1"     # ingest.py:131
-    extra_columns: dict = field(default_factory=dict)
 
 
 def ingest(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
@@ -162,19 +159,13 @@ def clean_filter(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataF
         .withColumn("repetition_ratio", F.col("_m.repetition_ratio"))
     )
 
-    # Language ID (:692-699): the Arrow-batched heuristic by default
-    # (bit-identical to langid.langid_struct, whose 15 regex scans per row
-    # are the heaviest tree in the chain); langdetect UDF for parity.
-    lang_struct = None
-    if cfg.use_langdetect:
-        udf = langid.langdetect_udf()
-        if udf is not None:
-            lang_struct = udf(F.col("text"))
-    if lang_struct is None:
-        lang_struct = langid.langid_struct_vectorized(
-            "text", use_trigrams=cfg.langid_trigrams
-        )
-    out = out.withColumn("_lang", lang_struct)
+    # Language ID (:692-699): the Arrow-batched heuristic (bit-identical to
+    # langid.langid_struct, whose 15 regex scans per row are the heaviest
+    # tree in the chain).
+    out = out.withColumn(
+        "_lang",
+        langid.langid_struct_vectorized("text", use_trigrams=cfg.langid_trigrams),
+    )
     out = (
         out.withColumn("lang_pred", F.col("_lang.lang"))
         .withColumn("lang_score", F.col("_lang.score"))
@@ -383,10 +374,6 @@ def tokenise(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame
             ("too_many_tokens", F.col("n_tokens") > cfg.max_tokens),
         ],
     )
-
-
-def shard(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
-    return shard_ops.assign_shards(df, docs_per_shard=cfg.docs_per_shard)
 
 
 STAGES = [

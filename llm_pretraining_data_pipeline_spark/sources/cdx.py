@@ -29,9 +29,14 @@ convention: ``<surt> <14-digit timestamp> <json>``.
 
 from __future__ import annotations
 
+import base64
+import hashlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
+from llm_pretraining_data_pipeline_spark.functions.arrow_rows import row_udf
 from llm_pretraining_data_pipeline_spark.functions.urls import surt_key
 from llm_pretraining_data_pipeline_spark.sources.http import (
     http_response_split,
@@ -54,8 +59,8 @@ def _claimed_digest(col: Column) -> Column:
     return F.lower(F.regexp_replace(col, r"^[A-Za-z0-9-]+:", ""))
 
 
-def _sha1_b32_raw(col: Column) -> Column:
-    """Arrow expression: HTTP-message payload bytes → lowercase base32 of
+def _sha1_b32(v) -> str:
+    """One HTTP-message payload (bytes) → lowercase base32 of
     the sha1 over the RAW entity body (everything after the first
     ``\\r\\n\\r\\n`` header terminator; the whole payload when there is
     none) — the digest real archives stamp in ``WARC-Payload-Digest``
@@ -69,40 +74,27 @@ def _sha1_b32_raw(col: Column) -> Column:
     the two key spaces cannot collide (64 hex chars vs 32 base32
     chars). Null/empty payload → digest of the empty payload (a real,
     matchable identity — zero-length bodies do occur in archives)."""
-    import base64
-    import hashlib
+    raw = bytes(v) if v is not None else b""
+    # entity body = after the header terminator. Lenient LF-only
+    # fallback (ADVICE r13): the raw bytes here come from OTHER
+    # archivers' captures, and a lenient archiver that stored an
+    # LF-only HTTP message stamps its payload digest over the
+    # bytes after b"\n\n" — without the fallback those originals
+    # digest their headers into the payload and their
+    # sha1:<BASE32> revisit claims can never resolve (silently).
+    # The engine's own splitter stays strict-CRLF (http_ok=false
+    # for LF-only messages) — resolution and text extraction are
+    # independent contracts.
+    i = raw.find(b"\r\n\r\n")
+    if i >= 0:
+        body = raw[i + 4:]
+    else:
+        j = raw.find(b"\n\n")
+        body = raw[j + 2:] if j >= 0 else raw
+    return base64.b32encode(hashlib.sha1(body).digest()).decode("ascii").lower()
 
-    import pandas as pd
 
-    def dig(s):
-        out = []
-        for v in s:
-            raw = bytes(v) if v is not None else b""
-            # entity body = after the header terminator. Lenient LF-only
-            # fallback (ADVICE r13): the raw bytes here come from OTHER
-            # archivers' captures, and a lenient archiver that stored an
-            # LF-only HTTP message stamps its payload digest over the
-            # bytes after b"\n\n" — without the fallback those originals
-            # digest their headers into the payload and their
-            # sha1:<BASE32> revisit claims can never resolve (silently).
-            # The engine's own splitter stays strict-CRLF (http_ok=false
-            # for LF-only messages) — resolution and text extraction are
-            # independent contracts.
-            i = raw.find(b"\r\n\r\n")
-            if i >= 0:
-                body = raw[i + 4:]
-            else:
-                j = raw.find(b"\n\n")
-                body = raw[j + 2:] if j >= 0 else raw
-            out.append(
-                base64.b32encode(hashlib.sha1(body).digest())
-                .decode("ascii")
-                .lower()
-            )
-        return pd.Series(out)
-
-    dig.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return F.pandas_udf(dig, "string")(col)
+_SHA1_B32 = row_udf(StringType(), _sha1_b32)
 
 
 def cdx_records(
@@ -1209,7 +1201,7 @@ def resolve_revisits(
     # filtered after the explode.
     keys = [F.when(F.col("_h.http_ok"), F.sha2(F.col("_h.body"), 256))]
     if sha1_raw:
-        keys.append(_sha1_b32_raw(F.col("payload")))
+        keys.append(_SHA1_B32(F.col("payload")))
     reps = (
         originals.select(
             F.explode(F.array(*keys)).alias("_digest"),

@@ -36,7 +36,15 @@ import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    IntegerType,
+    LongType,
+    StringType,
+)
 
+from llm_pretraining_data_pipeline_spark.functions.arrow_rows import row_udf, struct_type
 from llm_pretraining_data_pipeline_spark.sources.warc import parse_header_lines
 
 _MAX_HEADERS = 64
@@ -51,10 +59,11 @@ _CHARSET_RE = re.compile(r";\s*charset\s*=\s*\"?([^\";\s]+)\"?", re.IGNORECASE)
 # the declares-vs-remaining check in the chunk walk.
 _CHUNK_SIZE_RE = re.compile(rb"^[0-9A-Fa-f]+$")
 
-HTTP_STRUCT_SCHEMA = (
-    "status int, content_type string, charset string, "
-    "content_length_hdr bigint, n_headers int, location string, "
-    "body binary, http_ok boolean, http_err string"
+HTTP_STRUCT_SCHEMA = struct_type(
+    status=IntegerType(), content_type=StringType(), charset=StringType(),
+    content_length_hdr=LongType(), n_headers=IntegerType(),
+    location=StringType(), body=BinaryType(), http_ok=BooleanType(),
+    http_err=StringType(),
 )
 
 
@@ -268,46 +277,30 @@ def parse_http_response(
     }
 
 
+# parse_http_response's keys, in schema order (the struct minus its status pair)
+_HTTP_KEYS = HTTP_STRUCT_SCHEMA.fieldNames()[:-2]
+_HTTP_FAILED = (None,) * len(_HTTP_KEYS)
+
+
+def _http_split(v) -> tuple:
+    try:
+        d = parse_http_response(bytes(v) if v is not None else b"")
+    except ValueError as exc:
+        return (*_HTTP_FAILED, False, str(exc))
+    return (*(d[k] for k in _HTTP_KEYS), True, None)
+
+
+_HTTP_SPLIT = row_udf(HTTP_STRUCT_SCHEMA, _http_split)
+
+
 def http_response_split(c: Column | str) -> Column:
     """Column operator: binary HTTP response message → ONE struct column
     ``(status, content_type, charset, content_length_hdr, n_headers,
-    body, http_ok, http_err)``. Malformed messages yield
+    location, body, http_ok, http_err)``. Malformed messages yield
     ``http_ok=false`` + the error string with NULL fields (errors are
     data). Arrow-batched; no shuffle; compose with ``.withColumn`` and
     expand fields downstream."""
-    import pandas as pd
-
-    def split(s):
-        rows = []
-        for v in s:
-            raw = bytes(v) if v is not None else b""
-            try:
-                d = parse_http_response(raw)
-                rows.append(
-                    (d["status"], d["content_type"], d["charset"],
-                     d["content_length_hdr"], d["n_headers"],
-                     d["location"], d["body"], True, None)
-                )
-            except ValueError as exc:
-                rows.append(
-                    (None, None, None, None, None, None, None,
-                     False, str(exc))
-                )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "status", "content_type", "charset", "content_length_hdr",
-                "n_headers", "location", "body", "http_ok", "http_err",
-            ],
-        )
-
-    # the module defers `import pandas` to call time (repo convention), so
-    # the Series→DataFrame signature is declared via real annotation
-    # objects rather than unresolvable string hints
-    split.__annotations__ = {"s": pd.Series, "return": pd.DataFrame}
-    udf = F.pandas_udf(split, HTTP_STRUCT_SCHEMA)
-    col = F.col(c) if isinstance(c, str) else c
-    return udf(col)
+    return _HTTP_SPLIT(F.col(c) if isinstance(c, str) else c)
 
 
 def warc_http_records(
@@ -469,30 +462,18 @@ _MB_PY_CODECS = {
 }
 
 
-def _mb_decode(body: Column, label: Column) -> Column:
-    """Arrow stage: decode ``body`` with the Python codec for canonical
-    multi-byte charset ``label`` (errors='replace' — total). Callers
-    null the body for rows outside the multi-byte gate, so the Arrow
-    transfer carries bytes only for the minority that needs Python."""
-    import pandas as pd
+def _mb_decode(body, label):
+    """Decode ``body`` with the Python codec for canonical multi-byte
+    charset ``label`` (errors='replace' — total). Callers null the body
+    for rows outside the multi-byte gate, so the Arrow transfer carries
+    bytes only for the minority that needs Python."""
+    codec = _MB_PY_CODECS.get(label)
+    if body is None or codec is None:
+        return None
+    return bytes(body).decode(codec, errors="replace")
 
-    def dec(body_s, label_s):
-        out = []
-        for v, lab in zip(body_s, label_s):
-            if v is None or lab is None:
-                out.append(None)
-                continue
-            codec = _MB_PY_CODECS.get(lab)
-            if codec is None:
-                out.append(None)
-                continue
-            out.append(bytes(v).decode(codec, errors="replace"))
-        return pd.Series(out, dtype=object)
 
-    dec.__annotations__ = {
-        "body_s": pd.Series, "label_s": pd.Series, "return": pd.Series,
-    }
-    return F.pandas_udf(dec, "string")(body, label)
+_MB_DECODE = row_udf(StringType(), _mb_decode)
 
 
 def _cp1252(b: Column) -> Column:
@@ -645,7 +626,7 @@ def http_body_text_charset(
             decl_label.isNull() & mb_decl.isNotNull(), F.lit("declared")
         ).when(mb_label.isNotNull(), F.lit("meta"))
         # the Arrow stage sees bytes ONLY for multi-byte-gated rows
-        mb_text = _mb_decode(
+        mb_text = _MB_DECODE(
             F.when(mb_label.isNotNull(), b), mb_label
         )
     else:
@@ -710,7 +691,7 @@ def http_body_text_charset(
         # evaluate x to pick NULL vs false), so every fall-through row
         # paid BOTH full-body UTF-16 validity scans + the UTF-8 validity
         # chain before reaching the content arm — the measured cause of
-        # the r15 mb_off>mb_on inversion (scripts/profile_charset_mb.py:
+        # the r15 mb_off>mb_on inversion (OPTIMIZATION_r15.md §2:
         # +1.58 s over 500k docs for an 8.4% unhonored slice). `<=>`
         # yields a definite false for a null label, and codegen's AND
         # skips the right side when the left is false — unlabeled rows

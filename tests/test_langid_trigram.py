@@ -3,8 +3,12 @@ robustness on keyword-soup and empty inputs, and a 13-language accuracy
 fixture mirroring the reference's langdetect + min_conf=0.8 filter
 (text_clean_and_filter.py:385-408)."""
 
+import sys
+import types
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.util import PythonEvalType
 
 from llm_pretraining_data_pipeline_spark.functions import langid
 
@@ -112,6 +116,34 @@ class TestLangdetectParity:
         ]
         agree = sum(1 for r in both if r["heur"]["lang"] == r["ld"]["lang"])
         assert agree >= int(0.8 * len(both))
+
+    def test_langdetect_udf_declares_with_stub_library(self, monkeypatch):
+        """Runs everywhere: a stub ``langdetect`` stands in for the library,
+        so the UDF declaration and its row function are checked without the
+        learned language profiles."""
+
+        class Cand:
+            def __init__(self, lang, prob):
+                self.lang, self.prob = lang, prob
+
+        def detect_langs(text):
+            if text == "boom":
+                raise RuntimeError("no features in text")
+            return [Cand("de", 0.25), Cand("en", 0.75)]
+
+        stub = types.ModuleType("langdetect")
+        stub.DetectorFactory = type("DetectorFactory", (), {"seed": 0})
+        stub.detect_langs = detect_langs
+        monkeypatch.setitem(sys.modules, "langdetect", stub)
+
+        udf = langid.langdetect_udf()
+        assert udf is not None
+        assert udf.evalType == PythonEvalType.SQL_SCALAR_PANDAS_UDF
+        assert udf.returnType == langid.LANG_SCHEMA
+        assert langid._langdetect_row("Some prose here.") == ("en", 0.75)
+        assert stub.DetectorFactory.seed == 2025
+        for text in (None, "", "   ", "boom"):
+            assert langid._langdetect_row(text) == ("unk", 0.0)
 
 
 class TestVectorizedParity:

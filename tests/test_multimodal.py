@@ -1,8 +1,10 @@
 """Multimodal plumbing: schema, Arrow batch shapes, stubbed decode, dedup,
 frame-sample plan."""
 
+import pytest
 from pyspark.sql import functions as F
 
+from llm_pretraining_data_pipeline_spark.multimodal import bmp, gif, jpeg, mp3, mp4, png, wav, webp
 from llm_pretraining_data_pipeline_spark.multimodal import media as M
 
 
@@ -429,6 +431,22 @@ class TestPngHypothesisRoundTrip:
                 pass  # the one allowed failure mode
 
 
+# (decoder, payload builder, some decoded fields and their values)
+_DECODER_CASES = [
+    ("png_ahash", lambda: png.encode_png(8, 8, bytes(range(64)), color_type=0),
+     {"ahash_hi": 2**32 - 1, "ahash_lo": 0}),
+    ("png_feature_stats", lambda: png.encode_png(8, 8, bytes(range(64)), color_type=0),
+     {"width": 8, "height": 8}),
+    ("wav_feature_stats", lambda: wav.encode_wav([0, 100, -100, 50]), {"n_frames": 4}),
+    ("webp_feature_stats", lambda: webp.encode_webp_stub(8, 6), {"width": 8, "height": 6}),
+    ("mp3_feature_stats", lambda: mp3.encode_mp3_stub(3), {"n_frames": 3}),
+    ("gif_feature_stats", lambda: gif.encode_gif(8, 6), {"width": 8, "height": 6}),
+    ("bmp_feature_stats", lambda: bmp.encode_bmp(4, 4, bytes(48)), {"width": 4, "height": 4}),
+    ("mp4_meta_stats", lambda: mp4.encode_mp4_stub(1000, 5000, 8, 6), {"width": 8, "height": 6}),
+    ("jpeg_meta_stats", lambda: jpeg.encode_jpeg_stub(8, 6), {"width": 8, "height": 6}),
+]
+
+
 class TestAhash:
     """Integer average-hash over decoded pixels (round 8)."""
 
@@ -467,21 +485,23 @@ class TestAhash:
         ham = bin((h1[0] ^ h3[0])).count("1") + bin((h1[1] ^ h3[1])).count("1")
         assert ham <= 4
 
-    def test_png_ahash_respects_custom_id_col(self, spark):
-        """ADVICE r8 (low): the output schema's id field must be spelled
-        as the caller's id_col — mapInPandas matches pandas labels to
-        schema names, so a hardcoded 'media_id' broke any other id_col."""
-        from llm_pretraining_data_pipeline_spark.multimodal import media, png
-
-        data = png.encode_png(8, 8, bytes(range(64)), color_type=0)
+    @pytest.mark.parametrize(
+        "decoder, encode, want", _DECODER_CASES, ids=[c[0] for c in _DECODER_CASES]
+    )
+    def test_png_ahash_respects_custom_id_col(self, spark, decoder, encode, want):
+        """Every payload decoder keys its rows by the caller's id_col —
+        mapInPandas matches pandas labels to schema names, so a hardcoded
+        'media_id' breaks any other id_col (ADVICE r8 for png_ahash; the
+        same flaw in png_feature_stats)."""
         df = spark.createDataFrame(
-            [(7, bytearray(data))], "asset_id long, payload binary"
+            [(7, bytearray(encode()))], "asset_id long, payload binary"
         )
-        out = media.png_ahash(df, id_col="asset_id")
+        out = getattr(M, decoder)(df, id_col="asset_id")
         assert out.columns[0] == "asset_id"
+        assert out.columns[-2:] == ["decode_ok", "decode_err"]
         row = out.collect()[0]
-        assert row.asset_id == 7 and row.decode_ok
-        assert (row.ahash_hi, row.ahash_lo) == (2**32 - 1, 0)
+        assert row.asset_id == 7 and row.decode_ok, row
+        assert {k: row[k] for k in want} == want
 
     def test_too_small_for_grid_raises(self):
         import pytest

@@ -165,6 +165,23 @@ class TestPlanQuality:
         assert exchanges.count(_round_robin(spark)) == 1, plan
         _assert_spread_directly_above_scan(spark, plan)
 
+    def test_pipeline_python_nodes(self, spark):
+        """The default pipeline runs its per-row Python in exactly two
+        Arrow passes: NFKC alone (its output feeds the rest), then clean
+        metrics, lang ID and token stats together. Each UDF is named
+        after its row function."""
+        from llm_pretraining_data_pipeline_spark.plans import pipeline as P
+
+        raw = spark.createDataFrame([("u1", "some text here")], "url string, text string")
+        plan = P.run_pipeline(raw, P.PipelineConfig())._jdf.queryExecution().executedPlan()
+        nodes = [
+            line for line in plan.toString().splitlines() if "ArrowEvalPython" in line
+        ]
+        assert len(nodes) == 2, nodes
+        udfs = [set(re.findall(r"\b(_\w+)\(", node.split("], [")[0])) for node in nodes]
+        assert {"_nfkc"} in udfs, udfs
+        assert {"_clean_metrics_py", "_langid_trigrams", "_token_stats_py"} in udfs, udfs
+
     def test_semi_join_stays_semi(self, spark, sf_dir):
         plan = plan_of(QUERIES["rel_semi_join"].spark(spark, sf_dir))
         assert "LeftSemi" in plan

@@ -73,9 +73,8 @@ class TestRepetitionSignalsParity:
         rep = repetition_vec.rep_signals_struct(
             F.coalesce(F.col("text"), F.lit(""))
         )
-        vec = df.select(
-            "doc_id", *[rep[f].alias(f) for f in repetition_vec.REP_FIELDS]
-        )
+        names = repetition_vec.REP_SIGNALS_SCHEMA.fieldNames()
+        vec = df.select("doc_id", *[rep[f].alias(f) for f in names])
         fields = [c for c in expr.columns if c != "doc_id"]
         j = expr.alias("e").join(vec.alias("v"), "doc_id")
         cond = None

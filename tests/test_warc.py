@@ -2379,7 +2379,7 @@ class TestCharsetLabelArmShortCircuit:
     short-circuit — every fall-through row then pays BOTH full-body
     UTF-16 validity regex chains before reaching the content arm
     (measured 5x on an unlabeled 500k-doc corpus,
-    scripts/ab_charset_nullsafe.py / OPTIMIZATION_r15.md §2)."""
+    OPTIMIZATION_r15.md §2)."""
 
     def test_label_arms_are_null_safe(self, spark):
         from llm_pretraining_data_pipeline_spark.sources.http import (
