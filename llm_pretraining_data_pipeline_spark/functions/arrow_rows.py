@@ -1,11 +1,13 @@
 """The one Arrow adapter for per-row Python work.
 
-Catalyst has no equivalent for a handful of per-row steps (NFKC, the
+Catalyst has no equivalent for a handful of per-row steps (the
 single-tokenisation metric blocks, lang ID, HTML entity decode, the HTTP
 split, the multi-byte charset decode, the sha1-base32 payload digest and
-the media payload decoders). Each is written as a plain function of one
-row; this module turns it into an Arrow-batched Spark operator, so the
-batch loop, the pandas shaping and the error contract exist once:
+the media payload decoders; NFKC, which has no builtin either, runs in the
+JVM through ICU4J instead, see ``text_norm.nfkc_normalize``). Each is
+written as a plain function of one row; this module turns it into an
+Arrow-batched Spark operator, so the batch loop, the pandas shaping and
+the error contract exist once:
 
   * ``row_udf(return_type, row_fn)`` — a scalar pandas UDF that maps
     ``row_fn`` over one or more input Series (one ``ArrowEvalPython``

@@ -6,21 +6,17 @@ Reference semantics (all pandas row loops there, all JVM expressions here):
   * ``canonicalize_for_exact/near`` — duplication.py:31-56
   * ``pick_text`` fallback  — Export_to_jsonl.py:25-30
 
-Only NFKC unicode normalisation has no Spark builtin; it is the one
-Arrow-batched row UDF in this module (optional — ``normalize_text_expr`` can
-be built without it for ASCII-ish corpora and for the DuckDB oracle, which
-has no NFKC either).
+Only NFKC unicode normalisation has no Spark builtin. It runs in the JVM
+too, through the ICU4J that Spark bundles, so NFKC follows that ICU's
+Unicode version, not Python's ``unicodedata`` (see ``nfkc_normalize``). It
+is optional — ``normalize_text_expr`` can be built without it for
+ASCII-ish corpora and for the DuckDB oracle, which has no NFKC either.
 """
 
 from __future__ import annotations
 
-import unicodedata
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
-
-from llm_pretraining_data_pipeline_spark.functions.arrow_rows import row_udf
 
 # U+0000-001F and U+007F-009F, as in reference CONTROL_CHAR_RE
 # (text_clean_and_filter.py:50-53). Reference replaces them with a space.
@@ -36,26 +32,26 @@ PY_WS_RE = "(?U)[\\s\\x1c-\\x1f]+"
 NULL_LIKE_STRINGS = ["nan", "none", "null", "n/a", "null value"]
 
 
-def _nfkc(x):
-    return unicodedata.normalize("NFKC", x) if isinstance(x, str) else x
-
-
-_NFKC = row_udf(StringType(), _nfkc)
-
-
 def nfkc_normalize(c: Column | str) -> Column:
-    """NFKC unicode normalisation (the one step with no Spark builtin), as
-    an Arrow-batched row UDF; null stays null.
+    """NFKC unicode normalisation (the one step with no Spark builtin), in
+    the JVM: ICU4J's ``Normalizer.compose(s, true)`` called through
+    ``reflect``, from the ICU jar Spark bundles. Null stays null — the
+    guard matters, since ``compose(null)`` throws inside the task.
 
-    Deliberately the PLAIN udf with no ASCII-mask fast path: masking
-    pure-ASCII rows to null before the Arrow transfer (NFKC is identity on
-    ASCII) was A/B-tested twice — rounds 1 and 3, NOTES_r1.md — and loses
-    warm both times (~0.82 s vs 0.73 s per 100k docs at sf0.1: the per-row
-    ``rlike`` scan costs more than the null payloads save; steady-state
-    NFKC is only ~1.2 µs/row). Masking only wins on cold Python workers,
-    which is not the steady-state that matters.
+    NFKC therefore follows the bundled ICU's Unicode version, not the
+    running Python's ``unicodedata``. They agree on every code point that
+    both assign; they can differ only on code points the older of the two
+    leaves unassigned. With ICU4J 77.1 (Unicode 16) against Python 3.11
+    (Unicode 14.0), 98 code points differ, all unassigned in 14.0 — for
+    example U+1CCD6 maps to ``A``. Catalyst counts ``reflect`` as
+    nondeterministic, like ingest's ``monotonically_increasing_id``: the
+    optimizer never duplicates it or pushes a filter below it.
     """
-    return _NFKC(_col(c))
+    s = _col(c)
+    return F.when(
+        s.isNotNull(),
+        F.reflect(F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), s, F.lit(True)),
+    )
 
 
 def _col(c: Column | str) -> Column:
@@ -79,7 +75,7 @@ def normalize_text_expr(c: Column | str, *, nfkc: bool = True) -> Column:
     """
     s = _col(c).cast("string")
     if nfkc:
-        s = nfkc_normalize(s)  # Arrow row UDF
+        s = nfkc_normalize(s)
     s = F.regexp_replace(s, CONTROL_CHAR_CLASS, " ")
     s = collapse_ws(s)
     return F.nullif(s, F.lit(""))

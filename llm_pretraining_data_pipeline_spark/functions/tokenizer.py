@@ -131,12 +131,10 @@ def with_tokenisation(
                 "it is not installed in this environment"
             )
         return hf_tokenize_map(df, text_col)
-    ids = input_ids(text_col)
-    return (
-        df.withColumn("input_ids", ids)
-        .withColumn("attention_mask", attention_mask("input_ids"))
-        .withColumn("n_tokens", F.size(F.col("input_ids")).cast("long"))
-    )
+    return df.withColumn("input_ids", input_ids(text_col)).withColumns({
+        "attention_mask": attention_mask("input_ids"),
+        "n_tokens": F.size(F.col("input_ids")).cast("long"),
+    })
 
 
 def _hf_available() -> bool:

@@ -44,10 +44,19 @@ def first_match_expr(rules: Sequence[Rule], carry: Column | None = None) -> Colu
     return expr
 
 
+def rule_column(
+    df: DataFrame, rules: Sequence[Rule], column: str = DROP_REASON
+) -> dict[str, Column]:
+    """``{column: cascade}`` over ``df``, preserving any reason already
+    present in ``column`` — a ``withColumns`` entry, so a stage can set its
+    reason in the same projection as the columns it adds alongside."""
+    carry = F.col(column) if column in df.columns else None
+    return {column: first_match_expr(rules, carry=carry)}
+
+
 def apply_rules(df: DataFrame, rules: Sequence[Rule], column: str = DROP_REASON) -> DataFrame:
     """Apply a cascade, preserving any reason already present in ``column``."""
-    carry = F.col(column) if column in df.columns else None
-    return df.withColumn(column, first_match_expr(rules, carry=carry))
+    return df.withColumns(rule_column(df, rules, column))
 
 
 def split_kept_dropped(df: DataFrame, column: str = DROP_REASON) -> tuple[DataFrame, DataFrame]:

@@ -37,7 +37,7 @@ from llm_pretraining_data_pipeline_spark.functions import (
     tokenizer,
 )
 from llm_pretraining_data_pipeline_spark.operators import dedup as dedup_ops
-from llm_pretraining_data_pipeline_spark.operators.rules import apply_rules
+from llm_pretraining_data_pipeline_spark.operators.rules import apply_rules, rule_column
 from llm_pretraining_data_pipeline_spark.operators.skew import spread_small_input
 
 
@@ -106,10 +106,12 @@ def ingest(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
     choice and shard position, are the same with or without the spread.
     """
     return spread_small_input(
-        df.withColumn("doc_id", hashing.make_doc_id("url", "text"))
-        .withColumn("source", F.lit(cfg.source_name))
-        .withColumn("ingest_ts", F.current_timestamp())
-        .withColumn("row_order", F.monotonically_increasing_id())
+        df.withColumns({
+            "doc_id": hashing.make_doc_id("url", "text"),
+            "source": F.lit(cfg.source_name),
+            "ingest_ts": F.current_timestamp(),
+            "row_order": F.monotonically_increasing_id(),
+        })
     )
 
 
@@ -118,63 +120,64 @@ def clean_filter(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataF
     PII/toxicity/model_q + quality filter (F3).
 
     The entire stage is one projection chain + one when-cascade — Catalyst
-    fuses it into a single whole-stage-codegen'd pass over the data.
+    fuses it into a single whole-stage-codegen'd pass over the data. Each
+    ``withColumns`` below is one dependency step: its columns read only
+    columns of earlier steps, so the plan is built in 7 projections, not
+    one per column.
     """
     out = df.withColumn("text_norm", text_norm.normalize_text_expr("text", nfkc=cfg.use_nfkc))
-    out = out.withColumn("char_len", text_norm.char_len("text_norm"))
-    out = out.withColumn("word_count", text_norm.word_count("text_norm"))
+    out = out.withColumns({
+        "char_len": text_norm.char_len("text_norm"),
+        "word_count": text_norm.word_count("text_norm"),
+    })
 
     # F1 prefilter (text_clean_and_filter.py:133-184). `non_string` cannot
     # occur in a typed engine (schema enforces string) but stays for parity.
     raw, norm = F.col("text"), F.col("text_norm")
     not_empty = norm.isNotNull()
-    out = apply_rules(
-        out,
-        [
-            ("missing", raw.isNull()),
-            ("empty_after_clean", norm.isNull()),
-            ("null_like", F.lower(F.trim(norm)).isin(*text_norm.NULL_LIKE_STRINGS)),
-            ("numeric_like", norm.rlike(r"^[\d\.\-]+$")),
-            ("too_short_chars", (F.col("char_len") < cfg.min_chars) & not_empty),
-            ("too_short_words", (F.col("word_count") < cfg.min_words) & not_empty),
-            ("too_long", (F.col("char_len") > cfg.max_chars) & not_empty),
-        ],
-    )
-
-    # Reference reassigns text = text_norm downstream (:655-656).
-    out = out.withColumn("text", F.coalesce(norm, F.lit(None).cast("string")))
+    out = out.withColumns({
+        **rule_column(
+            out,
+            [
+                ("missing", raw.isNull()),
+                ("empty_after_clean", norm.isNull()),
+                ("null_like", F.lower(F.trim(norm)).isin(*text_norm.NULL_LIKE_STRINGS)),
+                ("numeric_like", norm.rlike(r"^[\d\.\-]+$")),
+                ("too_short_chars", (F.col("char_len") < cfg.min_chars) & not_empty),
+                ("too_short_words", (F.col("word_count") < cfg.min_words) & not_empty),
+                ("too_long", (F.col("char_len") > cfg.max_chars) & not_empty),
+            ],
+        ),
+        # Reference reassigns text = text_norm downstream (:655-656).
+        "text": F.coalesce(norm, F.lit(None).cast("string")),
+    })
 
     # Quality metrics on the normalised text (:660-661). One Arrow pass
     # computes the whole stage-2 metric block (these four + the six
     # toxicity scores below + non_latin_ratio) — bit-identical to the
     # expression forms in metrics.py/toxicity.py, which re-tokenise the
     # text once per metric (metrics_vec.py has the rationale and contract).
-    # With the Arrow lang ID below, measured 36 s against 88 s for the
-    # pure-Catalyst chain at 500k docs/local[32] (warm).
-    out = out.withColumn("_m", metrics_vec.clean_metrics_struct("text"))
-    out = (
-        out.withColumn("n_chars", F.col("_m.n_chars"))
-        .withColumn("n_words", F.col("_m.n_words"))
-        .withColumn("alpha_ratio", F.col("_m.alpha_ratio"))
-        .withColumn("repetition_ratio", F.col("_m.repetition_ratio"))
-    )
-
     # Language ID (:692-699): the Arrow-batched heuristic (bit-identical to
     # langid.langid_struct, whose 15 regex scans per row are the heaviest
-    # tree in the chain).
-    out = out.withColumn(
-        "_lang",
-        langid.langid_struct_vectorized("text", use_trigrams=cfg.langid_trigrams),
-    )
-    out = (
-        out.withColumn("lang_pred", F.col("_lang.lang"))
-        .withColumn("lang_score", F.col("_lang.score"))
-        .withColumn("non_latin_ratio", F.col("_m.non_latin_ratio"))
-        .drop("_lang")
-    )
+    # tree in the chain). With the Arrow metrics, measured 36 s against
+    # 88 s for the pure-Catalyst chain at 500k docs/local[32] (warm).
+    out = out.withColumns({
+        "_m": metrics_vec.clean_metrics_struct("text"),
+        "_lang": langid.langid_struct_vectorized("text", use_trigrams=cfg.langid_trigrams),
+    })
+    out = out.withColumns({
+        "n_chars": F.col("_m.n_chars"),
+        "n_words": F.col("_m.n_words"),
+        "alpha_ratio": F.col("_m.alpha_ratio"),
+        "repetition_ratio": F.col("_m.repetition_ratio"),
+        "lang_pred": F.col("_lang.lang"),
+        "lang_score": F.col("_lang.score"),
+        "non_latin_ratio": F.col("_m.non_latin_ratio"),
+    })
+    lang_rules = {}
     if cfg.apply_lang_filter:
         allowed = list(cfg.allowed_langs)
-        out = apply_rules(
+        lang_rules = rule_column(
             out,
             [
                 ("lang_unknown", F.col("lang_pred") == "unk"),
@@ -186,86 +189,92 @@ def clean_filter(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataF
                 ("non_latin_heavy", F.col("non_latin_ratio") > cfg.non_latin_threshold),
             ],
         )
-    out = out.withColumn("lang", F.col("lang_pred"))
-
     # PII heuristics + toxicity + model hook (:708-720).
-    out = out.withColumn("email_hits", pii.email_hits("text"))
-    out = out.withColumn("phone_hits", pii.simple_phone_hits("text"))
-    for name in (
-        "toxicity", "severe_toxicity", "insult", "threat",
-        "identity_attack", "sexual_explicit",
-    ):
-        out = out.withColumn(name, F.col(f"_m.{name}"))
-    out = out.drop("_m")
-    out = out.withColumn(
-        "model_q",
-        scoring.model_quality_score(
-            "lang_score", "alpha_ratio", "repetition_ratio", "n_words",
-            # has_pii proper is a stage-4 column; at this point the reference
-            # only has the simple hit counters (:708-709), so P8 uses those.
-            (F.col("email_hits") + F.col("phone_hits")) > 0,
-            backend=cfg.model_quality_backend,
-        ),
-    )
+    out = out.withColumns({
+        **lang_rules,
+        "lang": F.col("lang_pred"),
+        "email_hits": pii.email_hits("text"),
+        "phone_hits": pii.simple_phone_hits("text"),
+        **{
+            name: F.col(f"_m.{name}")
+            for name in (
+                "toxicity", "severe_toxicity", "insult", "threat",
+                "identity_attack", "sexual_explicit",
+            )
+        },
+    })
 
     # F3 quality filter (quality_filter_row, :537-595).
     url = F.coalesce(F.col("url").cast("string"), F.lit(""))
     blocked = F.lit(False)
     for pat in cfg.blocked_url_patterns:
         blocked = blocked | url.rlike(pat)
-    out = apply_rules(
-        out,
-        [
-            ("empty_text", F.col("text").isNull() | (F.trim(F.col("text")) == "")),
-            ("too_short", F.col("n_words") < cfg.min_words_quality),
-            ("too_long", F.col("n_words") > cfg.max_words_quality),
-            ("low_alpha_ratio", F.col("alpha_ratio") < cfg.min_alpha_ratio),
-            ("high_repetition", F.col("repetition_ratio") > cfg.max_repetition),
-            ("blocked_url", blocked),
-            ("pii_heavy", (F.col("email_hits") + F.col("phone_hits")) > cfg.max_pii_hits),
-            ("high_toxicity", F.col("toxicity") >= cfg.max_toxicity),
-        ],
-    )
-    return out
+    out = out.withColumns({
+        "model_q": scoring.model_quality_score(
+            "lang_score", "alpha_ratio", "repetition_ratio", "n_words",
+            # has_pii proper is a stage-4 column; at this point the reference
+            # only has the simple hit counters (:708-709), so P8 uses those.
+            (F.col("email_hits") + F.col("phone_hits")) > 0,
+            backend=cfg.model_quality_backend,
+        ),
+        **rule_column(
+            out,
+            [
+                ("empty_text", F.col("text").isNull() | (F.trim(F.col("text")) == "")),
+                ("too_short", F.col("n_words") < cfg.min_words_quality),
+                ("too_long", F.col("n_words") > cfg.max_words_quality),
+                ("low_alpha_ratio", F.col("alpha_ratio") < cfg.min_alpha_ratio),
+                ("high_repetition", F.col("repetition_ratio") > cfg.max_repetition),
+                ("blocked_url", blocked),
+                ("pii_heavy", (F.col("email_hits") + F.col("phone_hits")) > cfg.max_pii_hits),
+                ("high_toxicity", F.col("toxicity") >= cfg.max_toxicity),
+            ],
+        ),
+    })
+    return out.drop("_m", "_lang")
 
 
 def deep_clean_pii(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
     """Stage 4: structural cleanup + token stats + low-info filters (F4) +
-    PII mask (deep_clean_and_pii.py:339-619)."""
+    PII mask (deep_clean_and_pii.py:339-619), one ``withColumns`` per
+    dependency step."""
     out = df.withColumn("text_deep_clean", structural.structural_cleanup("text_norm"))
     # One Arrow pass for the whole token-stat block (metrics_vec.py); the
     # spam predicate is re-expressed over the struct fields with the
     # identical guarded-ratio arithmetic as is_repetitive_token_spam.
     out = out.withColumn("_ts", metrics_vec.token_stats_struct("text_deep_clean"))
-    out = (
-        out.withColumn("token_count", F.col("_ts.token_count"))
-        .withColumn("unique_tokens", F.col("_ts.unique_tokens"))
-        .withColumn("unique_token_ratio", F.col("_ts.unique_token_ratio"))
-        .withColumn("stopword_ratio", F.col("_ts.stopword_ratio"))
-    )
+    token_count = F.col("_ts.token_count")
     max_freq_ratio = F.when(
-        F.col("_ts.token_count") > 0,
-        F.col("_ts.max_token_frequency").cast("double")
-        / F.col("_ts.token_count").cast("double"),
+        token_count > 0,
+        F.col("_ts.max_token_frequency").cast("double") / token_count.cast("double"),
     ).otherwise(F.lit(0.0))
-    spam = (F.col("_ts.token_count") >= 3) & (max_freq_ratio > F.lit(0.70))
-    enough = F.col("token_count") >= cfg.min_tokens_for_stats
-    out = apply_rules(
-        out,
-        [
-            ("repetitive_token_spam", spam),
-            ("low_unique_token_ratio", enough & (F.col("unique_token_ratio") < cfg.low_unique_ratio)),
-            ("high_stopword_ratio", enough & (F.col("stopword_ratio") > cfg.high_stopword_ratio)),
-        ],
-    )
-    out = (
-        out.drop("_ts")
-        .withColumn("text_pii_masked", pii.mask_pii("text_deep_clean"))
-        .withColumn("pii_email_hits", pii.email_hits("text_deep_clean"))
-        .withColumn("pii_phone_hits", pii.phone_hits("text_deep_clean"))
-        .withColumn("pii_cc_hits", pii.cc_hits("text_deep_clean"))
-        .withColumn("pii_iban_hits", pii.iban_hits("text_deep_clean"))
-    )
+    spam = (token_count >= 3) & (max_freq_ratio > F.lit(0.70))
+    enough = token_count >= cfg.min_tokens_for_stats
+    out = out.withColumns({
+        "token_count": token_count,
+        "unique_tokens": F.col("_ts.unique_tokens"),
+        "unique_token_ratio": F.col("_ts.unique_token_ratio"),
+        "stopword_ratio": F.col("_ts.stopword_ratio"),
+        **rule_column(
+            out,
+            [
+                ("repetitive_token_spam", spam),
+                (
+                    "low_unique_token_ratio",
+                    enough & (F.col("_ts.unique_token_ratio") < cfg.low_unique_ratio),
+                ),
+                (
+                    "high_stopword_ratio",
+                    enough & (F.col("_ts.stopword_ratio") > cfg.high_stopword_ratio),
+                ),
+            ],
+        ),
+        "text_pii_masked": pii.mask_pii("text_deep_clean"),
+        "pii_email_hits": pii.email_hits("text_deep_clean"),
+        "pii_phone_hits": pii.phone_hits("text_deep_clean"),
+        "pii_cc_hits": pii.cc_hits("text_deep_clean"),
+        "pii_iban_hits": pii.iban_hits("text_deep_clean"),
+    })
     out = out.withColumn(
         "has_pii",
         (F.col("pii_email_hits") + F.col("pii_phone_hits") + F.col("pii_cc_hits")
@@ -273,7 +282,7 @@ def deep_clean_pii(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> Dat
     )
     if cfg.drop_pii:
         out = apply_rules(out, [("pii", F.col("has_pii"))])
-    return out
+    return out.drop("_ts")
 
 
 def dedup(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
@@ -340,25 +349,23 @@ def minhash_near_dedup(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) ->
     )
     out = df.join(marks, "doc_id", "left")
     is_dup = F.col("_mh_canon").isNotNull()
-    out = out.withColumn("is_dup_minhash", is_dup)
+    cols = {"is_dup_minhash": is_dup}
     if "dup_of" in df.columns:
-        out = out.withColumn(
-            "dup_of", F.coalesce(F.col("dup_of"), F.when(is_dup, F.col("_mh_canon")))
-        )
-    out = out.withColumn(
-        "drop_reason",
-        F.coalesce(F.col("drop_reason"), F.when(is_dup, F.lit("minhash_duplicate"))),
+        cols["dup_of"] = F.coalesce(F.col("dup_of"), F.when(is_dup, F.col("_mh_canon")))
+    cols["drop_reason"] = F.coalesce(
+        F.col("drop_reason"), F.when(is_dup, F.lit("minhash_duplicate"))
     )
-    return out.drop("_mh_canon")
+    return out.withColumns(cols).drop("_mh_canon")
 
 
 def score_mixture(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
     """Stage 6: quality score + mixture/subset (scoring_and_mixture.py:111-151)."""
-    out = df.withColumn(
-        "quality_score",
-        scoring.quality_score("lang_score", "token_count", "unique_token_ratio", "has_pii"),
-    )
-    out = out.withColumn("mixture_name", F.lit(cfg.mixture_name))
+    out = df.withColumns({
+        "quality_score": scoring.quality_score(
+            "lang_score", "token_count", "unique_token_ratio", "has_pii"
+        ),
+        "mixture_name": F.lit(cfg.mixture_name),
+    })
     return out.withColumn("subset", scoring.subset("quality_score", cfg.high_quality_threshold))
 
 

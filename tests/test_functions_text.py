@@ -2,6 +2,7 @@
 semantics) expectations. Each case mirrors the cited reference function's
 behavior on edge inputs (SURVEY.md §2.2)."""
 
+import random
 import re
 import unicodedata
 
@@ -103,6 +104,85 @@ class TestNormalize:
         )
         got = [r.picked for r in df.select(text_norm.pick_text("a", "b", "c").alias("picked")).collect()]
         assert got == ["fallback", "primary", "z", ""]
+
+
+def _icu_types(spark, cps):
+    """ICU's general category (``UCharacter.getType``; 0 = unassigned) of
+    each code point, from the ICU that Spark bundles, in one job."""
+    df = spark.createDataFrame([(cp,) for cp in cps], "cp int")
+    icu_type = F.reflect(F.lit("com.ibm.icu.lang.UCharacter"), F.lit("getType"), F.col("cp"))
+    return {r.cp: int(r.t) for r in df.select("cp", icu_type.alias("t")).collect()}
+
+
+def _py_assigned(cp):
+    return unicodedata.category(chr(cp)) != "Cn"
+
+
+class TestNfkc:
+    """NFKC runs on the JVM (ICU4J); it must agree with Python's
+    ``unicodedata`` wherever both Unicode versions assign the code points."""
+
+    def test_every_code_point_both_assign(self, spark):
+        """All 1,112,064 non-surrogate code points in one job: the JVM
+        returns only those NFKC changes, and every code point assigned in
+        both the running Python and the bundled ICU must normalise exactly
+        as ``unicodedata.normalize("NFKC", ...)`` does."""
+        cp = F.col("id").cast("int")
+        char = F.reflect(F.lit("java.lang.Character"), F.lit("toString"), cp)
+        changed = {
+            r.cp: r.n
+            for r in spark.range(0x110000)
+            .filter((F.col("id") < 0xD800) | (F.col("id") > 0xDFFF))
+            .select(cp.alias("cp"), char.alias("c"))
+            .select("cp", "c", text_norm.nfkc_normalize("c").alias("n"))
+            .filter(F.col("n") != F.col("c"))
+            .collect()
+        }
+        differ = []
+        for code in (*range(0xD800), *range(0xE000, 0x110000)):
+            c = chr(code)
+            if unicodedata.normalize("NFKC", c) != changed.get(code, c):
+                differ.append(code)
+        types = _icu_types(spark, differ)
+        both = [hex(code) for code in differ if _py_assigned(code) and types[code] != 0]
+        assert both == [], both
+
+    def test_random_mark_jamo_and_decomposable_sequences(self, spark):
+        """Seeded sequences of combining marks, Hangul jamo and syllables,
+        decomposable characters and ASCII bases (canonical reordering and
+        composition across characters) match Python's NFKC."""
+        bmp_smp = range(0x30000)
+        marks = [cp for cp in bmp_smp if unicodedata.category(chr(cp)) in ("Mn", "Mc", "Me")]
+        decomposable = [cp for cp in bmp_smp if unicodedata.decomposition(chr(cp))]
+        jamo = [
+            *range(0x1100, 0x1200), *range(0x3131, 0x318F), *range(0xA960, 0xA97D),
+            *range(0xD7B0, 0xD7FC), *range(0xAC00, 0xD7A4, 97),
+        ]
+        jamo = [cp for cp in jamo if _py_assigned(cp)]
+        types = _icu_types(spark, sorted({*marks, *decomposable, *jamo}))
+        pools = [
+            [cp for cp in pool if types[cp] != 0]
+            for pool in (marks, decomposable, jamo)
+        ]
+        pools.append([ord(c) for c in "aeiouAEIOUnNcCsSkKgGyY "])
+        rng = random.Random(20261020)
+        texts = [
+            "".join(chr(rng.choice(rng.choice(pools))) for _ in range(rng.randint(1, 8)))
+            for _ in range(20_000)
+        ]
+        got = _df(spark, texts).select("id", text_norm.nfkc_normalize("text").alias("n"))
+        bad = [
+            (texts[r.id], r.n)
+            for r in got.collect()
+            if r.n != unicodedata.normalize("NFKC", texts[r.id])
+        ]
+        assert bad == [], bad[:5]
+
+    def test_null_and_empty(self, spark):
+        rows = _df(spark, [None, ""]).select(
+            "id", text_norm.nfkc_normalize("text").alias("n")
+        ).orderBy("id").collect()
+        assert [r.n for r in rows] == [None, ""]
 
 
 class TestMetrics:

@@ -110,22 +110,27 @@ def result(spark):
     raw = spark.createDataFrame(
         [(u, t) for u, t, _ in CORPUS], "url string, text string"
     )
-    cfg = P.PipelineConfig(use_nfkc=False)  # corpus is plain; skip the UDF
+    cfg = P.PipelineConfig(use_nfkc=False)  # corpus is plain; NFKC is identity on it
     out = P.run_pipeline(raw, cfg).cache()
     yield out
     out.unpersist()
 
 
 def test_run_pipeline_plan_round_trips(spark, monkeypatch):
-    """Building the pipeline's plan (no job) takes at most 3,000 py4j
-    round trips. With PySpark's call-site capture on, every Column call
-    pays about 5 more and the same plan takes ~5,000. A fresh process
-    state is simulated: the capture flag is read anew from the session.
-    py4j's object releases are not counted: how many fall inside the
-    build depends on when objects made before it die."""
+    """Building the pipeline's plan (no job) takes at most 2,500 py4j
+    round trips (~2,200 measured) and creates at most 80 DataFrames (66
+    measured). With PySpark's call-site capture on, every Column call
+    pays about 5 more round trips and the same plan takes ~5,000. Each
+    DataFrame is one analysis of the growing plan: a stage adds its
+    columns in one ``withColumns`` per dependency step, where one
+    ``withColumn`` per column made 134. A fresh process state is
+    simulated: the capture flag is read anew from the session. py4j's
+    object releases are not counted: how many fall inside the build
+    depends on when objects made before it die."""
     from py4j import protocol as proto
     from py4j.clientserver import ClientServerConnection
     from pyspark.errors import utils
+    from pyspark.sql.classic.dataframe import DataFrame
 
     from llm_pretraining_data_pipeline_spark.session import get_spark
 
@@ -142,10 +147,19 @@ def test_run_pipeline_plan_round_trips(spark, monkeypatch):
             calls.append(1)
         return send(self, command)
 
+    frames = []
+    init = DataFrame.__init__
+
+    def counted_init(self, *args, **kwargs):
+        frames.append(1)
+        init(self, *args, **kwargs)
+
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    monkeypatch.setattr(DataFrame, "__init__", counted_init)
     P.run_pipeline(raw, P.PipelineConfig())
     monkeypatch.undo()
-    assert len(calls) <= 3000, len(calls)
+    assert len(calls) <= 2500, len(calls)
+    assert len(frames) <= 80, len(frames)
 
 
 def test_ingest_spreads_one_split_input(spark, tmp_path, monkeypatch):

@@ -166,10 +166,10 @@ class TestPlanQuality:
         _assert_spread_directly_above_scan(spark, plan)
 
     def test_pipeline_python_nodes(self, spark):
-        """The default pipeline runs its per-row Python in exactly two
-        Arrow passes: NFKC alone (its output feeds the rest), then clean
-        metrics, lang ID and token stats together. Each UDF is named
-        after its row function."""
+        """The default pipeline runs its per-row Python in exactly one
+        Arrow pass: clean metrics, lang ID and token stats together. NFKC
+        runs in the JVM (ICU4J), so no Python node serves it. Each UDF is
+        named after its row function."""
         from llm_pretraining_data_pipeline_spark.plans import pipeline as P
 
         raw = spark.createDataFrame([("u1", "some text here")], "url string, text string")
@@ -177,10 +177,10 @@ class TestPlanQuality:
         nodes = [
             line for line in plan.toString().splitlines() if "ArrowEvalPython" in line
         ]
-        assert len(nodes) == 2, nodes
-        udfs = [set(re.findall(r"\b(_\w+)\(", node.split("], [")[0])) for node in nodes]
-        assert {"_nfkc"} in udfs, udfs
-        assert {"_clean_metrics_py", "_langid_trigrams", "_token_stats_py"} in udfs, udfs
+        assert len(nodes) == 1, nodes
+        udfs = set(re.findall(r"\b(_\w+)\(", nodes[0].split("], [")[0]))
+        assert udfs == {"_clean_metrics_py", "_langid_trigrams", "_token_stats_py"}, udfs
+        assert "reflect(com.ibm.icu.text.Normalizer, compose" in plan.toString()
 
     def test_semi_join_stays_semi(self, spark, sf_dir):
         plan = plan_of(QUERIES["rel_semi_join"].spark(spark, sf_dir))
@@ -868,3 +868,41 @@ class TestRound12bPlans:
         # (target, anchor) level) and no window anywhere
         assert "partial" in plan.lower()
         assert "Window" not in plan
+
+
+def _plan_audit_module():
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "..", "scripts", "plan_audit.py")
+    spec = importlib.util.spec_from_file_location("plan_audit", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+class TestPlanAuditCheck:
+    """``plan_audit.py --check`` reads node counts back from the rendered
+    file and names each query whose counts drifted. No plans are built."""
+
+    def test_committed_audit_parses_every_query(self):
+        import os
+
+        import llm_pretraining_data_pipeline_spark.queries_corpus  # noqa: F401
+
+        audit = _plan_audit_module()
+
+        path = os.path.join(os.path.dirname(__file__), "..", "PLAN_AUDIT.md")
+        with open(path) as fh:
+            committed = audit.parse(fh.read())
+        assert set(committed) == set(QUERIES), set(committed) ^ set(QUERIES)
+
+    def test_drift_names_changed_added_and_missing_queries(self):
+        audit = _plan_audit_module()
+        labels = [label for label, _ in audit.NODES]
+        rows = [(name, dict.fromkeys(labels, 1)) for name in ("q_a", "q_b", "q_c")]
+        committed = audit.parse(audit.render(rows, [], 1.0))
+        assert audit.drift(committed, rows, []) == []
+        changed = [(name, dict(c, ArrowEval=2 if name == "q_b" else 1)) for name, c in rows]
+        lines = audit.drift(committed, changed[:2] + [("q_d", rows[0][1])], [("q_e", "boom")])
+        assert [line.split(":")[0] for line in lines] == ["q_b", "q_c", "q_d", "q_e"]
