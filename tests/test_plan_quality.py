@@ -6,13 +6,16 @@ small dimensions broadcast, scans prune columns, top-k avoids global sorts.
 """
 
 import contextlib
+import importlib.util
 import io
 import re
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from llm_pretraining_data_pipeline_spark.queries import QUERIES
+import llm_pretraining_data_pipeline_spark.queries_corpus  # noqa: F401 (registers)
 import llm_pretraining_data_pipeline_spark.queries_ext  # noqa: F401 (registers)
 import llm_pretraining_data_pipeline_spark.queries_rel  # noqa: F401 (registers)
 
@@ -870,12 +873,11 @@ class TestRound12bPlans:
         assert "Window" not in plan
 
 
-def _plan_audit_module():
-    import importlib.util
-    import os
+ROOT = Path(__file__).resolve().parent.parent
 
-    path = os.path.join(os.path.dirname(__file__), "..", "scripts", "plan_audit.py")
-    spec = importlib.util.spec_from_file_location("plan_audit", path)
+
+def _plan_audit_module():
+    spec = importlib.util.spec_from_file_location("plan_audit", ROOT / "scripts" / "plan_audit.py")
     module = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(module)
     return module
@@ -886,15 +888,7 @@ class TestPlanAuditCheck:
     file and names each query whose counts drifted. No plans are built."""
 
     def test_committed_audit_parses_every_query(self):
-        import os
-
-        import llm_pretraining_data_pipeline_spark.queries_corpus  # noqa: F401
-
-        audit = _plan_audit_module()
-
-        path = os.path.join(os.path.dirname(__file__), "..", "PLAN_AUDIT.md")
-        with open(path) as fh:
-            committed = audit.parse(fh.read())
+        committed = _plan_audit_module().parse((ROOT / "PLAN_AUDIT.md").read_text())
         assert set(committed) == set(QUERIES), set(committed) ^ set(QUERIES)
 
     def test_drift_names_changed_added_and_missing_queries(self):
