@@ -386,35 +386,6 @@ def main() -> int:
     meta["web_curation_docs_per_sec"] = round(n_wc / timings["web_curation_e2e"], 1)
     meta["web_curation_gates"] = "robots+extract_main+smooth+entities"
 
-    # VERDICT r12 item 3: opt-in per-stage warm split of the recipe (a
-    # cumulative config ladder; rung deltas attribute cost per gate).
-    # Same-session A/B vs the r11 seal code (scripts/
-    # profile_web_curation.py, round 13) measured HEAD at parity
-    # (13.6-14.7 s vs 13.97-13.99 s full recipe) — the r12 quiet-min move
-    # 12.7->18.0 s was cross-session environment drift, not code.
-    if os.environ.get("BENCH_WC_STAGES"):
-        # rung definitions shared with scripts/profile_web_curation.py
-        # (ONE source of truth: WC.BENCH_STAGE_LADDER); each rung is
-        # warmed once and a FRESH plan is timed — the recipe embeds a
-        # lazy localCheckpoint, so re-collecting the SAME DataFrame
-        # would read the checkpoint back (~0.1 s) instead of doing the
-        # work; rebuilding forces a real recompute with warm JIT/codegen
-        stage_secs = {}
-        for rung, kw, with_robots in WC.BENCH_STAGE_LADDER:
-            def _build(kw=kw, with_robots=with_robots):
-                return WC.curation_summary(
-                    WC.run_web_curation(
-                        wc_raw, WC.WebCurationConfig(**kw), url_col="url",
-                        robots_rules=wc_rules if with_robots else None,
-                    )
-                )
-
-            _build().collect()  # warm-up
-            t0 = time.perf_counter()
-            _build().collect()
-            stage_secs[rung] = round(time.perf_counter() - t0, 2)
-        meta["web_curation_stage_ladder_sec"] = stage_secs
-
     # ---- round-7: two-level sharded write rehearsal at the 500k-doc scale:
     # hash sharding (no global-order window — plan-tested) -> ONE
     # partitionBy('shard_id') distributed JSONL write -> per-shard manifest.

@@ -184,9 +184,9 @@ def url_dedup(
 
     Adds ``url_norm``, ``is_dup_url``, ``dup_of_url`` (the keeper's id, own
     type preserved, null for keepers). One hash shuffle on the normalised
-    URL; at 100 TB run it on the (id, url) projection and join the verdict
-    back, exactly like ``exact_dedup(..., narrow_shuffle=True)`` — URLs are
-    short, so the wide-frame window is usually fine too.
+    URL; at 100 TB a hot URL's window partition can be bounded by running
+    it on the (id, url) projection and joining the verdict back by id —
+    URLs are short, so the wide-frame window is usually fine too.
 
     Rows with a null or empty URL get per-row solo group keys (the
     ``exact_dedup`` pattern): "no URL" is absence of evidence, not a shared

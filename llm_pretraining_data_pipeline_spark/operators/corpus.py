@@ -614,7 +614,6 @@ def span_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     w: int = 20,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """ExactSubstr-style cross-document span dedup (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): every
@@ -638,9 +637,7 @@ def span_dedup(
     """
     if w < 2:
         raise ValueError("w must be >= 2")
-    words, joined, dup_ivs, kept = _window_dedup_core(
-        df, text_col, id_col, w, skew_safe=skew_safe
-    )
+    words, joined, dup_ivs, kept = _window_dedup_core(df, text_col, id_col, w)
     return joined.select(
         F.col(id_col),
         F.array_join(F.transform(kept, lambda s: s.t), " ").alias("dedup_text"),
@@ -673,7 +670,6 @@ def _window_dedup_core(
     text_col: str,
     id_col: str,
     w: int,
-    skew_safe: bool = False,
 ):
     """The shared ExactSubstr machinery behind ``span_dedup`` and
     ``exact_substr_dedup`` (single definition — a tie-break or interval
@@ -686,16 +682,14 @@ def _window_dedup_core(
     input columns plus ``_dup_ivs``/``n_dup_windows`` from the (tiny)
     aggregated losing side.
 
-    Skew note (measured, round 7): a corpus-wide hot shingle (one passage
-    in EVERY doc) funnels that hash's rows into one window partition. The
-    skew-immune alternative — ``groupBy(hash).agg(min(struct(id,start)))``
-    + join-back, which AQE skew-splits — was measured at 300k docs sharing
-    one passage (1.2M hot rows): window 1.9 s vs groupBy+join 2.3 s,
-    identical losers. The window stays the default: it wins until a single
-    hash's rows outgrow one task's sort memory (~10^8 rows per shingle),
-    at which point pass ``skew_safe=True`` for the groupBy form — same
-    keep-first semantics, since min(struct(id, start)) IS the (id, start)
-    window order (output identity tested at a 100x-replicated hot key).
+    Skew limit: a corpus-wide hot shingle (one passage in EVERY doc)
+    funnels that hash's rows into one window partition, which AQE cannot
+    split. The skew-splittable alternative,
+    ``groupBy(hash).agg(min(struct(id, start)))`` plus a join back, was
+    measured at 300k docs sharing one passage (1.2M hot rows): the window
+    took 1.9 s and groupBy+join 2.3 s, with identical losers. The window
+    wins until a single hash's rows outgrow one task's sort memory (~10^8
+    rows per shingle), so it is the only form.
     """
     words = ws_tokens(F.coalesce(F.col(text_col), F.lit("")))
 
@@ -703,22 +697,10 @@ def _window_dedup_core(
         F.col(id_col), F.posexplode(_window_hashes(words, w)).alias("_p0", "_gh")
     ).select(id_col, (F.col("_p0") + 1).alias("start"), "_gh")
 
-    if skew_safe:
-        # The documented swap (see Skew note above): min(struct(id, start))
-        # IS the (id, start) window order, the aggregation map-side-combines,
-        # and the join-back on _gh is AQE-skew-splittable — no single task
-        # ever owns a corpus-wide hot shingle's rows.
-        winners = wins.groupBy("_gh").agg(
-            F.min(F.struct(F.col(id_col).alias("i"), F.col("start").alias("s"))).alias("_w")
-        )
-        losing = wins.join(winners, "_gh").filter(
-            (F.col(id_col) != F.col("_w.i")) | (F.col("start") != F.col("_w.s"))
-        )
-    else:
-        keep_w = Window.partitionBy("_gh").orderBy(id_col, "start")
-        losing = wins.withColumn("_rn", F.row_number().over(keep_w)).filter(
-            F.col("_rn") > 1
-        )
+    keep_w = Window.partitionBy("_gh").orderBy(id_col, "start")
+    losing = wins.withColumn("_rn", F.row_number().over(keep_w)).filter(
+        F.col("_rn") > 1
+    )
 
     losers = (
         losing.groupBy(id_col)
@@ -752,7 +734,6 @@ def exact_substr_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_tokens: int = 10,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Arbitrary-length ExactSubstr dedup (Lee et al. 2022 §3,
     ``deduplicate-text-datasets``'s suffix-array semantics at the token
@@ -779,9 +760,7 @@ def exact_substr_dedup(
     k = min_tokens
     if k < 2:
         raise ValueError("min_tokens must be >= 2")
-    words, joined, dup_ivs, kept = _window_dedup_core(
-        df, text_col, id_col, k, skew_safe=skew_safe
-    )
+    words, joined, dup_ivs, kept = _window_dedup_core(df, text_col, id_col, k)
     run_lens = F.transform(dup_ivs, lambda iv: (iv["hi"] - iv["lo"]).cast("long"))
     return joined.select(
         F.col(id_col),
@@ -1075,9 +1054,10 @@ def group_median_gate(
     back to every group row all share a single hash shuffle on the group
     key (``max(when(rn == med_rank, value))`` over the unordered group
     frame picks the median without a self-join, which would rescan and
-    re-sort the corpus twice). For heavy-tailed group sizes the same
-    narrow-projection trick as ``exact_dedup(narrow_shuffle=True)``
-    applies.
+    re-sort the corpus twice). For heavy-tailed group sizes, run the
+    window over a narrow (group, value, id) projection and join the
+    verdict back by id, so a hot group's partition carries no wide
+    columns.
     """
     w = Window.partitionBy(group_col)
     wo = w.orderBy(F.col(value_col), F.col(id_col))

@@ -32,21 +32,23 @@ from llm_pretraining_data_pipeline_spark.functions.text_norm import (
 from llm_pretraining_data_pipeline_spark.operators.skew import spread_small_input
 
 
-def _first_in_group(df: DataFrame, key: str, order_col: str) -> tuple[Column, Column]:
+def _first_in_group(key: str, order_col: str) -> tuple[Column, Column]:
     """(is_duplicate, canonical_id) via one window over the group key.
 
     The shuffle this induces is hash-partitioned on ``key``;
     ``row_number`` + windowed ``first`` share a single Exchange+Sort.
 
-    Skew caveat: AQE splits skewed *join/aggregate* partitions but CANNOT
-    split a single window partition — ``row_number`` needs the whole group
+    Skew limit: AQE splits skewed *join/aggregate* partitions but CANNOT
+    split a window partition — ``row_number`` needs the whole group
     co-located, so a giant duplicate group (e.g. millions of copies of one
     boilerplate page, or the all-empty-docs hash) is one straggler task
     carrying full-width rows. In the pipeline this is mostly pre-empted
     (``respect_drop_reason=True`` gives already-dropped rows solo keys and
-    empty docs are dropped at F1 before dedup); for standalone runs on raw
-    input use ``exact_dedup(..., narrow_shuffle=True)`` so the straggler
-    carries three narrow columns instead of the document text.
+    empty docs are dropped at F1 before dedup). The skew-splittable form,
+    ``groupBy(key).agg(min(struct(order, id)))`` plus a join back, was
+    measured at 300k docs on one hot key: the window took 1.9 s and
+    groupBy+join 2.3 s. The window wins until a single group outgrows one
+    task's sort memory, so it is the only form.
     """
     w = Window.partitionBy(key).orderBy(F.col(order_col))
     rn = F.row_number().over(w)
@@ -62,53 +64,29 @@ def exact_dedup(
     order_col: str | None = None,
     id_col: str = "doc_id",
     respect_drop_reason: bool = False,
-    narrow_shuffle: bool = False,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Mark exact duplicates after canonicalisation, keeping the first.
 
     Adds: dedup_id, exact_canon_text, exact_hash, is_dup_exact, dup_of and
-    carries drop_reason='exact_duplicate' for marked rows.
+    carries drop_reason='exact_duplicate' for marked rows. Keep-first is one
+    window over the hash (see ``_first_in_group`` for its skew limit).
 
     ``respect_drop_reason=True`` reproduces the reference *pipeline* boundary:
     dedup there runs on the kept-rows parquet only (run_pipeline.py stage
     chain), so already-dropped rows must neither claim canonical slots nor be
     marked. They get per-row solo group keys, keeping them in the frame for
     the drop-reason histogram while excluded from grouping.
-
-    ``narrow_shuffle=True`` hardens against giant duplicate groups: the
-    keep-first window runs over a (group_key, order, dedup_id) projection
-    only, and the duplicate marks join back by ``dedup_id``. The window
-    partition for a hot key (100M copies of one boilerplate page) then
-    carries three narrow columns instead of full document text, and the
-    join-back redistributes on near-unique ``dedup_id`` — no straggler.
-    AQE cannot split a window partition, so this is the only way to bound
-    the straggler's bytes (see ``_first_in_group``). Costs one extra
-    shuffle of the wide frame, so it's off by default; results are
-    identical either way (tested).
-
-    ``skew_safe=True`` goes one step further (implies the narrow
-    projection): the keep-first is computed as
-    ``groupBy(key).agg(min(struct(order, id)))`` + a join-back instead of
-    a window. A window partition is indivisible — one giant duplicate
-    group (10^8 copies of a boilerplate page) is one straggler task no
-    matter what — whereas the min-struct aggregation combines map-side
-    and the join-back is AQE-skew-splittable, so the hot key costs
-    O(rows/parallelism), not one task. Measured at 300k docs on one hot
-    key: window 1.9 s vs groupBy+join 2.3 s — the window wins until a
-    single group outgrows task sort memory, so this stays opt-in.
-    Tie-break: equal ``order_col`` values resolve by ``dedup_id`` (the
-    window form's tie order is partition-nondeterministic; with the
-    unique ``order_col`` the contract assumes, results are identical —
-    tested at a 100x-replicated hot key).
     """
     order_col = order_col or ("row_order" if "row_order" in df.columns else id_col)
-    out = df.withColumn("dedup_id", F.col(id_col).cast("string"))
-    out = out.withColumn("exact_canon_text", canonicalize_for_exact(text_col))
+    has_reason = "drop_reason" in df.columns
+    out = df.withColumns({
+        "dedup_id": F.col(id_col).cast("string"),
+        "exact_canon_text": canonicalize_for_exact(text_col),
+    })
     out = out.withColumn("exact_hash", hashing.sha256_hex("exact_canon_text"))
 
     group_col = "exact_hash"
-    if respect_drop_reason and "drop_reason" in df.columns:
+    if respect_drop_reason and has_reason:
         out = out.withColumn(
             "_exact_group",
             F.when(F.col("drop_reason").isNull(), F.col("exact_hash")).otherwise(
@@ -116,61 +94,23 @@ def exact_dedup(
             ),
         )
         group_col = "_exact_group"
-    if narrow_shuffle or skew_safe:
-        # Keep-first over the narrow projection; only duplicate rows produce
-        # a mark, so the join-back side is |duplicates|, not |corpus| (AQE
-        # may even broadcast it at moderate dup rates).
-        narrow = out.select(*dict.fromkeys([group_col, order_col, "dedup_id"]))
-        if skew_safe:
-            # min(struct(order, id)) IS the keep-first winner (same order
-            # the window sorts by, ties broken by id); the aggregation
-            # combines map-side and the join-back is AQE-skew-splittable,
-            # so no single task ever owns a giant duplicate group.
-            winners = narrow.groupBy(group_col).agg(
-                F.min(
-                    F.struct(
-                        F.col(order_col).alias("o"), F.col("dedup_id").alias("i")
-                    )
-                ).alias("_w")
-            )
-            marks = (
-                narrow.join(winners, group_col)
-                .filter(F.col("dedup_id") != F.col("_w.i"))
-                .select(
-                    F.col("dedup_id").alias("_ns_id"),
-                    F.col("_w.i").alias("_ns_canon"),
-                )
-            )
-        else:
-            w = Window.partitionBy(group_col).orderBy(F.col(order_col))
-            marks = (
-                narrow.withColumn("_rn", F.row_number().over(w))
-                .withColumn(
-                    "_canon",
-                    F.first("dedup_id").over(
-                        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                    ),
-                )
-                .filter(F.col("_rn") > 1)
-                .select(F.col("dedup_id").alias("_ns_id"), F.col("_canon").alias("_ns_canon"))
-            )
-        out = out.join(marks, out["dedup_id"] == marks["_ns_id"], "left").drop("_ns_id")
-        out = out.withColumn("is_dup_exact", F.col("_ns_canon").isNotNull())
-        out = out.withColumn("dup_of", F.col("_ns_canon")).drop("_ns_canon")
-    else:
-        is_dup, canonical = _first_in_group(out, group_col, order_col)
-        out = out.withColumn("is_dup_exact", is_dup)
-        out = out.withColumn(
-            "dup_of",
-            F.when(F.col("is_dup_exact"), canonical).otherwise(F.lit(None).cast("string")),
-        )
+    # Each window-bearing column is its own step. Folding is_dup_exact and
+    # dup_of repeats row_number in the Window node; folding dup_of and
+    # drop_reason leaves a Project between the two windows, which then
+    # plan as two Window nodes instead of one.
+    is_dup, canonical = _first_in_group(group_col, order_col)
+    out = out.withColumn("is_dup_exact", is_dup)
+    out = out.withColumn(
+        "dup_of",
+        F.when(F.col("is_dup_exact"), canonical).otherwise(F.lit(None).cast("string")),
+    )
     reason = F.when(
         F.col("is_dup_exact") & F.col("drop_reason").isNull()
-        if "drop_reason" in df.columns
+        if has_reason
         else F.col("is_dup_exact"),
         F.lit("exact_duplicate"),
     )
-    if "drop_reason" in df.columns:
+    if has_reason:
         out = out.withColumn("drop_reason", F.coalesce(F.col("drop_reason"), reason))
     else:
         out = out.withColumn("drop_reason", reason.otherwise(F.lit(None).cast("string")))
@@ -184,21 +124,13 @@ def near_dedup_prefix(
     min_len: int = 200,
     key_chars: int = 500,
     respect_drop_reason: bool = False,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Prefix-key near dedup over docs with canonical length >= min_len.
 
     Exact duplicates are excluded from near-marking (duplication.py:170);
     dup_of is only filled where exact dedup left it null (:176-177).
-    Expects ``exact_dedup`` columns to be present.
-
-    ``skew_safe=True`` swaps the keep-first window for the
-    ``groupBy(min(struct(order, id)))`` + join form (see ``exact_dedup``):
-    a corpus where one 500-char prefix dominates (hot boilerplate) would
-    otherwise funnel that whole group through a single indivisible window
-    partition; the aggregate form map-side-combines and the join-back is
-    AQE-skew-splittable. Tie-break on equal ``order_col`` is by
-    ``dedup_id`` (identical to the window under the unique-order contract).
+    Expects ``exact_dedup`` columns to be present. Keep-first is one window
+    over the prefix key (``_first_in_group``).
     """
     order_col = order_col or ("row_order" if "row_order" in df.columns else "dedup_id")
     out = df.withColumn("near_key", canonicalize_for_near(text_col, key_chars))
@@ -212,39 +144,16 @@ def near_dedup_prefix(
             F.col("drop_reason").isNull() | (F.col("drop_reason") == "exact_duplicate")
         )
     # Ineligible rows get a per-row unique key so the window never groups them.
-    group_key = F.when(eligible, F.col("near_key")).otherwise(
-        F.concat(F.lit("\x00solo\x00"), F.col("dedup_id"))
+    out = out.withColumn(
+        "_near_group",
+        F.when(eligible, F.col("near_key")).otherwise(
+            F.concat(F.lit("\x00solo\x00"), F.col("dedup_id"))
+        ),
     )
-    out = out.withColumn("_near_group", group_key)
-    if skew_safe:
-        narrow = out.select("_near_group", order_col, "dedup_id")
-        winners = narrow.groupBy("_near_group").agg(
-            F.min(
-                F.struct(F.col(order_col).alias("o"), F.col("dedup_id").alias("i"))
-            ).alias("_w")
-        )
-        marks = (
-            narrow.join(winners, "_near_group")
-            .filter(F.col("dedup_id") != F.col("_w.i"))
-            .select(
-                F.col("dedup_id").alias("_nn_id"),
-                F.col("_w.i").alias("_nn_canon"),
-            )
-        )
-        out = out.join(marks, out["dedup_id"] == marks["_nn_id"], "left").drop(
-            "_nn_id"
-        )
-        is_near = (
-            eligible & F.col("_nn_canon").isNotNull() & ~F.col("is_dup_exact")
-        )
-        canonical = F.col("_nn_canon")
-    else:
-        w = Window.partitionBy("_near_group").orderBy(F.col(order_col))
-        rn = F.row_number().over(w)
-        canonical = F.first(F.col("dedup_id")).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        is_near = eligible & (rn > 1) & ~F.col("is_dup_exact")
+    # One step per column, as in exact_dedup: a folded step numbers its
+    # window aliases afresh and reorders the Project below the window.
+    is_dup, canonical = _first_in_group("_near_group", order_col)
+    is_near = eligible & is_dup & ~F.col("is_dup_exact")
     out = out.withColumn("is_dup_near", is_near)
     out = out.withColumn(
         "dup_of", F.coalesce(F.col("dup_of"), F.when(is_near, canonical))
@@ -253,7 +162,7 @@ def near_dedup_prefix(
         "drop_reason",
         F.coalesce(F.col("drop_reason"), F.when(is_near, F.lit("near_duplicate"))),
     )
-    return out.drop("_near_group", "_nn_canon")
+    return out.drop("_near_group")
 
 
 def dedup_stage(
@@ -264,19 +173,15 @@ def dedup_stage(
     near_dup_min_len: int = 200,
     near_key_chars: int = 500,
     respect_drop_reason: bool = False,
-    skew_safe: bool = False,
 ) -> DataFrame:
-    """Reference dedup stage: exact then prefix-near (duplication.py:68-197).
-
-    ``skew_safe`` flows to both sub-stages (see ``exact_dedup``)."""
+    """Reference dedup stage: exact then prefix-near (duplication.py:68-197)."""
     out = exact_dedup(
         df, text_col=text_col, order_col=order_col, id_col=id_col,
-        respect_drop_reason=respect_drop_reason, skew_safe=skew_safe,
+        respect_drop_reason=respect_drop_reason,
     )
     return near_dedup_prefix(
         out, text_col=text_col, order_col=order_col, min_len=near_dup_min_len,
         key_chars=near_key_chars, respect_drop_reason=respect_drop_reason,
-        skew_safe=skew_safe,
     )
 
 

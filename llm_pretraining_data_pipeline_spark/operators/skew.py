@@ -17,8 +17,14 @@ And the opposite case, too few partitions rather than an uneven spread:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import re
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# An exchange node's line (Exchange, BroadcastExchange, ReusedExchange) in
+# a physical plan's tree string.
+_EXCHANGE = re.compile(r"^[\s:+\-]*\w*Exchange\b", re.MULTILINE)
 
 
 def salted_join(
@@ -69,13 +75,21 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     ``row_order``) and ``operators.dedup``'s per-doc signature paths
     (MinHash, shingle sets, SimHash, embeddings). At 100 TB the scan
     already has far more splits than cores and this is a no-op, so the
-    scale path stays shuffle-free and there is no knob. Plan inspection
-    only: no job is run.
+    scale path stays shuffle-free and there is no knob.
+
+    Plan inspection only: no job is run. A plan that already holds an
+    exchange comes back unchanged, since reading its partition count would
+    run a job at plan-build time: the map stage of a shuffle (whose
+    partitions the shuffle sets anyway) or the build of a broadcast.
+    Otherwise the count is read off the same physical plan's RDD.
     """
     try:
+        plan = df._jdf.queryExecution().executedPlan()
+        if _EXCHANGE.search(plan.toString()):
+            return df
+        nparts = plan.execute().getNumPartitions()
         target = df.sparkSession.sparkContext.defaultParallelism
-        nparts = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - non-standard sessions
+    except Exception:  # a streaming frame has no executed plan
         return df
     if 0 < nparts < target:
         return df.repartition(target)

@@ -285,25 +285,3 @@ def curation_summary(out: DataFrame) -> DataFrame:
         )
         .orderBy(F.desc("n_docs"), "outcome")
     )
-
-
-# Cumulative config ladder for per-stage cost attribution of the bench
-# recipe (VERDICT r12 item 3). ONE definition shared by bench.py
-# (BENCH_WC_STAGES=1) and scripts/profile_web_curation.py so the rungs
-# cannot drift (review finding r13). Each entry: (rung name,
-# WebCurationConfig kwargs, with_robots). The final rung — extract_main
-# + smooth with decode_entities at its auto default (-> ON) — is the
-# exact bench configuration.
-BENCH_STAGE_LADDER = (
-    ("base", {"gopher_min_words": 10, "gopher_min_stopwords": 1,
-              "decode_entities": False}, False),
-    ("robots", {"gopher_min_words": 10, "gopher_min_stopwords": 1,
-                "decode_entities": False}, True),
-    ("extract", {"gopher_min_words": 10, "gopher_min_stopwords": 1,
-                 "extract_main": True, "decode_entities": False}, True),
-    ("smooth", {"gopher_min_words": 10, "gopher_min_stopwords": 1,
-                "extract_main": True, "mc_smooth": True,
-                "decode_entities": False}, True),
-    ("entities", {"gopher_min_words": 10, "gopher_min_stopwords": 1,
-                  "extract_main": True, "mc_smooth": True}, True),
-)

@@ -44,78 +44,33 @@ class TestExactDedup:
         assert rows["b"].drop_reason == "already_dropped"  # first-writer-wins
         assert rows["b"].is_dup_exact  # flag still set, like the reference
 
-    def test_narrow_shuffle_identical_results(self, spark):
-        """The giant-group-hardened variant is result-identical to the
-        default window path, including a hot key (many copies of one text),
-        solo-key drop_reason handling, and lineage."""
+    def test_hot_key_solo_keys_and_lineage(self, spark):
+        """A hot key (60 copies of one text) keeps its first row and marks
+        every later copy a duplicate of it; ``respect_drop_reason`` gives an
+        already-dropped copy a solo key, so it is neither canonical nor
+        marked."""
         rows = [(f"d{i:03d}", i, "the same boilerplate page") for i in range(60)]
         rows += [("u1", 100, "unique one"), ("u2", 101, "unique two"), ("n0", 102, None)]
         df = _docs(spark, rows).withColumn(
             "drop_reason", F.when(F.col("doc_id") == "d005", F.lit("already_dropped"))
         )
         for respect in (False, True):
-            wide = dedup.exact_dedup(
+            out = dedup.exact_dedup(
                 df, text_col="text", order_col="row_order", respect_drop_reason=respect
             )
-            narrow = dedup.exact_dedup(
-                df, text_col="text", order_col="row_order", respect_drop_reason=respect,
-                narrow_shuffle=True,
+            got = {
+                r.doc_id: (r.is_dup_exact, r.dup_of, r.drop_reason)
+                for r in out.collect()
+            }
+            want = {k: (False, None, None) for k in ("d000", "u1", "u2", "n0")}
+            want.update(
+                {f"d{i:03d}": (True, "d000", "exact_duplicate") for i in range(1, 60)}
             )
-            cols = wide.columns
-            assert narrow.columns == cols or sorted(narrow.columns) == sorted(cols)
-            a = {r.doc_id: r for r in wide.collect()}
-            b = {r.doc_id: r for r in narrow.select(*cols).collect()}
-            assert a.keys() == b.keys()
-            for k in a:
-                assert (
-                    a[k].is_dup_exact, a[k].dup_of, a[k].drop_reason
-                ) == (b[k].is_dup_exact, b[k].dup_of, b[k].drop_reason), k
-
-    @staticmethod
-    def _window_exchange_outputs(plan: str) -> list[str]:
-        """Top-level output attributes of the Project feeding the window's
-        Exchange on exact_hash (text may appear INSIDE expressions — it is
-        consumed pre-shuffle — but must not be a shuffled output column)."""
-        lines = plan.splitlines()
-        idx = next(
-            i for i, line in enumerate(lines)
-            if "Exchange hashpartitioning(exact_hash" in line
-        )
-        proj_line = next(
-            line for line in lines[idx + 1:] if "Project [" in line
-        )
-        body = proj_line.split("Project [", 1)[1].rsplit("]", 1)[0]
-        items, depth, cur = [], 0, ""
-        for ch in body:
-            if ch == "," and depth == 0:
-                items.append(cur.strip())
-                cur = ""
-                continue
-            depth += ch in "(["
-            depth -= ch in ")]"
-            cur += ch
-        items.append(cur.strip())
-        # an item's OUTPUT name is what follows the final " AS ", else itself
-        return [it.rsplit(" AS ", 1)[-1] for it in items]
-
-    def test_narrow_shuffle_window_excludes_text(self, spark):
-        """The hot-group window partition must carry only (key, order, id) —
-        never document text. AQE cannot split a window partition, so the
-        straggler's bytes are bounded only if the shuffled rows are narrow."""
-        df = _docs(spark, [("a", 0, "x"), ("b", 1, "x")])
-        narrow = dedup.exact_dedup(
-            df, text_col="text", order_col="row_order", narrow_shuffle=True
-        )
-        plan = narrow._jdf.queryExecution().executedPlan().toString()
-        outs = self._window_exchange_outputs(plan)
-        assert len(outs) == 3, outs
-        assert not any(o.startswith("text#") for o in outs), outs
-        # sanity: the default path DOES carry text through the window shuffle,
-        # so the assertion above is meaningful
-        wide = dedup.exact_dedup(df, text_col="text", order_col="row_order")
-        wide_plan = wide._jdf.queryExecution().executedPlan().toString()
-        wide_outs = self._window_exchange_outputs(wide_plan)
-        assert any(o.startswith("text#") for o in wide_outs), wide_outs
+            want["d005"] = (
+                (False, None, "already_dropped") if respect
+                else (True, "d000", "already_dropped")
+            )
+            assert got == want, respect
 
 
 class TestNearDedup:

@@ -118,7 +118,7 @@ def result(spark):
 
 def test_run_pipeline_plan_round_trips(spark, monkeypatch):
     """Building the pipeline's plan (no job) takes at most 2,500 py4j
-    round trips (~2,200 measured) and creates at most 80 DataFrames (66
+    round trips (~2,200 measured) and creates at most 70 DataFrames (64
     measured). With PySpark's call-site capture on, every Column call
     pays about 5 more round trips and the same plan takes ~5,000. Each
     DataFrame is one analysis of the growing plan: a stage adds its
@@ -159,7 +159,7 @@ def test_run_pipeline_plan_round_trips(spark, monkeypatch):
     P.run_pipeline(raw, P.PipelineConfig())
     monkeypatch.undo()
     assert len(calls) <= 2500, len(calls)
-    assert len(frames) <= 80, len(frames)
+    assert len(frames) <= 70, len(frames)
 
 
 def test_ingest_spreads_one_split_input(spark, tmp_path, monkeypatch):

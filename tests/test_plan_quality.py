@@ -885,7 +885,8 @@ def _plan_audit_module():
 
 class TestPlanAuditCheck:
     """``plan_audit.py --check`` reads node counts back from the rendered
-    file and names each query whose counts drifted. No plans are built."""
+    file and names each query whose counts drifted. Only the last test
+    builds plans."""
 
     def test_committed_audit_parses_every_query(self):
         committed = _plan_audit_module().parse((ROOT / "PLAN_AUDIT.md").read_text())
@@ -900,3 +901,12 @@ class TestPlanAuditCheck:
         changed = [(name, dict(c, ArrowEval=2 if name == "q_b" else 1)) for name, c in rows]
         lines = audit.drift(committed, changed[:2] + [("q_d", rows[0][1])], [("q_e", "boom")])
         assert [line.split(":")[0] for line in lines] == ["q_b", "q_c", "q_d", "q_e"]
+
+    def test_registered_plans_match_committed_audit(self, spark):
+        """Every registered plan, built in this session, has the node
+        counts ``PLAN_AUDIT.md`` lists: plan drift fails here, not only
+        under ``plan_audit.py --check`` (~2 min on 4 vCPUs)."""
+        audit = _plan_audit_module()
+        committed = audit.parse((ROOT / "PLAN_AUDIT.md").read_text())
+        rows, errors, _ = audit.audit()
+        assert audit.drift(committed, rows, errors) == []

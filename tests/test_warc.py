@@ -1425,13 +1425,13 @@ class TestSitemapRecrawl:
         "sm_ok boolean"
     )
 
-    def _run(self, spark, entries, index_rows, **kw):
+    def _run(self, spark, entries, index_rows):
         from llm_pretraining_data_pipeline_spark.sources import cdx
         e = spark.createDataFrame(entries, self.ENTRY_SCHEMA)
         idx = spark.createDataFrame(index_rows, "surt string, ts string")
         return {
             r["surt"]: r
-            for r in cdx.sitemap_recrawl(e, idx, **kw).collect()
+            for r in cdx.sitemap_recrawl(e, idx).collect()
         }
 
     def test_verdicts_and_ignored_rows(self, spark):
@@ -1464,11 +1464,6 @@ class TestSitemapRecrawl:
         assert out["example,a)/p0"]["last_capture_ts"] == "20240103000000"
         assert out["example,a)/pnew"]["reason"] == "new"
         assert out["example,a)/pnew"]["last_capture_ts"] is None
-        # broadcast escape hatch returns identical verdicts
-        b = self._run(spark, entries, index, broadcast_index_side=True)
-        assert {k: v["reason"] for k, v in b.items()} == {
-            k: v["reason"] for k, v in out.items()
-        }
 
     def test_multi_generation_index_uses_newest(self, spark):
         entries = [
@@ -2230,18 +2225,6 @@ class TestCdxIncremental:
         rows = out.collect()
         # d1 seen before -> dropped; null digest -> excluded by contract
         assert [(r["digest"], r["surt"]) for r in rows] == [("d3", "c")]
-
-    def test_broadcast_path(self, spark):
-        from llm_pretraining_data_pipeline_spark.sources import cdx
-
-        prev = spark.createDataFrame([("d1",)], "digest string")
-        cur = spark.createDataFrame(
-            [("d1",), ("d2",)], "digest string"
-        )
-        out = cdx.cdx_incremental(cur, prev, broadcast_prev=True)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        assert [r["digest"] for r in out.collect()] == ["d2"]
 
 
 class TestRevisitIndexMode:
