@@ -44,7 +44,7 @@ class TestExactDedup:
         assert rows["b"].drop_reason == "already_dropped"  # first-writer-wins
         assert rows["b"].is_dup_exact  # flag still set, like the reference
 
-    def test_hot_key_solo_keys_and_lineage(self, spark):
+    def test_narrow_shuffle_identical_results(self, spark):
         """A hot key (60 copies of one text) keeps its first row and marks
         every later copy a duplicate of it; ``respect_drop_reason`` gives an
         already-dropped copy a solo key, so it is neither canonical nor

@@ -288,7 +288,7 @@ class TestDedupResilienceAtScale:
         assert kept <= 50
 
 
-class TestHotKeyKeepFirst:
+class TestSkewSafeKeepFirst:
     """Keep-first at a 100x-replicated hot key, the regime where one
     window partition holds the whole group (AQE cannot split it): the
     group still dedups to one canonical row, and a passage planted in
@@ -315,7 +315,7 @@ class TestHotKeyKeepFirst:
         )
         return hot.unionByName(cold)
 
-    def test_exact_and_near_dedup_under_hot_key(self, spark):
+    def test_exact_and_near_dedup_identical_under_hot_key(self, spark):
         df = self._hot_key_frame(spark)
         out = dedup.dedup_stage(df, text_col="text", id_col="doc_id")
         cols = ["doc_id", "is_dup_exact", "is_dup_near", "dup_of", "drop_reason"]
@@ -331,7 +331,7 @@ class TestHotKeyKeepFirst:
         # the cold docs share a 500-char prefix only with themselves
         assert not any(r.is_dup_exact or r.is_dup_near for k, r in rows.items() if k.startswith("c"))
 
-    def test_exact_substr_under_hot_shingle(self, spark):
+    def test_exact_substr_identical_under_hot_shingle(self, spark):
         """One passage planted in EVERY doc (the corpus-wide hot shingle
         from the round-7 measurement) survives in exactly one doc."""
         from llm_pretraining_data_pipeline_spark.operators import corpus
